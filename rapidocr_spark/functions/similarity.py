@@ -59,6 +59,36 @@ def _norm(a):
     )
 
 
+def _cos6(a: str, b: str, na: str, nb: str) -> "F.Column":
+    """Cosine of array columns a, b rounded to 6 digits, with the norms
+    na, nb factored to per-row columns (folded once per vector, not per
+    pair) — the same doubles multiplied in the same order as the inline
+    form."""
+    return F.round(_dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)), 6)
+
+
+def _query_set(df: DataFrame, qn, *extra, qid: str = "query_id") -> DataFrame:
+    """The bounded query set (vec_id % QUERY_MOD == 0, at most MAX_QUERIES
+    rows) as (qid, qe, _qn, *extra), ``qn`` the query-norm column."""
+    return df.where(
+        (F.col("vec_id") % QUERY_MOD == 0)
+        & (F.col("vec_id") < QUERY_MOD * MAX_QUERIES)
+    ).select(
+        F.col("vec_id").alias(qid), F.col("embedding").alias("qe"), qn.alias("_qn"), *extra
+    )
+
+
+def _top_k(pairs: DataFrame, k: int) -> DataFrame:
+    """Per query, the k best (query_id, cand_id, cosine) rows by cosine
+    DESC with a cand_id tie-break, ranked 1..k."""
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
+    return (
+        pairs.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "cand_id", "cosine", F.col("rank").cast("int").alias("rank"))
+    )
+
+
 def embed_label_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label embedding norm statistics (count / sum / min / max of the
     L2 norm) — the corpus-profile query of the similarity family."""
@@ -80,36 +110,38 @@ def knn_brute_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     query set is bounded by MAX_QUERIES (not a modulus of N), so the
     broadcast stays O(1) as the corpus grows; the scan side is one pass."""
     e = _emb(spark, sf_dir).withColumn("_en", _norm(F.col("embedding")))
-    q = e.where(
-        (F.col("vec_id") % QUERY_MOD == 0)
-        & (F.col("vec_id") < QUERY_MOD * MAX_QUERIES)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("_en").alias("_qn"),
-    )
+    q = _query_set(e, F.col("_en"))
     pairs = e.join(F.broadcast(q), F.col("vec_id") != F.col("query_id"))
-    # norms factored to per-row columns (folded once per vector, not per
-    # pair) — same doubles multiplied in the same order as the inline form
-    cos = F.round(
-        _dot(F.col("qe"), F.col("embedding")) / (F.col("_qn") * F.col("_en")),
-        6,
-    )
     scored = pairs.select(
-        "query_id", F.col("vec_id").alias("cand_id"), cos.alias("cosine")
+        "query_id",
+        F.col("vec_id").alias("cand_id"),
+        _cos6("qe", "embedding", "_qn", "_en").alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= TOP_K)
-        .select("query_id", "cand_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _top_k(scored, TOP_K)
 
 
-def _plane_weight(k, i):
+def _plane_weight(k, i, table=0):
     """Integer hyperplane weights derived arithmetically — identical
-    literal formula in the DuckDB oracle: ((i*73 + k*37) % 19) - 9."""
-    return ((i * 73 + k * 37) % 19) - 9
+    literal formula in the DuckDB oracle: ((i*73 + k*37 + table*101) % 19)
+    - 9, where ``table`` picks one of dedup_embedding_cosine's
+    independent LSH tables (ann_lsh_buckets is table 0)."""
+    return ((i * 73 + k * 37 + table * 101) % 19) - 9
+
+
+def _plane_proj(k, table=0) -> "F.Column":
+    """dot(embedding, plane k of ``table``).  HOF fold kept on purpose —
+    see _dot: unrolled chains lose under whole-stage codegen (JIT
+    method-size bailout; measured 4× slower at sf1.0 for the 20-plane
+    variant)."""
+    return F.aggregate(
+        F.zip_with(
+            F.col("embedding"),
+            F.array(*[F.lit(float(_plane_weight(k, i, table))) for i in range(DIM)]),
+            lambda x, wgt: x.cast("double") * wgt,
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
 
 
 def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -117,19 +149,7 @@ def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
     bucket = F.lit(0)
     for k in range(LSH_PLANES):
-        # HOF fold kept on purpose — see _dot: unrolled chains lose
-        # under whole-stage codegen (JIT method-size bailout; measured
-        # 4× slower at sf1.0 for the 20-plane variant)
-        proj = F.aggregate(
-            F.zip_with(
-                F.col("embedding"),
-                F.array(*[F.lit(float(_plane_weight(k, i))) for i in range(DIM)]),
-                lambda x, wgt: x.cast("double") * wgt,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        bucket = bucket + F.when(proj > 0.0, F.lit(1 << k)).otherwise(F.lit(0))
+        bucket = bucket + F.when(_plane_proj(k) > 0.0, F.lit(1 << k)).otherwise(F.lit(0))
     out = e.select("vec_id", "label", bucket.cast("int").alias("bucket"))
     return out
 
@@ -184,15 +204,7 @@ def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     Centroids are broadcast; one pass over the embeddings — the
     inverted-file ANN scale path (probe a cell, not the corpus)."""
     e = _emb(spark, sf_dir)
-    en = e.withColumn("_en", _norm(F.col("embedding")))
-    cn = _centroids(e).withColumn("_cn", _norm(F.col("ce")))
-    cos = F.round(
-        _dot(F.col("ce"), F.col("embedding")) / (F.col("_cn") * F.col("_en")),
-        6,
-    )
-    scored = en.crossJoin(F.broadcast(cn)).select(
-        "vec_id", "cent_id", cos.alias("cos_c")
-    )
+    scored = _cand_scored_catalyst(e, _centroids(e))
     w = Window.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cent_id"))
     return (
         scored.withColumn("rk", F.row_number().over(w))
@@ -208,33 +220,54 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the candidate side of the self-join (one materialisation, not two
     recomputes of the centroid assignment)."""
     e = _emb(spark, sf_dir)
-    cells = ann_ivf_cells(spark, sf_dir).select("vec_id", "cell")
-    v = track_persist(
+    v = _celled(e, ann_ivf_cells(spark, sf_dir).select("vec_id", "cell"))
+    q = _query_set(v, F.col("_en"), F.col("cell").alias("qcell"))
+    return _top_k(_cell_pairs(v, q), 3)
+
+
+def _celled(e: DataFrame, cells: DataFrame) -> DataFrame:
+    """The cell-assigned corpus carrying its norm, persisted: it feeds
+    both the query set and the candidate side of an IVF search, and
+    every candidate scoring folds the norm once per vector, not once per
+    (query, candidate) pair."""
+    return track_persist(
         e.join(cells, "vec_id").withColumn("_en", _norm(F.col("embedding")))
     )
-    q = v.where(
-        (F.col("vec_id") % QUERY_MOD == 0)
-        & (F.col("vec_id") < QUERY_MOD * MAX_QUERIES)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("_en").alias("_qn"),
-        F.col("cell").alias("qcell"),
-    )
+
+
+def _cell_pairs(v: DataFrame, qcells: DataFrame) -> DataFrame:
+    """(query_id, cand_id, cosine) for every member of a (query, qcell)
+    row's cell — the candidate join against the broadcast query side."""
     cand = v.select(F.col("vec_id").alias("cand_id"), "embedding", "_en", "cell")
-    cos = F.round(
-        _dot(F.col("qe"), F.col("embedding")) / (F.col("_qn") * F.col("_en")),
-        6,
-    )
-    pairs = cand.join(
-        F.broadcast(q), (F.col("cell") == F.col("qcell")) & (F.col("cand_id") != F.col("query_id"))
-    ).select("query_id", "cand_id", cos.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
+    return cand.join(
+        F.broadcast(qcells),
+        (F.col("cell") == F.col("qcell")) & (F.col("cand_id") != F.col("query_id")),
+    ).select("query_id", "cand_id", _cos6("qe", "embedding", "_qn", "_en").alias("cosine"))
+
+
+def _probe_cells(q: DataFrame, cents: DataFrame, nprobe: int, keep=("qe", "_qn")) -> DataFrame:
+    """(query_id, *keep, qcell): each query's nprobe nearest centroids by
+    rounded cosine (cent_id tie-break) — the coarse-probe stage shared by
+    every multi-probe IVF search, plain and IVF-PQ, so they can never
+    de-synchronize on probe semantics."""
+    cn = cents.select("cent_id", "ce", _norm(F.col("ce")).alias("_cn"))
+    wq = Window.partitionBy("query_id").orderBy(F.col("cos_c").desc(), F.col("cent_id"))
     return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("query_id", "cand_id", "cosine", F.col("rank").cast("int").alias("rank"))
+        q.crossJoin(F.broadcast(cn))
+        .select("query_id", *keep, "cent_id", _cos6("ce", "qe", "_cn", "_qn").alias("cos_c"))
+        .withColumn("rk", F.row_number().over(wq))
+        .where(F.col("rk") <= nprobe)
+        .select("query_id", *keep, F.col("cent_id").alias("qcell"))
     )
+
+
+def _ivf_search(e: DataFrame, cells: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """Top-3 per query over the members of its nprobe nearest cells
+    (candidates stay in their single home cell; a pair reached through
+    two probed cells counts once)."""
+    v = _celled(e, cells)
+    qcells = _probe_cells(_query_set(v, F.col("_en")), cents, nprobe)
+    return _top_k(_cell_pairs(v, qcells).distinct(), 3)
 
 
 LLOYD_ITERS = 2     # fixed Lloyd refinement rounds (fixed count keeps the
@@ -336,7 +369,10 @@ ASSIGN_KERNEL_MIN_K = 100  # kernel-vs-Catalyst crossover: the numpy path
 # so K ≥ 100 ⇔ N ≥ ~10⁴ vectors.  A/B at sf1.0 (K=142/284): kernel
 # 19–36 s vs 26–46 s interleaved over the 3 heavy ANN queries; at
 # sf0.01 (K=32) the same kernel is ~1 s/query SLOWER — hence the
-# data-adaptive switch, with BOTH paths pinned bit-identical.
+# data-adaptive switch, with BOTH paths pinned bit-identical.  No tier up
+# to sf0.1 reaches the crossover: sf0.1 has 2,000 vectors, so K = 45 (90
+# for the semantic pass at SEM_K_MULT = 2); there only the forced-kernel
+# mirror tests (tests/test_assign_numpy_mirror.py) run _cos_cand_kernel.
 
 
 def _cand_scored_catalyst(e: DataFrame, cents: DataFrame) -> DataFrame:
@@ -347,12 +383,8 @@ def _cand_scored_catalyst(e: DataFrame, cents: DataFrame) -> DataFrame:
     the inline form."""
     en = e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("_en"))
     cn = cents.select("cent_id", "ce", _norm(F.col("ce")).alias("_cn"))
-    cos = F.round(
-        _dot(F.col("ce"), F.col("embedding")) / (F.col("_cn") * F.col("_en")),
-        6,
-    )
     return en.crossJoin(F.broadcast(cn)).select(
-        "vec_id", "cent_id", cos.alias("cos_c")
+        "vec_id", "cent_id", _cos6("ce", "embedding", "_cn", "_en").alias("cos_c")
     )
 
 
@@ -368,6 +400,13 @@ def _cand_scored(e: DataFrame, cents: DataFrame, keep_top: int | None) -> DataFr
     ever needed; both paths pinned bit-for-bit against each other by
     tests/test_assign_numpy_mirror.py."""
     rows = cents.select("cent_id", "ce").collect()
+    if len(rows) > SEM_K_MULT * K_MAX_CENTROIDS:
+        # a raise, not an assert: the bound must hold under python -O too
+        raise ValueError(
+            f"centroid frame has {len(rows)} rows, above the model-class "
+            f"collect bound SEM_K_MULT * K_MAX_CENTROIDS = "
+            f"{SEM_K_MULT * K_MAX_CENTROIDS}"
+        )
     if len(rows) < ASSIGN_KERNEL_MIN_K:
         return _cand_scored_catalyst(e, cents)
     kern = _cos_cand_kernel(
@@ -390,11 +429,7 @@ def _refine_once(e: DataFrame, cents: DataFrame) -> DataFrame:
     to the per-vector argmax candidates — followed by the SAME map-side
     max(struct) aggregation; the mean is 64 exact bigint sums over ≤ K
     groups (K = _adaptive_k ≤ K_MAX_CENTROIDS), unchanged."""
-    scored = _cand_scored(e, cents, 1)
-    # max over (cos_c, -cent_id) == order by cos desc, cent_id asc
-    asg = scored.groupBy("vec_id").agg(
-        F.max(F.struct(F.col("cos_c"), (-F.col("cent_id")).alias("_nc"))).alias("m")
-    ).select("vec_id", (-F.col("m._nc")).alias("cell"))
+    asg = _assign_cells(e, cents).select("vec_id", "cell")
     # per-dimension sums via posexplode instead of 64 wide agg columns:
     # SAME bigint sums → bit-identical centroids (verified against the
     # wide form; the DuckDB oracle is untouched), but the generated code
@@ -449,8 +484,9 @@ def _centroids_lloyd(e: DataFrame, k_mult: int = 1) -> DataFrame:
 
 
 def _assign_cells(e: DataFrame, cents: DataFrame) -> DataFrame:
-    # numpy candidate kernel + the same max(struct) selection — see
-    # _cand_scored (bit-identical rounded cosines, selection in Spark)
+    # numpy candidate kernel + a map-side max(struct) selection — see
+    # _cand_scored (bit-identical rounded cosines, selection in Spark);
+    # max over (cos_c, -cent_id) == order by cos desc, cent_id asc
     scored = _cand_scored(e, cents, 1)
     return (
         scored.groupBy("vec_id")
@@ -477,48 +513,7 @@ def ann_ivf_topk_l8(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the ann_recall_l8 row."""
     e = _emb(spark, sf_dir)
     cents = _centroids_lloyd(e)
-    cells = _assign_cells(e, cents).select("vec_id", "cell")
-    # the persisted corpus carries its norm: every candidate scoring below
-    # folds the norm once per vector, not once per (query, candidate) pair
-    v = track_persist(
-        e.join(cells, "vec_id").withColumn("_en", _norm(F.col("embedding")))
-    )
-    q = v.where(
-        (F.col("vec_id") % QUERY_MOD == 0)
-        & (F.col("vec_id") < QUERY_MOD * MAX_QUERIES)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("_en").alias("_qn"),
-    )
-    cn = cents.select("cent_id", "ce", _norm(F.col("ce")).alias("_cn"))
-    cent_cos = F.round(
-        _dot(F.col("ce"), F.col("qe")) / (F.col("_cn") * F.col("_qn")),
-        6,
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("cos_c").desc(), F.col("cent_id"))
-    qcells = (
-        q.crossJoin(F.broadcast(cn))
-        .select("query_id", "qe", "_qn", "cent_id", cent_cos.alias("cos_c"))
-        .withColumn("rk", F.row_number().over(wq))
-        .where(F.col("rk") <= NPROBE_L8)
-        .select("query_id", "qe", "_qn", F.col("cent_id").alias("qcell"))
-    )
-    cand = v.select(F.col("vec_id").alias("cand_id"), "embedding", "_en", "cell")
-    cos = F.round(
-        _dot(F.col("qe"), F.col("embedding")) / (F.col("_qn") * F.col("_en")),
-        6,
-    )
-    pairs = cand.join(
-        F.broadcast(qcells),
-        (F.col("cell") == F.col("qcell")) & (F.col("cand_id") != F.col("query_id")),
-    ).select("query_id", "cand_id", cos.alias("cosine")).distinct()
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("query_id", "cand_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _ivf_search(e, _assign_cells(e, cents).select("vec_id", "cell"), cents, NPROBE_L8)
 
 
 def ann_recall_l8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -542,19 +537,7 @@ def _adaptive_bucket(table: int, planes_col) -> "F.Column":
     integers so the DuckDB oracle is bit-identical."""
     bucket = F.lit(0).cast("bigint")
     for k in range(MAX_PLANES):
-        # HOF fold kept on purpose — see _dot (JIT method-size bailout)
-        proj = F.aggregate(
-            F.zip_with(
-                F.col("embedding"),
-                F.array(*[
-                    F.lit(float(((i * 73 + k * 37 + table * 101) % 19) - 9))
-                    for i in range(DIM)
-                ]),
-                lambda x, wgt: x.cast("double") * wgt,
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
+        proj = _plane_proj(k, table)
         bit = F.when((F.lit(k) < planes_col) & (proj > 0.0), F.lit(1 << k)).otherwise(F.lit(0))
         bucket = bucket + bit
     return bucket
@@ -597,11 +580,7 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = v.unionByName(tdf)
     v = track_persist(v)  # consumed by both sides of the self-join
     a, c = v.alias("a"), v.alias("c")
-    cos = F.round(
-        _dot(F.col("a.embedding"), F.col("c.embedding"))
-        / (F.col("a._n") * F.col("c._n")),
-        6,
-    )
+    cos = _cos6("a.embedding", "c.embedding", "a._n", "c._n")
     pairs = (
         a.join(
             c,
@@ -636,45 +615,7 @@ def ann_ivf_topk_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     compare ann_recall_at_k vs ann_recall_probe2)."""
     e = _emb(spark, sf_dir)
     cells = ann_ivf_cells(spark, sf_dir).select("vec_id", "cell")
-    v = track_persist(
-        e.join(cells, "vec_id").withColumn("_en", _norm(F.col("embedding")))
-    )
-    q = v.where(
-        (F.col("vec_id") % QUERY_MOD == 0)
-        & (F.col("vec_id") < QUERY_MOD * MAX_QUERIES)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        F.col("_en").alias("_qn"),
-    )
-    cn = _centroids(e).withColumn("_cn", _norm(F.col("ce")))
-    cent_cos = F.round(
-        _dot(F.col("ce"), F.col("qe")) / (F.col("_cn") * F.col("_qn")),
-        6,
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.col("cos_c").desc(), F.col("cent_id"))
-    qcells = (
-        q.crossJoin(F.broadcast(cn))
-        .select("query_id", "qe", "_qn", "cent_id", cent_cos.alias("cos_c"))
-        .withColumn("rk", F.row_number().over(wq))
-        .where(F.col("rk") <= 2)
-        .select("query_id", "qe", "_qn", F.col("cent_id").alias("qcell"))
-    )
-    cand = v.select(F.col("vec_id").alias("cand_id"), "embedding", "_en", "cell")
-    cos = F.round(
-        _dot(F.col("qe"), F.col("embedding")) / (F.col("_qn") * F.col("_en")),
-        6,
-    )
-    pairs = cand.join(
-        F.broadcast(qcells),
-        (F.col("cell") == F.col("qcell")) & (F.col("cand_id") != F.col("query_id")),
-    ).select("query_id", "cand_id", cos.alias("cosine")).distinct()
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        pairs.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("query_id", "cand_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _ivf_search(e, cells, _centroids(e), 2)
 
 
 def _recall_vs_brute(spark: SparkSession, sf_dir: str, ivf: DataFrame) -> DataFrame:
@@ -704,6 +645,39 @@ DR_SAMPLE_MAX = 2048   # truth-sample ceiling: the ground-truth all-pairs
                        # size (VERDICT r02 item 2 — no O(N²) truth)
 
 
+def _sample_pairs(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(m, pairs): the bounded truth sample — vec_id % m == 0 with m =
+    ceil(N / DR_SAMPLE_MAX), so ≤ DR_SAMPLE_MAX vectors — and its
+    all-pairs self-join (vec_a < vec_b) with the rounded cosine."""
+    m = e.agg(
+        F.greatest(
+            F.lit(1), F.ceil(F.count(F.lit(1)) / float(DR_SAMPLE_MAX))
+        ).cast("bigint").alias("m")
+    )
+    s = (
+        e.crossJoin(F.broadcast(m))
+        .where(
+            (F.col("vec_id") % F.col("m") == 0)
+            & (F.col("vec_id") < F.col("m") * DR_SAMPLE_MAX)
+        )
+        .select("vec_id", "embedding", _norm(F.col("embedding")).alias("_n"))
+    )
+    a = s.select(
+        F.col("vec_id").alias("vec_a"),
+        F.col("embedding").alias("ea"),
+        F.col("_n").alias("_na"),
+    )
+    c = s.select(
+        F.col("vec_id").alias("vec_b"),
+        F.col("embedding").alias("eb"),
+        F.col("_n").alias("_nb"),
+    )
+    pairs = a.join(c, F.col("vec_a") < F.col("vec_b")).select(
+        "vec_a", "vec_b", _cos6("ea", "eb", "_na", "_nb").alias("cosine")
+    )
+    return m, pairs
+
+
 def dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Candidate recall of the adaptive-LSH near-dup prefilter vs a
     brute-force threshold ground truth, BANDED BY COSINE — sign-LSH
@@ -718,38 +692,9 @@ def dedup_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the same sample — recall = |cand ∩ S²| / |truth ∩ S²| per band.  The
     gauge's own cost is O(DR_SAMPLE_MAX²) dot products no matter how big
     the corpus grows (at test scale m = 1, so the gauge is exhaustive)."""
-    e = _emb(spark, sf_dir)
-    m = e.agg(
-        F.greatest(
-            F.lit(1), F.ceil(F.count(F.lit(1)) / float(DR_SAMPLE_MAX))
-        ).cast("bigint").alias("m")
-    )
-    s = (
-        e.crossJoin(F.broadcast(m))
-        .where(
-            (F.col("vec_id") % F.col("m") == 0)
-            & (F.col("vec_id") < F.col("m") * DR_SAMPLE_MAX)
-        )
-        .select("vec_id", "embedding")
-    )
-    s = s.withColumn("_n", _norm(F.col("embedding")))
-    a = s.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        F.col("_n").alias("_na"),
-    )
-    c = s.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        F.col("_n").alias("_nb"),
-    )
-    cos = F.round(
-        _dot(F.col("ea"), F.col("eb")) / (F.col("_na") * F.col("_nb")), 6
-    )
+    m, pairs = _sample_pairs(_emb(spark, sf_dir))
     truth = (
-        a.join(c, F.col("vec_a") < F.col("vec_b"))
-        .select(cos.alias("cosine"))
-        .where(F.col("cosine") >= COS_DUP_MIN)
+        pairs.where(F.col("cosine") >= COS_DUP_MIN)
         .groupBy(_cos_band(F.col("cosine")).alias("band"))
         .agg(F.count(F.lit(1)).alias("n_true_pairs"))
     )
@@ -924,14 +869,6 @@ def _sub_fold(a, b, m, term):
     )
 
 
-def _sub_sqdist(a, b, m):
-    return _sub_fold(
-        a, b, m,
-        lambda x, y: (x.cast("double") - y.cast("double"))
-        * (x.cast("double") - y.cast("double")),
-    )
-
-
 def _sub_dot(a, b, m):
     return _sub_fold(a, b, m, lambda x, y: x.cast("double") * y.cast("double"))
 
@@ -944,6 +881,40 @@ def _sub_n2(a, m):
         ),
         F.lit(0.0),
         lambda acc, v: acc + v,
+    )
+
+
+def _pq_ints(fold) -> "F.Column":
+    """The PQ_M per-subspace partials fold(m) as floor(x·PQ_SCALE)
+    bigints: their sums are order-independent, so engine-identical."""
+    return F.array(
+        *[F.floor(fold(m) * F.lit(PQ_SCALE)).cast("long") for m in range(PQ_M)]
+    )
+
+
+def _pq_recon_norm(cb: DataFrame, codes: DataFrame) -> DataFrame:
+    """(vec_id, _rn): each vector's RECONSTRUCTED norm, summed from the
+    per-(subspace, code) codebook norm² ints its codes index."""
+    cb2 = cb.select(
+        "cent_id",
+        F.posexplode(_pq_ints(lambda m: _sub_n2(F.col("ce"), m))).alias("cm", "n2int"),
+    )
+    return (
+        codes.join(
+            F.broadcast(cb2),
+            (F.col("m") == F.col("cm")) & (F.col("code") == F.col("cent_id")),
+        )
+        .groupBy("vec_id")
+        .agg(F.sqrt(F.sum("n2int").cast("double") / F.lit(PQ_SCALE)).alias("_rn"))
+    )
+
+
+def _pq_dist_table(q: DataFrame, cb: DataFrame, *keys) -> DataFrame:
+    """(*keys, qm, pdint): each query's per-(subspace, code) partial-dot
+    table against the broadcast codebook — the ADC lookup table."""
+    pdarr = _pq_ints(lambda m: _sub_dot(F.col("qe"), F.col("ce"), m))
+    return q.crossJoin(F.broadcast(cb)).select(
+        *keys, F.posexplode(pdarr).alias("qm", "pdint")
     )
 
 
@@ -1003,8 +974,8 @@ def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _pq_encode(e, _pq_codebook_refined(e))
 
 
-def _pq_adc_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Asymmetric-distance PQ scoring, fully ranked per query: queries
+def _pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Asymmetric-distance PQ scoring per (query, candidate): queries
     never touch candidate vectors — each query builds an 8x16 partial-dot
     TABLE against the broadcast codebook, candidates are scored by
     summing 8 table lookups keyed by their codes, and the approximate
@@ -1015,41 +986,9 @@ def _pq_adc_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
     cb = track_persist(_pq_codebook_refined(e))
     codes = track_persist(_pq_encode(e, cb).select("vec_id", "m", "code"))
-
-    n2arr = F.array(
-        *[
-            F.floor(_sub_n2(F.col("ce"), m) * F.lit(PQ_SCALE)).cast("long")
-            for m in range(PQ_M)
-        ]
-    )
-    cb2 = cb.select("cent_id", F.posexplode(n2arr).alias("cm", "n2int"))
-    recon = (
-        codes.join(
-            F.broadcast(cb2),
-            (F.col("m") == F.col("cm")) & (F.col("code") == F.col("cent_id")),
-        )
-        .groupBy("vec_id")
-        .agg(F.sqrt(F.sum("n2int").cast("double") / F.lit(PQ_SCALE)).alias("_rn"))
-    )
-
-    q = e.where(
-        (F.col("vec_id") % QUERY_MOD == 0)
-        & (F.col("vec_id") < QUERY_MOD * MAX_QUERIES)
-    ).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("qe"),
-        _norm(F.col("embedding")).alias("_qn"),
-    )
-    pdarr = F.array(
-        *[
-            F.floor(_sub_dot(F.col("qe"), F.col("ce"), m) * F.lit(PQ_SCALE)).cast("long")
-            for m in range(PQ_M)
-        ]
-    )
-    dt = q.crossJoin(F.broadcast(cb)).select(
-        "query_id", "_qn", F.col("cent_id").alias("qc"),
-        F.posexplode(pdarr).alias("qm", "pdint"),
-    )
+    recon = _pq_recon_norm(cb, codes)
+    q = _query_set(e, _norm(F.col("embedding")))
+    dt = _pq_dist_table(q, cb, "query_id", "_qn", F.col("cent_id").alias("qc"))
     scored = (
         codes.join(
             F.broadcast(dt),
@@ -1060,7 +999,7 @@ def _pq_adc_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "vec_id", "_qn")
         .agg(F.sum("pdint").alias("dint"))
     )
-    out = scored.join(recon, "vec_id").select(
+    return scored.join(recon, "vec_id").select(
         "query_id",
         F.col("vec_id").alias("cand_id"),
         F.round(
@@ -1069,17 +1008,21 @@ def _pq_adc_ranked(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("approx_cosine"),
     )
+
+
+def _adc_ranked(approx: DataFrame) -> DataFrame:
+    """approx rows ranked per query (rk) by approx_cosine DESC, cand_id."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("approx_cosine").desc(), F.col("cand_id")
     )
-    return out.withColumn("rk", F.row_number().over(w))
+    return approx.withColumn("rk", F.row_number().over(w))
 
 
 def ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw ADC top-3 — the compression-only rung (honest floor number on
     this diffuse corpus; the deployable search is ann_pq_rerank)."""
     return (
-        _pq_adc_ranked(spark, sf_dir)
+        _adc_ranked(_pq_adc(spark, sf_dir))
         .where(F.col("rk") <= 3)
         .select(
             "query_id", "cand_id", "approx_cosine",
@@ -1104,56 +1047,39 @@ def ann_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes.  At 100 TB the shortlist join is a broadcast of R x |queries|
     ids against the vector table — the raw corpus is touched once,
     point-wise."""
+    return _exact_rerank(spark, sf_dir, _pq_adc(spark, sf_dir), PQ_RERANK)
+
+
+def _exact_rerank(
+    spark: SparkSession, sf_dir: str, approx: DataFrame, budget: int
+) -> DataFrame:
+    """Exact-cosine top-3 over each query's top-``budget`` approx rows:
+    the raw corpus is touched point-wise through a join keyed by the
+    broadcast shortlist — O(R x |queries|) exact work regardless of N."""
     short = (
-        _pq_adc_ranked(spark, sf_dir)
-        .where(F.col("rk") <= PQ_RERANK)
-        .select("query_id", "cand_id")
+        _adc_ranked(approx).where(F.col("rk") <= budget).select("query_id", "cand_id")
     )
-    return _exact_rerank(spark, sf_dir, short)
-
-
-def _exact_rerank(spark: SparkSession, sf_dir: str, short: DataFrame) -> DataFrame:
-    """Exact-cosine top-3 over an (query_id, cand_id) shortlist: the raw
-    corpus is touched point-wise through a join keyed by the broadcast
-    shortlist — O(R x |queries|) exact work regardless of N."""
     e = _emb(spark, sf_dir).withColumn("_en", _norm(F.col("embedding")))
-    q = e.where(
-        (F.col("vec_id") % QUERY_MOD == 0)
-        & (F.col("vec_id") < QUERY_MOD * MAX_QUERIES)
-    ).select(
-        F.col("vec_id").alias("qid"),
-        F.col("embedding").alias("qe"),
-        F.col("_en").alias("_qn"),
-    )
+    q = _query_set(e, F.col("_en"), qid="qid")
     cand = e.select(F.col("vec_id").alias("cand_id"), "embedding", "_en")
-    cos = F.round(
-        _dot(F.col("qe"), F.col("embedding")) / (F.col("_qn") * F.col("_en")), 6
-    )
     rr = (
         short.join(F.broadcast(q), F.col("query_id") == F.col("qid"))
         .join(cand, "cand_id")
-        .select("query_id", "cand_id", cos.alias("cosine"))
+        .select("query_id", "cand_id", _cos6("qe", "embedding", "_qn", "_en").alias("cosine"))
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("cand_id"))
-    return (
-        rr.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= 3)
-        .select("query_id", "cand_id", "cosine", F.col("rank").cast("int").alias("rank"))
-    )
+    return _top_k(rr, 3)
 
 
 def ann_recall_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured recall@3 of the raw ADC search vs brute force — the
     honest floor for the 32x-compression rung of the ANN ladder."""
-    ivf = ann_pq_topk(spark, sf_dir).select("query_id", "cand_id")
-    return _recall_vs_brute(spark, sf_dir, ivf)
+    return _recall_vs_brute(spark, sf_dir, ann_pq_topk(spark, sf_dir))
 
 
 def ann_recall_pq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured recall@3 of ADC-shortlist + exact re-rank — the
     deployable PQ search's quality row (≈ 0.52 at sf0.1)."""
-    ivf = ann_pq_rerank(spark, sf_dir).select("query_id", "cand_id")
-    return _recall_vs_brute(spark, sf_dir, ivf)
+    return _recall_vs_brute(spark, sf_dir, ann_pq_rerank(spark, sf_dir))
 
 
 IVFPQ_RERANK = 64   # smaller refine budget than pure PQ: the ADC pass
@@ -1163,26 +1089,10 @@ IVFPQ_RERANK = 64   # smaller refine budget than pure PQ: the ADC pass
 def _probe_pairs(
     q: DataFrame, cents: DataFrame, cells: DataFrame, nprobe: int = NPROBE_L8
 ) -> DataFrame:
-    """(query_id, vec_id) candidate pairs — the shared coarse-probe stage
-    of BOTH IVF-PQ compositions (plain and residual): each query ranks
-    the centroids by rounded cosine (cent_id tie-break), keeps its
-    nprobe nearest cells, and pairs with those cells' members (self
-    excluded).  Factored so the two rungs can never de-synchronize on
-    probe semantics (they are budget-identical comparisons by design)."""
-    cn = cents.select("cent_id", "ce", _norm(F.col("ce")).alias("_cn"))
-    cent_cos = F.round(
-        _dot(F.col("ce"), F.col("qe")) / (F.col("_cn") * F.col("_qn")), 6
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("cos_c").desc(), F.col("cent_id")
-    )
-    qcells = (
-        q.crossJoin(F.broadcast(cn))
-        .select("query_id", "cent_id", cent_cos.alias("cos_c"))
-        .withColumn("rk", F.row_number().over(wq))
-        .where(F.col("rk") <= nprobe)
-        .select("query_id", F.col("cent_id").alias("qcell"))
-    )
+    """(query_id, vec_id) candidate pairs of BOTH IVF-PQ compositions
+    (plain and residual): the members of each query's nprobe nearest
+    cells (_probe_cells), self excluded."""
+    qcells = _probe_cells(q, cents, nprobe, keep=())
     return (
         cells.join(F.broadcast(qcells), F.col("cell") == F.col("qcell"))
         .where(F.col("vec_id") != F.col("query_id"))
@@ -1205,46 +1115,13 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells = _assign_cells(e, cents).select("vec_id", "cell")
     cb = track_persist(_pq_codebook_refined(e))
     codes = track_persist(_pq_encode(e, cb).select("vec_id", "m", "code"))
-
-    n2arr = F.array(
-        *[
-            F.floor(_sub_n2(F.col("ce"), m) * F.lit(PQ_SCALE)).cast("long")
-            for m in range(PQ_M)
-        ]
-    )
-    cb2 = cb.select("cent_id", F.posexplode(n2arr).alias("cm", "n2int"))
-    recon = (
-        codes.join(
-            F.broadcast(cb2),
-            (F.col("m") == F.col("cm")) & (F.col("code") == F.col("cent_id")),
-        )
-        .groupBy("vec_id")
-        .agg(F.sqrt(F.sum("n2int").cast("double") / F.lit(PQ_SCALE)).alias("_rn"))
-    )
-
-    q = track_persist(
-        e.where(
-            (F.col("vec_id") % QUERY_MOD == 0)
-            & (F.col("vec_id") < QUERY_MOD * MAX_QUERIES)
-        ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            _norm(F.col("embedding")).alias("_qn"),
-        )
-    )
-    # probe the NPROBE_L8 nearest refined cells (shared _probe_pairs —
+    recon = _pq_recon_norm(cb, codes)
+    q = track_persist(_query_set(e, _norm(F.col("embedding"))))
+    # probe the NPROBE_L8 nearest refined cells (shared _probe_cells —
     # identical expressions to ann_ivf_topk_l8's probe stage)
     pairs = _probe_pairs(q, cents, cells)
-
-    pdarr = F.array(
-        *[
-            F.floor(_sub_dot(F.col("qe"), F.col("ce"), m) * F.lit(PQ_SCALE)).cast("long")
-            for m in range(PQ_M)
-        ]
-    )
-    dt = q.crossJoin(F.broadcast(cb)).select(
-        F.col("query_id").alias("dq"), F.col("cent_id").alias("qc"),
-        F.posexplode(pdarr).alias("qm", "pdint"),
+    dt = _pq_dist_table(
+        q, cb, F.col("query_id").alias("dq"), F.col("cent_id").alias("qc")
     )
     adc = (
         codes.join(pairs, "vec_id")
@@ -1270,27 +1147,12 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("approx_cosine"),
         )
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("cand_id")
-    )
-    short = (
-        approx.withColumn("rk", F.row_number().over(ws))
-        .where(F.col("rk") <= IVFPQ_RERANK)
-        .select("query_id", "cand_id")
-    )
-    return _exact_rerank(spark, sf_dir, short)
+    return _exact_rerank(spark, sf_dir, approx, IVFPQ_RERANK)
 
 
 def ann_recall_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured recall@3 of the composed IVF-PQ + exact re-rank search."""
-    ivf = ann_ivfpq_rerank(spark, sf_dir).select("query_id", "cand_id")
-    return _recall_vs_brute(spark, sf_dir, ivf)
-
-
-def _sub_dot2(a, b, m):
-    """Per-subspace dot between two DIFFERENT array columns (the cross
-    terms of the residual reconstruction)."""
-    return _sub_fold(a, b, m, lambda x, y: x.cast("double") * y.cast("double"))
+    return _recall_vs_brute(spark, sf_dir, ann_ivfpq_rerank(spark, sf_dir))
 
 
 def ann_ivfpq_res_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1333,28 +1195,18 @@ def ann_ivfpq_res_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes = track_persist(_pq_encode(res, cb).select("vec_id", "m", "code"))
 
     SC = F.lit(PQ_SCALE)
+    n2arr = _pq_ints(lambda m: _sub_n2(F.col("ce"), m))
     # per-(m, code) residual-codebook norm² ints
-    r2arr = F.array(
-        *[F.floor(_sub_n2(F.col("ce"), m) * SC).cast("long") for m in range(PQ_M)]
-    )
-    rcb2 = cb.select("cent_id", F.posexplode(r2arr).alias("cm", "r2int"))
+    rcb2 = cb.select("cent_id", F.posexplode(n2arr).alias("cm", "r2int"))
     # per-cell centroid norm² ints (summed over subspaces)
-    c2arr = F.array(
-        *[F.floor(_sub_n2(F.col("ce"), m) * SC).cast("long") for m in range(PQ_M)]
-    )
     ccn2 = (
-        cents.select("cent_id", F.explode(c2arr).alias("v"))
+        cents.select("cent_id", F.explode(n2arr).alias("v"))
         .groupBy("cent_id")
         .agg(F.sum("v").alias("c2int"))
         .select(F.col("cent_id").alias("c2cell"), "c2int")
     )
     # per-(cell, m, code) cross-term ints: c_sub · r̂_sub
-    crossarr = F.array(
-        *[
-            F.floor(_sub_dot2(F.col("cce"), F.col("rce"), m) * SC).cast("long")
-            for m in range(PQ_M)
-        ]
-    )
+    crossarr = _pq_ints(lambda m: _sub_dot(F.col("cce"), F.col("rce"), m))
     cross = (
         cents.select(F.col("cent_id").alias("xcell"), F.col("ce").alias("cce"))
         .crossJoin(F.broadcast(cb.select(F.col("cent_id").alias("xcode"), F.col("ce").alias("rce"))))
@@ -1386,24 +1238,10 @@ def ann_ivfpq_res_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
 
-    q = track_persist(
-        e.where(
-            (F.col("vec_id") % QUERY_MOD == 0)
-            & (F.col("vec_id") < QUERY_MOD * MAX_QUERIES)
-        ).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("qe"),
-            _norm(F.col("embedding")).alias("_qn"),
-        )
-    )
+    q = track_persist(_query_set(e, _norm(F.col("embedding"))))
     # exact per-(query, cell) coarse dot, floored per subspace like all
     # other partials
-    qcarr = F.array(
-        *[
-            F.floor(_sub_dot2(F.col("qe"), F.col("ce"), m) * SC).cast("long")
-            for m in range(PQ_M)
-        ]
-    )
+    qcarr = _pq_ints(lambda m: _sub_dot(F.col("qe"), F.col("ce"), m))
     qc = (
         q.crossJoin(F.broadcast(cents))
         .select("query_id", F.col("cent_id").alias("qccell"), F.explode(qcarr).alias("v"))
@@ -1414,17 +1252,9 @@ def ann_ivfpq_res_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # probe the NPROBE_L8 nearest refined cells (shared _probe_pairs —
     # guaranteed identical to the non-residual composition)
     pairs = _probe_pairs(q, cents, cells)
-
     # residual distance tables: q · r̂ per (query, m, code)
-    pdarr = F.array(
-        *[
-            F.floor(_sub_dot(F.col("qe"), F.col("ce"), m) * SC).cast("long")
-            for m in range(PQ_M)
-        ]
-    )
-    dt = q.crossJoin(F.broadcast(cb)).select(
-        F.col("query_id").alias("dq"), F.col("cent_id").alias("dqc"),
-        F.posexplode(pdarr).alias("qm", "pdint"),
+    dt = _pq_dist_table(
+        q, cb, F.col("query_id").alias("dq"), F.col("cent_id").alias("dqc")
     )
     adc = (
         codes.join(pairs, "vec_id")
@@ -1454,23 +1284,14 @@ def ann_ivfpq_res_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("approx_cosine"),
         )
     )
-    ws = Window.partitionBy("query_id").orderBy(
-        F.col("approx_cosine").desc(), F.col("cand_id")
-    )
-    short = (
-        approx.withColumn("rk", F.row_number().over(ws))
-        .where(F.col("rk") <= IVFPQ_RERANK)
-        .select("query_id", "cand_id")
-    )
-    return _exact_rerank(spark, sf_dir, short)
+    return _exact_rerank(spark, sf_dir, approx, IVFPQ_RERANK)
 
 
 def ann_recall_ivfpq_res(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Measured recall@3 of the RESIDUAL IVF-PQ search — read next to
     ann_recall_ivfpq (same probe and shortlist budgets) to see what the
     residual encoding buys."""
-    ivf = ann_ivfpq_res_rerank(spark, sf_dir).select("query_id", "cand_id")
-    return _recall_vs_brute(spark, sf_dir, ivf)
+    return _recall_vs_brute(spark, sf_dir, ann_ivfpq_res_rerank(spark, sf_dir))
 
 
 SEM_THRESH = 0.3  # semantic-dup cosine threshold (diffuse corpus: max
@@ -1487,37 +1308,7 @@ def dedup_semantic_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_true_pairs / n_caught / recall."""
     e = _emb(spark, sf_dir)
     pruned = dedup_semantic(spark, sf_dir).where(~F.col("keep")).select("vec_id")
-    m = e.agg(
-        F.greatest(
-            F.lit(1), F.ceil(F.count(F.lit(1)) / float(DR_SAMPLE_MAX))
-        ).cast("bigint").alias("m")
-    )
-    s = (
-        e.crossJoin(F.broadcast(m))
-        .where(
-            (F.col("vec_id") % F.col("m") == 0)
-            & (F.col("vec_id") < F.col("m") * DR_SAMPLE_MAX)
-        )
-        .select("vec_id", "embedding", _norm(F.col("embedding")).alias("_n"))
-    )
-    a = s.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("embedding").alias("ea"),
-        F.col("_n").alias("_na"),
-    )
-    c = s.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("embedding").alias("eb"),
-        F.col("_n").alias("_nb"),
-    )
-    cos = F.round(
-        _dot(F.col("ea"), F.col("eb")) / (F.col("_na") * F.col("_nb")), 6
-    )
-    truth = (
-        a.join(c, F.col("vec_a") < F.col("vec_b"))
-        .select("vec_a", "vec_b", cos.alias("cosine"))
-        .where(F.col("cosine") >= F.lit(SEM_THRESH))
-    )
+    truth = _sample_pairs(e)[1].where(F.col("cosine") >= F.lit(SEM_THRESH))
     caught = truth.join(
         pruned.withColumnRenamed("vec_id", "vec_b"), "vec_b"
     )
@@ -1598,9 +1389,7 @@ def dedup_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("_en").alias("_na"),
     )
     b = v.where(F.col("rk") == 1)
-    cos = F.round(
-        _dot(F.col("ae"), F.col("embedding")) / (F.col("_na") * F.col("_en")), 6
-    )
+    cos = _cos6("ae", "embedding", "_na", "_en")
     pruned = (
         b.join(
             a,

@@ -1658,37 +1658,65 @@ SELECT label, COUNT(*) AS n_vecs, ROUND(SUM(norm), 4) AS sum_norm,
 FROM n GROUP BY label
 """
 
-    dot = _fold_dot("qe[i]", "embedding[i]", DIM)
-    qnorm = _NORM.format(col="qe")
     _QSET = f"vec_id % {QUERY_MOD} = 0 AND vec_id < {QUERY_MOD * MAX_QUERIES}"
+    qdot = _fold_dot("qe[i]", "embedding[i]", DIM)
+    qnorm = _NORM.format(col="qe")
+
+    def _ranked(src: str, by: str = "cosine") -> str:
+        # per-query rank by `by` DESC with a cand_id tie-break
+        return (
+            f"(SELECT *, row_number() OVER (PARTITION BY query_id "
+            f"ORDER BY {by} DESC, cand_id) AS rank FROM {src})"
+        )
+
+    # exact brute-force cosine of every query against the corpus — the
+    # knn_brute_cosine answer and the truth of every recall gauge
+    _brute_ctes = f"""
+bq AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE {_QSET}),
+bp AS (
+  SELECT bq.query_id, e.vec_id AS cand_id,
+    ROUND({_fold_dot("bq.qe[i]", "e.embedding[i]", DIM)} / ({_NORM.format(col="bq.qe")} * {_NORM.format(col="e.embedding")}), 6) AS cosine
+  FROM embeddings e, bq WHERE e.vec_id <> bq.query_id
+)"""
     sql["knn_brute_cosine"] = f"""
-WITH q AS (
-  SELECT vec_id AS query_id, embedding AS qe FROM embeddings
-  WHERE {_QSET}
-),
-pairs AS (
-  SELECT query_id, e.vec_id AS cand_id,
-    ROUND({dot} / ({qnorm} * {norm}), 6) AS cosine
-  FROM embeddings e, q WHERE e.vec_id <> query_id
-),
-ranked AS (
-  SELECT query_id, cand_id, cosine,
-         row_number() OVER (PARTITION BY query_id ORDER BY cosine DESC, cand_id) AS rank
-  FROM pairs
-)
+WITH {_brute_ctes}
 SELECT query_id, cand_id, cosine, CAST(rank AS INT) AS rank
-FROM ranked WHERE rank <= {TOP_K}
+FROM {_ranked("bp")} WHERE rank <= {TOP_K}
 """
 
-    proj_terms = []
-    for k in range(LSH_PLANES):
-        proj = (
+    # recall@3 of an ANN search vs the brute truth: each gauge supplies
+    # only its approx3 (query_id, cand_id) CTE ahead of this tail
+    _recall_tail = f"""{_brute_ctes},
+brute3 AS (SELECT query_id, cand_id FROM {_ranked("bp")} WHERE rank <= 3),
+hits AS (SELECT brute3.query_id, COUNT(*) AS n
+         FROM brute3 JOIN approx3 USING (query_id, cand_id) GROUP BY 1)
+SELECT qq.query_id, CAST(COALESCE(n, 0) AS BIGINT) AS n_overlap,
+       ROUND(COALESCE(n, 0) / 3.0, 6) AS recall
+FROM (SELECT DISTINCT query_id FROM brute3) qq LEFT JOIN hits USING (query_id)
+"""
+
+    def _search_and_recall(search: str, recall: str, ctes: str, top3: str) -> None:
+        # an ANN search whose `ctes` end in its top-3 CTE `top3`, and the
+        # recall gauge of that search
+        sql[search] = f"\nWITH {ctes}\nSELECT query_id, cand_id, cosine, rank FROM {top3}\n"
+        sql[recall] = f"""
+WITH {ctes},
+approx3 AS (SELECT query_id, cand_id FROM {top3}),
+{_recall_tail}"""
+
+    def _plane_proj(k: int, table: str = "") -> str:
+        # dot(embedding, plane k): similarity._plane_weight's formula, with
+        # `table` its table term (empty for ann_lsh_buckets' table 0)
+        return (
             f"list_reduce(list_prepend(0.0, [CAST(embedding[i+1] AS DOUBLE) * "
-            f"CAST(((i * 73 + {k} * 37) % 19) - 9 AS DOUBLE) for i in range(0, {DIM})]), "
+            f"CAST(((i * 73 + {k} * 37{table}) % 19) - 9 AS DOUBLE) for i in range(0, {DIM})]), "
             f"(acc, v) -> acc + v)"
         )
-        proj_terms.append(f"CASE WHEN {proj} > 0.0 THEN {1 << k} ELSE 0 END")
-    bucket_expr = " + ".join(proj_terms)
+
+    bucket_expr = " + ".join(
+        f"CASE WHEN {_plane_proj(k)} > 0.0 THEN {1 << k} ELSE 0 END"
+        for k in range(LSH_PLANES)
+    )
     sql["ann_lsh_buckets"] = f"""
 SELECT vec_id, label, CAST({bucket_expr} AS INT) AS bucket FROM embeddings
 """
@@ -1723,37 +1751,30 @@ cells AS (
 )"""
     sql["ann_ivf_cells"] = f"WITH {_ivf_cells_cte}\nSELECT vec_id, cell, cell_cosine FROM cells"
 
-    sql["ann_ivf_topk"] = f"""
-WITH {_ivf_cells_cte},
+    # home-cell search (nprobe=1): candidates share the query's own cell
+    _ivf_home = f"""{_ivf_cells_cte},
 v AS (SELECT e.vec_id, e.embedding, cells.cell FROM embeddings e JOIN cells USING (vec_id)),
 q AS (SELECT vec_id AS query_id, embedding AS qe, cell AS qcell FROM v
       WHERE {_QSET}),
 pairs AS (
   SELECT query_id, v.vec_id AS cand_id,
-         ROUND({_fold_dot("qe[i]", "embedding[i]", DIM)} / ({_NORM.format(col="qe")} * {norm}), 6) AS cosine
+         ROUND({qdot} / ({qnorm} * {norm}), 6) AS cosine
   FROM v, q WHERE v.cell = qcell AND v.vec_id <> query_id
-)
-SELECT query_id, cand_id, cosine, CAST(rank AS INT) AS rank
-FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-             ORDER BY cosine DESC, cand_id) AS rank FROM pairs)
-WHERE rank <= 3
-"""
+),
+home_top AS (
+  SELECT query_id, cand_id, cosine, CAST(rank AS INT) AS rank
+  FROM {_ranked("pairs")} WHERE rank <= 3
+)"""
+    _search_and_recall("ann_ivf_topk", "ann_recall_at_k", _ivf_home, "home_top")
 
     pair_dot = _fold_dot("a.embedding[i]", "c.embedding[i]", DIM)
     na = _NORM.format(col="a.embedding")
     nc = _NORM.format(col="c.embedding")
-    adapt_terms = []
-    for k in range(MAX_PLANES):
-        proj = (
-            f"list_reduce(list_prepend(0.0, [CAST(embedding[i+1] AS DOUBLE) * "
-            f"CAST(((i * 73 + {k} * 37 + tbl * 101) % 19) - 9 AS DOUBLE) for i in range(0, {DIM})]), "
-            f"(acc, v) -> acc + v)"
-        )
-        adapt_terms.append(
-            f"CASE WHEN {k} < planes AND {proj} > 0.0 "
-            f"THEN CAST({1 << k} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
-        )
-    adapt_bucket = " + ".join(adapt_terms)
+    adapt_bucket = " + ".join(
+        f"CASE WHEN {k} < planes AND {_plane_proj(k, ' + tbl * 101')} > 0.0 "
+        f"THEN CAST({1 << k} AS BIGINT) ELSE CAST(0 AS BIGINT) END"
+        for k in range(MAX_PLANES)
+    )
     tbls = " UNION ALL ".join(f"SELECT {t} AS tbl" for t in range(DEDUP_TABLES))
     sql["dedup_embedding_cosine"] = f"""
 WITH p AS (SELECT LEAST({MAX_PLANES}, GREATEST({MIN_PLANES}, CAST(CEIL(LOG2(COUNT(*))) AS INT))) AS planes
@@ -1768,32 +1789,26 @@ FROM b a JOIN b c ON a.tbl = c.tbl AND a.bucket = c.bucket AND a.vec_id < c.vec_
 WHERE ROUND({pair_dot} / ({na} * {nc}), 6) >= {similarity.COS_DUP_MIN}
 """
 
-    truth_dot = _fold_dot("ea[i]", "eb[i]", DIM)
-    n_ea = _NORM.format(col="ea")
-    n_eb = _NORM.format(col="eb")
     _BAND = (
         "CASE WHEN {c} >= 0.3 THEN 'high_ge_0.30' "
         "WHEN {c} >= 0.25 THEN 'mid_0.25_0.30' ELSE 'low_0.20_0.25' END"
     )
     _DRM = similarity.DR_SAMPLE_MAX
-    sql["dedup_recall"] = f"""
-WITH p AS (SELECT LEAST({MAX_PLANES}, GREATEST({MIN_PLANES}, CAST(CEIL(LOG2(COUNT(*))) AS INT))) AS planes
-           FROM embeddings),
-m AS (SELECT GREATEST(1, CAST(CEIL(COUNT(*) / {_DRM}.0) AS BIGINT)) AS m FROM embeddings),
+    # the bounded truth sample (≤ DR_SAMPLE_MAX vectors) and its all-pairs
+    # rounded cosines — similarity._sample_pairs; both dedup recall gauges
+    _sample_ctes = f"""m AS (SELECT GREATEST(1, CAST(CEIL(COUNT(*) / {_DRM}.0) AS BIGINT)) AS m FROM embeddings),
 s AS MATERIALIZED (
   SELECT vec_id, embedding FROM embeddings, m
   WHERE vec_id % m = 0 AND vec_id < m * {_DRM}
 ),
-b AS (
-  SELECT vec_id, embedding, tbl, {adapt_bucket} AS bucket
-  FROM embeddings, p, ({tbls}) tables
-),
-cand_pairs AS (
-  SELECT DISTINCT a.vec_id AS vec_a, c.vec_id AS vec_b,
-         ROUND({pair_dot} / ({na} * {nc}), 6) AS cosine
-  FROM b a JOIN b c ON a.tbl = c.tbl AND a.bucket = c.bucket AND a.vec_id < c.vec_id
-  WHERE ROUND({pair_dot} / ({na} * {nc}), 6) >= {similarity.COS_DUP_MIN}
-),
+spairs AS (
+  SELECT sa.vec_id AS vec_a, sb.vec_id AS vec_b,
+         ROUND({_fold_dot("sa.embedding[i]", "sb.embedding[i]", DIM)} / ({_NORM.format(col="sa.embedding")} * {_NORM.format(col="sb.embedding")}), 6) AS cosine
+  FROM s sa JOIN s sb ON sa.vec_id < sb.vec_id
+)"""
+    sql["dedup_recall"] = f"""
+WITH cand_pairs AS ({sql["dedup_embedding_cosine"]}),
+{_sample_ctes},
 cand AS (
   SELECT {_BAND.format(c='cosine')} AS band, COUNT(*) AS n_candidates
   FROM cand_pairs, m
@@ -1803,12 +1818,7 @@ cand AS (
 ),
 truth AS (
   SELECT {_BAND.format(c='cosine')} AS band, COUNT(*) AS n_true_pairs
-  FROM (
-    SELECT ROUND({truth_dot} / ({n_ea} * {n_eb}), 6) AS cosine
-    FROM (SELECT vec_id, embedding AS ea FROM s) a
-    JOIN (SELECT vec_id, embedding AS eb FROM s) c ON a.vec_id < c.vec_id
-    WHERE ROUND({truth_dot} / ({n_ea} * {n_eb}), 6) >= {similarity.COS_DUP_MIN}
-  ) GROUP BY 1
+  FROM spairs WHERE cosine >= {similarity.COS_DUP_MIN} GROUP BY 1
 )
 SELECT truth.band, n_true_pairs,
        CAST(COALESCE(n_candidates, 0) AS BIGINT) AS n_candidates,
@@ -1817,94 +1827,40 @@ FROM truth LEFT JOIN cand ON truth.band = cand.band
 """
 
     q_cent_dot = _fold_dot("ce[i]", "qe[i]", DIM)
-    _probe2_cte = f"""
+
+    def _ivf_search_ctes(cents: str, cells: str, nprobe: int) -> str:
+        """The query set's nprobe nearest `cents` centroids, and its top-3
+        (ivf_top) over their cells' members in `cells` — the shape of every
+        multi-probe IVF search (similarity._ivf_search)."""
+        return f"""
+v AS MATERIALIZED (SELECT e.vec_id, e.embedding, {cells}.cell
+     FROM embeddings e JOIN {cells} USING (vec_id)),
 qp AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE {_QSET}),
-qscored AS (
+qscored AS MATERIALIZED (
   SELECT query_id, qe, cent_id,
-         ROUND({q_cent_dot} / ({cent_norm} * {_NORM.format(col='qe')}), 6) AS cos_c
-  FROM qp, cents
+         ROUND({q_cent_dot} / ({cent_norm} * {qnorm}), 6) AS cos_c
+  FROM qp, {cents}
 ),
-qcells AS (
+qcells AS MATERIALIZED (
   SELECT query_id, qe, cent_id AS qcell
   FROM (SELECT *, row_number() OVER (PARTITION BY query_id
                ORDER BY cos_c DESC, cent_id) AS rk FROM qscored)
-  WHERE rk <= 2
+  WHERE rk <= {nprobe}
 ),
-p2pairs AS (
+ivf_pairs AS MATERIALIZED (
   SELECT DISTINCT query_id, v.vec_id AS cand_id,
-         ROUND({_fold_dot("qe[i]", "embedding[i]", DIM)} / ({_NORM.format(col="qe")} * {norm}), 6) AS cosine
+         ROUND({qdot} / ({qnorm} * {norm}), 6) AS cosine
   FROM v, qcells WHERE v.cell = qcell AND v.vec_id <> query_id
 ),
-p2top AS (
+ivf_top AS MATERIALIZED (
   SELECT query_id, cand_id, cosine, CAST(rank AS INT) AS rank
-  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, cand_id) AS rank FROM p2pairs)
-  WHERE rank <= 3
+  FROM {_ranked("ivf_pairs")} WHERE rank <= 3
 )"""
 
-    sql["ann_ivf_topk_probe2"] = f"""
-WITH {_ivf_cells_cte},
-v AS (SELECT e.vec_id, e.embedding, cells.cell FROM embeddings e JOIN cells USING (vec_id)),
-{_probe2_cte}
-SELECT query_id, cand_id, cosine, rank FROM p2top
-"""
-
-    sql["ann_recall_probe2"] = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE {_QSET}),
-bp AS (
-  SELECT query_id, e.vec_id AS cand_id,
-    ROUND({dot} / ({qnorm} * {norm}), 6) AS cosine
-  FROM embeddings e, q WHERE e.vec_id <> query_id
-),
-brute3 AS (
-  SELECT query_id, cand_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, cand_id) AS rank FROM bp)
-  WHERE rank <= 3
-),
-{_ivf_cells_cte},
-v AS (SELECT e.vec_id, e.embedding, cells.cell FROM embeddings e JOIN cells USING (vec_id)),
-{_probe2_cte},
-hits AS (SELECT brute3.query_id, COUNT(*) AS n
-         FROM brute3 JOIN p2top USING (query_id, cand_id) GROUP BY 1)
-SELECT qq.query_id, CAST(COALESCE(n, 0) AS BIGINT) AS n_overlap,
-       ROUND(COALESCE(n, 0) / 3.0, 6) AS recall
-FROM (SELECT DISTINCT query_id FROM brute3) qq LEFT JOIN hits USING (query_id)
-"""
-
-    sql["ann_recall_at_k"] = f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE {_QSET}),
-bp AS (
-  SELECT query_id, e.vec_id AS cand_id,
-    ROUND({dot} / ({qnorm} * {norm}), 6) AS cosine
-  FROM embeddings e, q WHERE e.vec_id <> query_id
-),
-brute3 AS (
-  SELECT query_id, cand_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, cand_id) AS rank FROM bp)
-  WHERE rank <= 3
-),
-{_ivf_cells_cte},
-v AS (SELECT e.vec_id, e.embedding, cells.cell FROM embeddings e JOIN cells USING (vec_id)),
-qv AS (SELECT vec_id AS query_id, embedding AS qe, cell AS qcell FROM v WHERE {_QSET}),
-ip AS (
-  SELECT query_id, v.vec_id AS cand_id,
-         ROUND({_fold_dot("qe[i]", "embedding[i]", DIM)} / ({_NORM.format(col="qe")} * {norm}), 6) AS cosine
-  FROM v, qv WHERE v.cell = qcell AND v.vec_id <> query_id
-),
-ivf3 AS (
-  SELECT query_id, cand_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, cand_id) AS rank FROM ip)
-  WHERE rank <= 3
-),
-hits AS (SELECT brute3.query_id, COUNT(*) AS n
-         FROM brute3 JOIN ivf3 USING (query_id, cand_id) GROUP BY 1)
-SELECT qq.query_id, CAST(COALESCE(n, 0) AS BIGINT) AS n_overlap,
-       ROUND(COALESCE(n, 0) / 3.0, 6) AS recall
-FROM (SELECT DISTINCT query_id FROM brute3) qq LEFT JOIN hits USING (query_id)
-"""
+    _search_and_recall(
+        "ann_ivf_topk_probe2", "ann_recall_probe2",
+        f"{_ivf_cells_cte},{_ivf_search_ctes('cents', 'cells', 2)}", "ivf_top",
+    )
 
     # ---- Lloyd-refined IVF (exact oracle: centroid means go through
     # integer-scaled bigint sums, so they are order-independent and
@@ -1970,38 +1926,11 @@ WITH {_LLOYD_CTES}
 SELECT vec_id, cell, cell_cosine FROM cells_l
 """
 
-    _l8_cte = f"""
-v AS MATERIALIZED (SELECT e.vec_id, e.embedding, cells_l.cell
-     FROM embeddings e JOIN cells_l USING (vec_id)),
-qp AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE {_QSET}),
-qscored AS MATERIALIZED (
-  SELECT query_id, qe, cent_id,
-         ROUND({q_cent_dot} / ({cent_norm} * {_NORM.format(col='qe')}), 6) AS cos_c
-  FROM qp, cents_l{LLOYD_ITERS}
-),
-qcells AS MATERIALIZED (
-  SELECT query_id, qe, cent_id AS qcell
-  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY cos_c DESC, cent_id) AS rk FROM qscored)
-  WHERE rk <= {NPROBE_L8}
-),
-l8pairs AS MATERIALIZED (
-  SELECT DISTINCT query_id, v.vec_id AS cand_id,
-         ROUND({_fold_dot("qe[i]", "embedding[i]", DIM)} / ({_NORM.format(col="qe")} * {norm}), 6) AS cosine
-  FROM v, qcells WHERE v.cell = qcell AND v.vec_id <> query_id
-),
-l8top AS MATERIALIZED (
-  SELECT query_id, cand_id, cosine, CAST(rank AS INT) AS rank
-  FROM (SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, cand_id) AS rank FROM l8pairs)
-  WHERE rank <= 3
-)"""
-
-    sql["ann_ivf_topk_l8"] = f"""
-WITH {_LLOYD_CTES},
-{_l8_cte}
-SELECT query_id, cand_id, cosine, rank FROM l8top
-"""
+    _search_and_recall(
+        "ann_ivf_topk_l8", "ann_recall_l8",
+        f"{_LLOYD_CTES},{_ivf_search_ctes(f'cents_l{LLOYD_ITERS}', 'cells_l', NPROBE_L8)}",
+        "ivf_top",
+    )
 
     # SemDeDup: Lloyd cells scope the within-cell pair search; round 6:
     # SEM_ASSIGN-wide multi-assignment (similarity.SEM_ASSIGN, currently 3
@@ -2165,22 +2094,12 @@ LEFT JOIN est ON exact_q.event_type = est.event_type AND exact_q.p = est.p
 JOIN bound ON exact_q.event_type = bound.event_type
 """
 
-    _sem_truth_dot = _fold_dot("sa.embedding[i]", "sb.embedding[i]", DIM)
-    _sem_tna = _NORM.format(col="sa.embedding")
-    _sem_tnb = _NORM.format(col="sb.embedding")
     sql["dedup_semantic_recall"] = f"""
 WITH {_SEM_LLOYD_CTES},
 {_sem_pruned_ctes},
-m AS (SELECT GREATEST(1, CAST(CEIL(COUNT(*) / {similarity.DR_SAMPLE_MAX}.0) AS BIGINT)) AS m
-      FROM embeddings),
-s AS MATERIALIZED (
-  SELECT vec_id, embedding FROM embeddings, m
-  WHERE vec_id % m = 0 AND vec_id < m * {similarity.DR_SAMPLE_MAX}
-),
+{_sample_ctes},
 truth AS MATERIALIZED (
-  SELECT sa.vec_id AS vec_a, sb.vec_id AS vec_b
-  FROM s sa JOIN s sb ON sa.vec_id < sb.vec_id
-  WHERE ROUND({_sem_truth_dot} / ({_sem_tna} * {_sem_tnb}), 6) >= {similarity.SEM_THRESH}
+  SELECT vec_a, vec_b FROM spairs WHERE cosine >= {similarity.SEM_THRESH}
 ),
 nt AS (SELECT COUNT(*) AS n_true_pairs FROM truth),
 nc AS (SELECT COUNT(*) AS n_caught FROM truth JOIN pruned ON truth.vec_b = pruned.vec_id)
@@ -2211,28 +2130,6 @@ per_doc AS (
 SELECT doc_id, CAST(nb AS BIGINT) AS n_bigrams,
        ROUND(sc * 1000000.0 / (tc * nb), 6) AS familiarity
 FROM per_doc, total
-"""
-
-    sql["ann_recall_l8"] = f"""
-WITH {_LLOYD_CTES},
-{_l8_cte},
-bq AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE {_QSET}),
-bp AS (
-  SELECT query_id, e.vec_id AS cand_id,
-    ROUND({_fold_dot("qe[i]", "embedding[i]", DIM)} / ({_NORM.format(col="qe")} * {norm}), 6) AS cosine
-  FROM embeddings e, bq WHERE e.vec_id <> query_id
-),
-brute3 AS (
-  SELECT query_id, cand_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, cand_id) AS rank FROM bp)
-  WHERE rank <= 3
-),
-hits AS (SELECT brute3.query_id, COUNT(*) AS n
-         FROM brute3 JOIN l8top USING (query_id, cand_id) GROUP BY 1)
-SELECT qq.query_id, CAST(COALESCE(n, 0) AS BIGINT) AS n_overlap,
-       ROUND(COALESCE(n, 0) / 3.0, 6) AS recall
-FROM (SELECT DISTINCT query_id FROM brute3) qq LEFT JOIN hits USING (query_id)
 """
 
     sql["x_extract_docs_plain"] = f"""
@@ -2436,19 +2333,12 @@ WHERE t.rk = 1
             f"for i in range(1, {PQ_DS + 1})]), (acc, v) -> acc + v)"
         )
 
-    def _pq_dotq(m: int) -> str:
+    def _pq_dot(m: int, a: str = "qe", b: str = "ce") -> str:
+        # subspace-m dot of array columns a, b (a = b = ce: the norm²)
         off = m * PQ_DS
         return (
-            f"list_reduce(list_prepend(0.0, [CAST(qe[{off} + i] AS DOUBLE) * "
-            f"CAST(ce[{off} + i] AS DOUBLE) for i in range(1, {PQ_DS + 1})]), "
-            f"(acc, v) -> acc + v)"
-        )
-
-    def _pq_n2(m: int) -> str:
-        off = m * PQ_DS
-        return (
-            f"list_reduce(list_prepend(0.0, [CAST(ce[{off} + i] AS DOUBLE) * "
-            f"CAST(ce[{off} + i] AS DOUBLE) for i in range(1, {PQ_DS + 1})]), "
+            f"list_reduce(list_prepend(0.0, [CAST({a}[{off} + i] AS DOUBLE) * "
+            f"CAST({b}[{off} + i] AS DOUBLE) for i in range(1, {PQ_DS + 1})]), "
             f"(acc, v) -> acc + v)"
         )
 
@@ -2525,27 +2415,32 @@ WITH {_pq_cb},
 SELECT vec_id, m, code, dist FROM pq_codes
 """
 
+    # the ADC inputs (similarity._pq_adc): codes, each vector's
+    # reconstructed norm from per-(subspace, code) norm² ints, the query
+    # set and its per-(subspace, code) partial-dot tables
     _pq_cb2 = "\nUNION ALL\n".join(
-        f"SELECT cent_id, {m} AS m, CAST(FLOOR({_pq_n2(m)} * 1000000) AS BIGINT) AS n2int "
+        f"SELECT cent_id, {m} AS m, CAST(FLOOR({_pq_dot(m, 'ce')} * 1000000) AS BIGINT) AS n2int "
         f"FROM pq_cb"
         for m in range(PQ_M)
     )
     _pq_dt = "\nUNION ALL\n".join(
         f"SELECT query_id, qn, cent_id AS qc, {m} AS qm, "
-        f"CAST(FLOOR({_pq_dotq(m)} * 1000000) AS BIGINT) AS pdint FROM q, pq_cb"
+        f"CAST(FLOOR({_pq_dot(m)} * 1000000) AS BIGINT) AS pdint FROM q, pq_cb"
         for m in range(PQ_M)
     )
-    _pq_topk_core = f"""{_pq_cb},
+    _pq_q = f"""q AS MATERIALIZED (
+  SELECT vec_id AS query_id, embedding AS qe, {_NORM.format(col="embedding")} AS qn
+  FROM embeddings WHERE {_QSET})"""
+    _pq_adc_base = f"""{_pq_cb},
 {_pq_codes},
 cb2 AS ({_pq_cb2}),
 recon AS MATERIALIZED (
   SELECT vec_id, SQRT(CAST(SUM(n2int) AS DOUBLE) / 1000000) AS rn
   FROM pq_codes JOIN cb2 ON pq_codes.m = cb2.m AND pq_codes.code = cb2.cent_id
   GROUP BY vec_id),
-q AS MATERIALIZED (
-  SELECT vec_id AS query_id, embedding AS qe, {_NORM.format(col="embedding")} AS qn
-  FROM embeddings WHERE {_QSET}),
-dt AS MATERIALIZED ({_pq_dt}),
+{_pq_q},
+dt AS MATERIALIZED ({_pq_dt})"""
+    _pq_core = f"""{_pq_adc_base},
 pq_scored AS (
   SELECT query_id, c.vec_id, qn, SUM(pdint) AS dint
   FROM pq_codes c JOIN dt ON c.m = dt.qm AND c.code = dt.qc
@@ -2554,107 +2449,49 @@ pq_scored AS (
 pq_pairs AS (
   SELECT query_id, s.vec_id AS cand_id,
          ROUND((CAST(dint AS DOUBLE) / 1000000) / (qn * rn), 6) AS approx_cosine
-  FROM pq_scored s JOIN recon USING (vec_id)),
-pq_ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY approx_cosine DESC, cand_id) AS rank
-  FROM pq_pairs)"""
+  FROM pq_scored s JOIN recon USING (vec_id))"""
+    _pq_top3 = f'{_ranked("pq_pairs", "approx_cosine")} WHERE rank <= 3'
 
     sql["ann_pq_topk"] = f"""
-WITH {_pq_topk_core}
+WITH {_pq_core}
 SELECT query_id, cand_id, approx_cosine, CAST(rank AS INT) AS rank
-FROM pq_ranked WHERE rank <= 3
+FROM {_pq_top3}
 """
+    sql["ann_recall_pq"] = f"""
+WITH {_pq_core},
+approx3 AS (SELECT query_id, cand_id FROM {_pq_top3}),
+{_recall_tail}"""
 
-    from ..functions.similarity import PQ_RERANK
+    from ..functions.similarity import IVFPQ_RERANK, PQ_RERANK
 
     _rr_dot = _fold_dot("qe[i]", "e.embedding[i]", DIM)
     _rr_en = _NORM.format(col="e.embedding")
-    _pq_rerank_core = f"""{_pq_topk_core},
-short AS (SELECT query_id, cand_id FROM pq_ranked WHERE rank <= {PQ_RERANK}),
-rr AS (
+
+    def _rerank_ctes(p: str, approx: str, budget: int) -> str:
+        """Exact-cosine top-3 ({p}_top3) over each query's top-`budget`
+        rows of the `approx` CTE (similarity._exact_rerank)."""
+        return f"""{p}_short AS (
+  SELECT query_id, cand_id FROM {_ranked(approx, "approx_cosine")}
+  WHERE rank <= {budget}),
+{p}_rr AS (
   SELECT s.query_id, s.cand_id,
          ROUND({_rr_dot} / (q.qn * {_rr_en}), 6) AS cosine
-  FROM short s JOIN q ON s.query_id = q.query_id
-               JOIN embeddings e ON e.vec_id = s.cand_id),
-rr_ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, cand_id) AS rank
-  FROM rr)"""
+  FROM {p}_short s JOIN q ON s.query_id = q.query_id
+       JOIN embeddings e ON e.vec_id = s.cand_id),
+{p}_top3 AS (
+  SELECT query_id, cand_id, cosine, CAST(rank AS INT) AS rank
+  FROM {_ranked(f"{p}_rr")} WHERE rank <= 3)"""
 
-    sql["ann_pq_rerank"] = f"""
-WITH {_pq_rerank_core}
-SELECT query_id, cand_id, cosine, CAST(rank AS INT) AS rank
-FROM rr_ranked WHERE rank <= 3
-"""
-
-    _brute_dot = _fold_dot("qe[i]", "e.embedding[i]", DIM)
-    _brute_qn = _NORM.format(col="qe")
-    _brute_en = _NORM.format(col="e.embedding")
-    _recall_tail = f"""
-bq AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE {_QSET}),
-bp AS (
-  SELECT bq.query_id, e.vec_id AS cand_id,
-    ROUND({_brute_dot.replace('qe[i]', 'bq.qe[i]')} / ({_NORM.format(col='bq.qe')} * {_brute_en}), 6) AS cosine
-  FROM embeddings e, bq WHERE e.vec_id <> bq.query_id
-),
-brute3 AS (
-  SELECT query_id, cand_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, cand_id) AS rank FROM bp)
-  WHERE rank <= 3
-),
-hits AS (SELECT brute3.query_id, COUNT(*) AS n
-         FROM brute3 JOIN approx3 USING (query_id, cand_id) GROUP BY 1)
-SELECT qq.query_id, CAST(COALESCE(n, 0) AS BIGINT) AS n_overlap,
-       ROUND(COALESCE(n, 0) / 3.0, 6) AS recall
-FROM (SELECT DISTINCT query_id FROM brute3) qq LEFT JOIN hits USING (query_id)
-"""
-
-    sql["ann_recall_pq_rerank"] = f"""
-WITH {_pq_rerank_core},
-approx3 AS (SELECT query_id, cand_id FROM rr_ranked WHERE rank <= 3),
-{_recall_tail}"""
-
-    sql["ann_recall_pq"] = f"""
-WITH {_pq_topk_core},
-pq3 AS (SELECT query_id, cand_id FROM pq_ranked WHERE rank <= 3),
-bq AS (SELECT vec_id AS query_id, embedding AS qe FROM embeddings WHERE {_QSET}),
-bp AS (
-  SELECT bq.query_id, e.vec_id AS cand_id,
-    ROUND({_brute_dot} / ({_brute_qn} * {_brute_en}), 6) AS cosine
-  FROM embeddings e, bq WHERE e.vec_id <> bq.query_id
-),
-brute3 AS (
-  SELECT query_id, cand_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY cosine DESC, cand_id) AS rank FROM bp)
-  WHERE rank <= 3
-),
-hits AS (SELECT brute3.query_id, COUNT(*) AS n
-         FROM brute3 JOIN pq3 USING (query_id, cand_id) GROUP BY 1)
-SELECT qq.query_id, CAST(COALESCE(n, 0) AS BIGINT) AS n_overlap,
-       ROUND(COALESCE(n, 0) / 3.0, 6) AS recall
-FROM (SELECT DISTINCT query_id FROM brute3) qq LEFT JOIN hits USING (query_id)
-"""
+    _search_and_recall(
+        "ann_pq_rerank", "ann_recall_pq_rerank",
+        f"{_pq_core},\n{_rerank_ctes('pq', 'pq_pairs', PQ_RERANK)}", "pq_top3",
+    )
 
     # ---- IVF-PQ: the composed index (Lloyd cells gate the candidates,
     # PQ codes score them, exact cosine re-ranks the shortlist) ----
-    from ..functions.similarity import IVFPQ_RERANK
-
-    _ivfpq_core = f"""{_LLOYD_CTES},
-{_pq_cb},
-{_pq_codes},
-cb2 AS ({_pq_cb2}),
-recon AS MATERIALIZED (
-  SELECT vec_id, SQRT(CAST(SUM(n2int) AS DOUBLE) / 1000000) AS rn
-  FROM pq_codes JOIN cb2 ON pq_codes.m = cb2.m AND pq_codes.code = cb2.cent_id
-  GROUP BY vec_id),
-q AS MATERIALIZED (
-  SELECT vec_id AS query_id, embedding AS qe, {_NORM.format(col="embedding")} AS qn
-  FROM embeddings WHERE {_QSET}),
-dt AS MATERIALIZED ({_pq_dt}),
-qs AS (
+    # the coarse probe (similarity._probe_pairs): each query's NPROBE_L8
+    # nearest Lloyd cells, paired with their members
+    _ivfpq_probe = f"""qs AS (
   SELECT query_id, cent_id,
          ROUND({q_cent_dot} / ({cent_norm} * qn), 6) AS cos_c
   FROM q, cents_l{LLOYD_ITERS}),
@@ -2666,7 +2503,10 @@ qcells AS (
 cpairs AS MATERIALIZED (
   SELECT qc2.query_id, cl.vec_id
   FROM cells_l cl JOIN qcells qc2 ON cl.cell = qc2.qcell
-  WHERE cl.vec_id <> qc2.query_id),
+  WHERE cl.vec_id <> qc2.query_id)"""
+    _ivfpq_core = f"""{_LLOYD_CTES},
+{_pq_adc_base},
+{_ivfpq_probe},
 adc AS (
   SELECT p.query_id, p.vec_id, SUM(pdint) AS dint
   FROM cpairs p JOIN pq_codes c ON c.vec_id = p.vec_id
@@ -2676,31 +2516,8 @@ ivfpq_pairs AS (
   SELECT a.query_id, a.vec_id AS cand_id,
          ROUND((CAST(dint AS DOUBLE) / 1000000) / (q.qn * r.rn), 6) AS approx_cosine
   FROM adc a JOIN q ON a.query_id = q.query_id JOIN recon r ON a.vec_id = r.vec_id),
-ivfpq_short AS (
-  SELECT query_id, cand_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY approx_cosine DESC, cand_id) AS rk FROM ivfpq_pairs)
-  WHERE rk <= {IVFPQ_RERANK}),
-ivfpq_rr AS (
-  SELECT s.query_id, s.cand_id,
-         ROUND({_rr_dot} / (q.qn * {_rr_en}), 6) AS cosine
-  FROM ivfpq_short s JOIN q ON s.query_id = q.query_id
-       JOIN embeddings e ON e.vec_id = s.cand_id),
-ivfpq_ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, cand_id) AS rank
-  FROM ivfpq_rr)"""
-
-    sql["ann_ivfpq_rerank"] = f"""
-WITH {_ivfpq_core}
-SELECT query_id, cand_id, cosine, CAST(rank AS INT) AS rank
-FROM ivfpq_ranked WHERE rank <= 3
-"""
-
-    sql["ann_recall_ivfpq"] = f"""
-WITH {_ivfpq_core},
-approx3 AS (SELECT query_id, cand_id FROM ivfpq_ranked WHERE rank <= 3),
-{_recall_tail}"""
+{_rerank_ctes("ivfpq", "ivfpq_pairs", IVFPQ_RERANK)}"""
+    _search_and_recall("ann_ivfpq_rerank", "ann_recall_ivfpq", _ivfpq_core, "ivfpq_top3")
 
     # ---- RESIDUAL IVF-PQ (the faithful FAISS shape): PQ codebooks are
     # trained on x − c_cell, the ADC decomposes q·x̂ = q·c_cell + q·r̂,
@@ -2708,14 +2525,6 @@ approx3 AS (SELECT query_id, cand_id FROM ivfpq_ranked WHERE rank <= 3),
     # from three integer tables.  Every partial is a floor(x·1e6) bigint
     # (the Lloyd discipline); GREATEST(·,0) guards the ≤32-ulp floor
     # slack on the norm² in BOTH engines. ----
-    def _pq_dot2(m: int, a: str, b: str) -> str:
-        off = m * PQ_DS
-        return (
-            f"list_reduce(list_prepend(0.0, [CAST({a}[{off} + i] AS DOUBLE) * "
-            f"CAST({b}[{off} + i] AS DOUBLE) for i in range(1, {PQ_DS + 1})]), "
-            f"(acc, v) -> acc + v)"
-        )
-
     _res_emb = f"""res_emb AS MATERIALIZED (
   SELECT cl.vec_id,
          [CAST(e.embedding[j] AS DOUBLE) - CAST(c.ce[j] AS DOUBLE)
@@ -2723,30 +2532,30 @@ approx3 AS (SELECT query_id, cand_id FROM ivfpq_ranked WHERE rank <= 3),
   FROM cells_l cl JOIN embeddings e ON e.vec_id = cl.vec_id
        JOIN cents_l{LLOYD_ITERS} c ON c.cent_id = cl.cell)"""
     _rcb2 = "\nUNION ALL\n".join(
-        f"SELECT cent_id, {m} AS m, CAST(FLOOR({_pq_n2(m)} * 1000000) AS BIGINT)"
+        f"SELECT cent_id, {m} AS m, CAST(FLOOR({_pq_dot(m, 'ce')} * 1000000) AS BIGINT)"
         f" AS r2int FROM rpq_cb"
         for m in range(PQ_M)
     )
     _ccn2_parts = "\nUNION ALL\n".join(
-        f"SELECT cent_id, CAST(FLOOR({_pq_n2(m)} * 1000000) AS BIGINT) AS v "
+        f"SELECT cent_id, CAST(FLOOR({_pq_dot(m, 'ce')} * 1000000) AS BIGINT) AS v "
         f"FROM cents_l{LLOYD_ITERS}"
         for m in range(PQ_M)
     )
     _cross_parts = "\nUNION ALL\n".join(
         f"SELECT c.cent_id AS xcell, r.cent_id AS xcode, {m} AS xm, "
-        f"CAST(FLOOR({_pq_dot2(m, 'c.ce', 'r.ce')} * 1000000) AS BIGINT) AS crint "
+        f"CAST(FLOOR({_pq_dot(m, 'c.ce', 'r.ce')} * 1000000) AS BIGINT) AS crint "
         f"FROM cents_l{LLOYD_ITERS} c, rpq_cb r"
         for m in range(PQ_M)
     )
     _qc_parts = "\nUNION ALL\n".join(
         f"SELECT query_id, cent_id AS qccell, "
-        f"CAST(FLOOR({_pq_dot2(m, 'qe', 'ce')} * 1000000) AS BIGINT) AS v "
+        f"CAST(FLOOR({_pq_dot(m)} * 1000000) AS BIGINT) AS v "
         f"FROM q, cents_l{LLOYD_ITERS}"
         for m in range(PQ_M)
     )
     _rdt = "\nUNION ALL\n".join(
         f"SELECT query_id, cent_id AS qc, {m} AS qm, "
-        f"CAST(FLOOR({_pq_dotq(m)} * 1000000) AS BIGINT) AS pdint FROM q, rpq_cb"
+        f"CAST(FLOOR({_pq_dot(m)} * 1000000) AS BIGINT) AS pdint FROM q, rpq_cb"
         for m in range(PQ_M)
     )
     _ivfpq_res_core = f"""{_LLOYD_CTES},
@@ -2756,9 +2565,7 @@ approx3 AS (SELECT query_id, cand_id FROM ivfpq_ranked WHERE rank <= 3),
 rcb2 AS ({_rcb2}),
 ccn2 AS (SELECT cent_id, SUM(v) AS c2int FROM ({_ccn2_parts}) GROUP BY cent_id),
 cross_t AS MATERIALIZED ({_cross_parts}),
-q AS MATERIALIZED (
-  SELECT vec_id AS query_id, embedding AS qe, {_NORM.format(col="embedding")} AS qn
-  FROM embeddings WHERE {_QSET}),
+{_pq_q},
 qcs AS (SELECT query_id, qccell, SUM(v) AS qcint FROM ({_qc_parts})
         GROUP BY query_id, qccell),
 recon_r AS MATERIALIZED (
@@ -2772,19 +2579,7 @@ recon_r AS MATERIALIZED (
   JOIN ccn2 cc ON cc.cent_id = cl.cell
   GROUP BY cds.vec_id, cl.cell),
 rdt AS MATERIALIZED ({_rdt}),
-qs AS (
-  SELECT query_id, cent_id,
-         ROUND({q_cent_dot} / ({cent_norm} * qn), 6) AS cos_c
-  FROM q, cents_l{LLOYD_ITERS}),
-qcells AS (
-  SELECT query_id, cent_id AS qcell FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY cos_c DESC, cent_id) AS rk FROM qs)
-  WHERE rk <= {NPROBE_L8}),
-cpairs AS MATERIALIZED (
-  SELECT qc2.query_id, cl.vec_id
-  FROM cells_l cl JOIN qcells qc2 ON cl.cell = qc2.qcell
-  WHERE cl.vec_id <> qc2.query_id),
+{_ivfpq_probe},
 radc AS (
   SELECT p.query_id, p.vec_id, SUM(pdint) AS dres
   FROM cpairs p JOIN rpq_codes c ON c.vec_id = p.vec_id
@@ -2798,31 +2593,10 @@ res_pairs AS (
   JOIN recon_r r ON a.vec_id = r.vec_id
   JOIN qcs ON qcs.query_id = a.query_id AND qcs.qccell = r.cell
   JOIN q ON a.query_id = q.query_id),
-res_short AS (
-  SELECT query_id, cand_id FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-                 ORDER BY approx_cosine DESC, cand_id) AS rk FROM res_pairs)
-  WHERE rk <= {IVFPQ_RERANK}),
-res_rr AS (
-  SELECT s.query_id, s.cand_id,
-         ROUND({_rr_dot} / (q.qn * {_rr_en}), 6) AS cosine
-  FROM res_short s JOIN q ON s.query_id = q.query_id
-       JOIN embeddings e ON e.vec_id = s.cand_id),
-res_ranked AS (
-  SELECT *, row_number() OVER (PARTITION BY query_id
-               ORDER BY cosine DESC, cand_id) AS rank
-  FROM res_rr)"""
-
-    sql["ann_ivfpq_res_rerank"] = f"""
-WITH {_ivfpq_res_core}
-SELECT query_id, cand_id, cosine, CAST(rank AS INT) AS rank
-FROM res_ranked WHERE rank <= 3
-"""
-
-    sql["ann_recall_ivfpq_res"] = f"""
-WITH {_ivfpq_res_core},
-approx3 AS (SELECT query_id, cand_id FROM res_ranked WHERE rank <= 3),
-{_recall_tail}"""
+{_rerank_ctes("res", "res_pairs", IVFPQ_RERANK)}"""
+    _search_and_recall(
+        "ann_ivfpq_res_rerank", "ann_recall_ivfpq_res", _ivfpq_res_core, "res_top3"
+    )
 
     from .events import FUNNEL_WINDOW_US
 

@@ -188,3 +188,21 @@ def test_zero_vector_both_paths_fail_loudly(spark):
     with _pt.raises(Exception) as exc:
         _assign_cells(e, cents).collect()
     assert "zero-norm" in str(exc.value)
+
+
+def test_centroid_collect_bound_raises(spark, monkeypatch):
+    """_cand_scored collects the centroid frame to ship it as the model;
+    a frame above SEM_K_MULT * K_MAX_CENTROIDS rows must fail with a
+    clear error (a raise, which python -O keeps), never ship an
+    unbounded model."""
+    import rapidocr_spark.functions.similarity as sim
+    from pyspark.sql import Row
+
+    e = spark.createDataFrame(
+        [Row(vec_id=i, embedding=[float((i * 7 + j) % 5 - 2) for j in range(64)])
+         for i in range(40)]
+    )
+    cents = e.select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"))
+    monkeypatch.setattr(sim, "K_MAX_CENTROIDS", 8)  # bound 2 * 8 = 16 < 40 rows
+    with pytest.raises(ValueError, match="collect bound"):
+        _cand_scored(e, cents, 1)

@@ -48,13 +48,18 @@ def test_knn_brute_is_broadcast_one_pass(spark):
     assert "SortMergeJoin" not in plan
 
 
-def test_ivf_candidate_join_is_broadcast_hash(spark):
-    """IVF search joins candidates to the broadcast probed-cell set via a
+@pytest.mark.parametrize(
+    "name", ["ann_ivf_topk", "ann_ivf_topk_probe2", "ann_ivf_topk_l8"]
+)
+def test_ivf_candidate_join_is_broadcast_hash(spark, name):
+    """Every IVF search (home cell, nprobe=2, Lloyd nprobe=8) joins
+    candidates to the broadcast query/probed-cell set via a
     BroadcastHashJoin on the cell key — never a shuffle of the corpus."""
-    from rapidocr_spark.functions.similarity import ann_ivf_topk
+    from rapidocr_spark.functions import similarity
 
-    plan = _formatted(ann_ivf_topk(spark, SF_DIR))
+    plan = _formatted(getattr(similarity, name)(spark, SF_DIR))
     assert "BroadcastHashJoin" in plan
+    assert "SortMergeJoin" not in plan
 
 
 def test_extraction_single_python_stage_per_route(spark):

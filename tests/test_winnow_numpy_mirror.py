@@ -58,7 +58,7 @@ def test_numpy_postings_edge_short_and_empty_docs(spark):
         (5, "x" * (SS_K + SS_W - 2)),  # hashes shorter than the window
         (6, "the the the the the the the the"),  # repeats → distinct dedup
         (7, "héllo wörld ünïcode ça va très bien aujourd'hui"),  # non-ASCII
-        (8, None),                     # NULL text → no rows (null propagation)
+        (8, None),                     # NULL text → one (doc_id, NULL, NULL) row
     ]
     d = spark.createDataFrame(rows, "doc_id long, text string")
     got = sorted(map(tuple, _winnow_postings(d).collect()))
