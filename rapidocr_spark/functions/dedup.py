@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .caching import track, track_persist
-from .text import POLY_P, kgram_hash_frame, poly_hash
+from .text import POLY_P, _docs, poly_hash
 
 SHINGLE_N = 4          # tokens per shingle
 MAX_SHINGLE_DF = 100   # stop-shingle cap (skew guard)
@@ -39,14 +39,6 @@ MINHASH_AB = [  # (a, b) pairs, fixed constants shared with the SQL oracle
 SIMHASH_BITS = 16
 
 
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # row-group-starved corpus files scan as ONE task; spread_parquet
-    # repartitions only when the scan can't split wide enough itself
-    from ..io.spread import spread_parquet
-
-    return spread_parquet(spark, f"{sf_dir}/documents.parquet", "doc_id")
-
-
 def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Every doc mapped to the canonical (min doc_id) holder of its text.
     The window partitions on md5(text), not the raw body — a 32-char
@@ -59,6 +51,30 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).over(w).cast("bigint").alias("n_copies"),
         (F.col("doc_id") != F.min("doc_id").over(w)).alias("is_dup"),
     )
+
+
+CHUNK_DOCS = 512          # _shingles_np vectorisation width cap
+CHUNK_CHARS = 2_000_000  # _shingles_np padded-matrix memory cap (cells)
+
+
+def _shingle_chunks(parsed: list) -> list:
+    """Split _shingles_np's parsed docs (doc_id, joined, starts, lens)
+    into vectorisation chunks, in order.  The prefix-scan matrices are
+    (n_docs, longest_doc), so a chunk is flushed before the PADDED size
+    (len(cur)+1) · max(lmax, len(doc)) would pass CHUNK_CHARS — one long
+    document can never inflate the padding of its neighbours (a doc
+    longer than the cap alone forms its own 1-row chunk)."""
+    chunks, cur, lmax = [], [], 0
+    for doc in parsed:
+        n = len(doc[1])
+        if cur and (len(cur) >= CHUNK_DOCS or (len(cur) + 1) * max(lmax, n) > CHUNK_CHARS):
+            chunks.append(cur)
+            cur, lmax = [], 0
+        cur.append(doc)
+        lmax = max(lmax, n)
+    if cur:
+        chunks.append(cur)
+    return chunks
 
 
 def _shingles_np(batches):
@@ -86,11 +102,6 @@ def _shingles_np(batches):
 
     SPLIT = re.compile(r"\s+", re.ASCII)
     P, A, N = POLY_P, 31, SHINGLE_N
-    CHUNK_DOCS = 512        # vectorisation width cap
-    CHUNK_CHARS = 2_000_000  # padded-matrix memory cap: the prefix-scan
-    # matrices are (n_docs, longest_doc) — chunking by CUMULATIVE chars
-    # keeps one long-document outlier from inflating the padding for 511
-    # neighbours (a lone huge doc simply forms its own 1-row chunk)
     for batch in batches:
         all_ids = batch.column("doc_id").to_pylist()
         all_texts = batch.column("text").to_pylist()
@@ -105,20 +116,7 @@ def _shingles_np(batches):
             starts = np.zeros(len(toks), dtype=np.int64)
             np.cumsum(lens[:-1] + 1, out=starts[1:])
             parsed.append((did, " ".join(toks), starts, lens))
-        chunks = []
-        cur, cur_chars = [], 0
-        for doc in parsed:
-            if cur and (
-                len(cur) >= CHUNK_DOCS
-                or cur_chars + len(doc[1]) > CHUNK_CHARS
-            ):
-                chunks.append(cur)
-                cur, cur_chars = [], 0
-            cur.append(doc)
-            cur_chars += len(doc[1])
-        if cur:
-            chunks.append(cur)
-        for docs in chunks:
+        for docs in _shingle_chunks(parsed):
             lmax = max(len(j) for _, j, _, _ in docs)
             cpm = np.zeros((len(docs), lmax), dtype=np.int64)
             for r, (_, joined, _, _) in enumerate(docs):
@@ -184,48 +182,58 @@ def _shingles(d: DataFrame) -> DataFrame:
     )
 
 
-def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Candidate near-dup pairs by token-4-gram Jaccard similarity.
+def _capped_pairs(
+    post: DataFrame, keys: tuple, cap: int, carry: tuple = ()
+) -> tuple[DataFrame, DataFrame]:
+    """The df-capped postings self-join every pair-shaped dedup query
+    shares: drop keys posted by more than ``cap`` rows (one window count
+    over the key — the stop-key skew guard, so no hot key can go
+    quadratic), persist the capped postings once (they feed both join
+    sides and any per-doc consumer), and self-join them on ``keys`` with
+    doc_a < doc_b, carrying each ``carry`` column as <c>_a / <c>_b.
+    Returns (capped postings, pairs)."""
+    n = F.count(F.lit(1)).over(Window.partitionBy(*keys))
+    capped = track_persist(post.withColumn("_df", n).where(F.col("_df") <= cap).drop("_df"))
 
-    The hashed-shingle frame is persisted twice: the raw explode feeds the
-    document-frequency filter AND the join input, and the df-capped frame
-    feeds the size aggregate plus BOTH sides of the self-join — without the
-    persists, the corpus re-scans and the per-shingle char-fold hash
-    re-runs up to 3× (VERDICT r01 item 5/6)."""
-    d = _docs(spark, sf_dir)
-    sh0 = track_persist(_shingles(d))
-    # stop-shingle removal: df-capped shingles only (skew guard at scale)
-    df_ok = (
-        sh0.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= MAX_SHINGLE_DF)
-        .select("shingle")
-    )
-    sh = track_persist(sh0.join(df_ok, "shingle"))
+    def side(s):
+        return capped.select(
+            *keys,
+            F.col("doc_id").alias(f"doc_{s}"),
+            *[F.col(c).alias(f"{c}_{s}") for c in carry],
+        )
+
+    pairs = side("a").join(side("b"), list(keys)).where(F.col("doc_a") < F.col("doc_b"))
+    return capped, pairs
+
+
+def _shingle_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_a, doc_b, n_inter, na, nb): shared df-capped shingle counts
+    per candidate pair plus each side's capped shingle-set size — the
+    common front of the Jaccard and containment scores.  The shingle
+    kernel runs once (its only consumer is the cap window); the capped
+    frame is the one persisted frame, read by the sizes and both join
+    sides."""
+    sh, pairs = _capped_pairs(_shingles(_docs(spark, sf_dir)), ("shingle",), MAX_SHINGLE_DF)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
+    inter = pairs.groupBy("doc_a", "doc_b").agg(F.count(F.lit(1)).alias("n_inter"))
     sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
     sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
-    out = (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_inter").cast("double")
-                / (F.col("na") + F.col("nb") - F.col("n_inter")),
-                6,
-            ),
-        )
+    return inter.join(sa, "doc_a").join(sb, "doc_b")
+
+
+def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Candidate near-dup pairs by token-4-gram Jaccard similarity.
+    Scored over _shingle_overlap's df-capped shingle sets."""
+    jaccard = F.round(
+        F.col("n_inter").cast("double") / (F.col("na") + F.col("nb") - F.col("n_inter")),
+        6,
+    )
+    return (
+        _shingle_overlap(spark, sf_dir)
+        .withColumn("jaccard", jaccard)
         .where(F.col("jaccard") >= JACCARD_MIN)
         .select("doc_a", "doc_b", F.col("n_inter").cast("bigint").alias("n_inter"), "jaccard")
     )
-    return out
 
 
 def _minhash_over(sh: DataFrame) -> DataFrame:
@@ -245,34 +253,14 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     |A∩B| / min(|A|,|B|) clears OVERLAP_MIN — the asymmetric complement
     of Jaccard that catches a document quoted or embedded inside a larger
     one (Jaccard stays low when sizes differ wildly; containment does
-    not).  Same scale shape as dedup_ngram_jaccard: hashed bigint shingle
-    keys, stop-shingle df cap before the self-join, persisted
-    multi-consumer frames; plus the directional containment fractions so
-    a consumer can tell which side is the (near-)subset."""
-    d = _docs(spark, sf_dir)
-    sh0 = track_persist(_shingles(d))
-    df_ok = (
-        sh0.groupBy("shingle")
-        .agg(F.count(F.lit(1)).alias("df"))
-        .where(F.col("df") <= MAX_SHINGLE_DF)
-        .select("shingle")
-    )
-    sh = track_persist(sh0.join(df_ok, "shingle"))
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
-    a, b = sh.alias("a"), sh.alias("b")
-    inter = (
-        a.join(b, (F.col("a.shingle") == F.col("b.shingle")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .agg(F.count(F.lit(1)).alias("n_inter"))
-    )
-    sa = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    sb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
+    not).  Same df-capped shingle pairs as dedup_ngram_jaccard
+    (_shingle_overlap); plus the directional containment fractions so a
+    consumer can tell which side is the (near-)subset."""
     overlap = F.round(
         F.col("n_inter").cast("double") / F.least(F.col("na"), F.col("nb")), 6
     )
     return (
-        inter.join(sa, "doc_a")
-        .join(sb, "doc_b")
+        _shingle_overlap(spark, sf_dir)
         .where(overlap >= OVERLAP_MIN)
         .select(
             "doc_a",
@@ -334,10 +322,10 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (linear work — the quadratic was only ever the band join) so the
     expensive shingle scan is identical to the pre-collapse plan; the
     rep filter then joins the NARROW signature frame (9 columns of
-    bigints) against the rep-id set; and the bucket df-cap is one window
-    count over the already-shuffled banding key, not an extra
-    aggregate+join round trip.  The persisted signature frame feeds both
-    sides of the self-join."""
+    bigints) against the rep-id set; and the bucket df-cap is
+    _capped_pairs' one window count over the banding key, not an extra
+    aggregate+join round trip, whose persisted capped band frame feeds
+    both sides of the self-join."""
     d = _docs(spark, sf_dir)
     keyed = d.select("doc_id", F.md5(F.col("text")).alias("k"))
     canon = track_persist(
@@ -354,25 +342,8 @@ def lsh_candidate_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stream (round-8 profile: the banding stage was 4× the signature
     # cost at sf1.0)
     rep_sig = track_persist(sig.join(rep_ids, "doc_id"))
-    wb = Window.partitionBy("band", "v0", "v1")
-    banded = track_persist(
-        _banded(rep_sig)
-        .withColumn("bdf", F.count(F.lit(1)).over(wb))
-        .where(F.col("bdf") <= MAX_BAND_DF)
-        .drop("bdf")
-    )
-    a, b = banded.alias("a"), banded.alias("b")
-    rep_pairs = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.v0") == F.col("b.v0"))
-            & (F.col("a.v1") == F.col("b.v1"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
+    _, band_pairs = _capped_pairs(_banded(rep_sig), ("band", "v0", "v1"), MAX_BAND_DF)
+    rep_pairs = band_pairs.select("doc_a", "doc_b").distinct()
     star = canon.where(F.col("doc_id") != F.col("canonical_id")).select(
         F.col("canonical_id").alias("doc_a"), F.col("doc_id").alias("doc_b")
     )
@@ -594,7 +565,7 @@ SS_GAP = 16          # max anchor-start gap inside one run (2·SS_W: interior
 SS_MIN_SPAN = 24     # emit runs covering at least this many chars
 MAX_FP_DF_SS = 16    # stop-fingerprint doc-frequency cap (skew guard, the
                      # MAX_SHINGLE_DF/MAX_BAND_DF discipline): bounds the
-                     # postings self-join at <= df²/2 pairs per fingerprint;
+                     # docs paired per fingerprint at df <= 16;
                      # ubiquitous boilerplate (df above the cap) is out of
                      # scope for the PAIRWISE span report by design
 SS_LIFT = 4_294_967_296  # (fp, pos) -> fp·2³² + pos bigint encoding — keeps
@@ -697,36 +668,33 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shared-substring span detection between document pairs (the
     suffix-dedup modality, Spark-shaped): winnowing fingerprints WITH
     POSITIONS (Schleimer/Wilkerson/Aiken selection, k=16/w=8 as in
-    doc_winnow_fingerprints) → df-capped postings self-join → runs of
+    doc_winnow_fingerprints) → df-capped per-fingerprint pairs → runs of
     near-consecutive shared anchors on one positional diagonal
     (pos_b − pos_a constant across a shared region) → per-run span
     extents in both documents.
 
-    Scale shape (no all-pairs anywhere): the join key is the fingerprint
-    (hash-partitioned), stop-fingerprints with doc-frequency > MAX_FP_DF_SS
-    are dropped BEFORE the join and singletons (df < 2) never enter it, so
-    per-fingerprint join fan-out is bounded by df² <= 256 rows; the run
-    assembly is one window partitioned by (doc_a, doc_b, diag).  At 100 TB
-    this scales by fingerprints exactly like the LSH band join."""
-    # Round-8 shuffle economy (guide §2.4): the old shape was postings →
-    # df aggregate → join back → fp self-join → lag window → run groupBy
-    # (~5 exchanges, and the window sorted 3.6M rows into 3.3M mostly-
-    # singleton (doc_a, doc_b, diag) groups).  Same results in TWO
-    # exchanges: group the postings by fingerprint ONCE (sorted occurrence
-    # lists, df cap applied to the aggregated row — no join), generate the
-    # ordered pairs map-side with a bounded nested HOF (per-fp fan-out is
-    # the same df² ≤ 256 the join had), then one exchange keys the runs
-    # by (doc_a, doc_b, diag) and a HOF run-splitter over each group's
-    # sorted positions replaces the lag-window + second aggregation.
-    # Row-for-row identical output (exact oracle unchanged, 3-scale
-    # parity green).
-    # df cap FIRST, as a bounded-state aggregate + semi-join, and only
-    # the surviving (df-capped) fingerprints are collect_list'ed into
-    # occurrence arrays: an unbounded-df boilerplate fingerprint (the
-    # population dedup_boilerplate_catalog exists for) must never be
-    # buffered into one aggregation row — the cap bounds per-fp state
-    # BEFORE any array materialisation, exactly like the pre-round-8
-    # join shape.  post is persisted for its two consumers (cap + group).
+    Scale shape (no all-pairs anywhere): postings are grouped by the
+    fingerprint (hash-partitioned), stop-fingerprints with doc-frequency
+    > MAX_FP_DF_SS are dropped BEFORE any pairing and singletons (df < 2)
+    never enter it; the run assembly is one exchange keyed by (doc_a,
+    doc_b, diag).  At 100 TB this scales by fingerprints exactly like
+    the LSH band join."""
+    # Shuffle economy (guide §2.4): postings → df cap → group by fp ONCE
+    # (sorted occurrence lists) → map-side ordered pairs → one exchange
+    # keys the runs by (doc_a, doc_b, diag), where a HOF run-splitter
+    # over each group's sorted positions replaces a lag window plus a
+    # second aggregation.
+    # The df cap runs FIRST, as a bounded-state aggregate + semi-join:
+    # an unbounded-df boilerplate fingerprint (the population
+    # dedup_boilerplate_catalog exists for) is never buffered into one
+    # aggregation row.  It is a DISTINCT-doc cap, not a row count,
+    # because a (doc, fp) can post several positions; so one capped
+    # fingerprint still holds occ = Σ positions ≥ df entries (a
+    # repetitive document makes occ ≫ df), and its pairs are occ²/2.
+    # They therefore stream: an outer explode over occ, then an inner
+    # explode over the later-doc entries, so no row holds an array longer
+    # than occ (pinned by tests/test_substring_dedup.py).
+    # post is persisted for its two consumers (cap + group).
     post = track_persist(_winnow_postings(_docs(spark, sf_dir)))
     eligible = (
         post.groupBy("fp")
@@ -739,22 +707,17 @@ def dedup_substring_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("fp")
         .agg(F.sort_array(F.collect_list(F.struct("doc_id", "pos"))).alias("occ"))
     )
-    pair = F.flatten(
-        F.transform(
-            F.col("occ"),
-            lambda x: F.transform(
-                F.filter(F.col("occ"), lambda y: y["doc_id"] > x["doc_id"]),
-                lambda y: F.struct(
-                    x["doc_id"].alias("doc_a"),
-                    y["doc_id"].alias("doc_b"),
-                    x["pos"].alias("pos_a"),
-                    (y["pos"] - x["pos"]).alias("diag"),
-                ),
-            ),
-        )
-    )
-    m = grouped.select(F.explode(pair).alias("e")).select(
-        "e.doc_a", "e.doc_b", "e.pos_a", "e.diag"
+    outer = grouped.select("occ", F.explode("occ").alias("x"))
+    later = F.filter(F.col("occ"), lambda y: y["doc_id"] > F.col("x.doc_id"))
+    m = outer.select(
+        F.col("x.doc_id").alias("doc_a"),
+        F.col("x.pos").alias("pos_a"),
+        F.explode(later).alias("y"),
+    ).select(
+        "doc_a",
+        F.col("y.doc_id").alias("doc_b"),
+        "pos_a",
+        (F.col("y.pos") - F.col("pos_a")).alias("diag"),
     )
     byd = m.groupBy("doc_a", "doc_b", "diag").agg(
         F.sort_array(F.collect_list("pos_a")).alias("ps")
@@ -827,7 +790,7 @@ def dedup_substring_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = _docs(spark, sf_dir)
     # the span report is referenced TWICE (doc_a extents ∪ doc_b extents)
     # and Catalyst does not CSE across union branches — without a persist
-    # the whole df-capped self-join pipeline runs twice (measured 10.9 s
+    # the whole df-capped pair pipeline runs twice (measured 10.9 s
     # vs 6.1 s at sf0.1)
     spans = track_persist(dedup_substring_spans(spark, sf_dir))
     iv = spans.select(
@@ -975,25 +938,14 @@ FUZZY_MAX_LEV = 3
 
 
 def _fuzzy_pairs(keyed: DataFrame) -> DataFrame:
-    """Shared blocking scaffold of both fuzzy twins: df-cap the blocks
-    (the LSH stop-bucket rule — a viral prefix cannot go quadratic),
-    self-join inside each block, score with Spark's codepoint
-    levenshtein, keep pairs within FUZZY_MAX_LEV.  The twins differ only
-    in the key projection they feed in."""
-    bdf = F.count(F.lit(1)).over(Window.partitionBy("block"))
-    f = track_persist(
-        keyed.withColumn("bdf", bdf).where(F.col("bdf") <= MAX_FUZZY_DF)
-    )
-    a = f.select(
-        F.col("doc_id").alias("doc_a"), F.col("key").alias("key_a"), "block"
-    )
-    b = f.select(
-        F.col("doc_id").alias("doc_b"), F.col("key").alias("key_b"), "block"
-    )
+    """Shared blocking scaffold of both fuzzy twins: df-capped block
+    self-join (_capped_pairs — the LSH stop-bucket rule, a viral prefix
+    cannot go quadratic), scored with Spark's codepoint levenshtein,
+    keeping pairs within FUZZY_MAX_LEV.  The twins differ only in the
+    key projection they feed in."""
+    _, pairs = _capped_pairs(keyed, ("block",), MAX_FUZZY_DF, carry=("key",))
     return (
-        a.join(b, "block")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .select(
+        pairs.select(
             "doc_a",
             "doc_b",
             F.levenshtein("key_a", "key_b").cast("int").alias("lev"),

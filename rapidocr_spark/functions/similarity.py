@@ -204,13 +204,7 @@ def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
     Centroids are broadcast; one pass over the embeddings — the
     inverted-file ANN scale path (probe a cell, not the corpus)."""
     e = _emb(spark, sf_dir)
-    scored = _cand_scored_catalyst(e, _centroids(e))
-    w = Window.partitionBy("vec_id").orderBy(F.col("cos_c").desc(), F.col("cent_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") == 1)
-        .select("vec_id", F.col("cent_id").alias("cell"), F.col("cos_c").alias("cell_cosine"))
-    )
+    return _assign_cells(e, _centroids(e))
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -363,41 +357,17 @@ def _cos_cand_kernel(cent_ids: list, cent_vecs: list, keep_top: int | None):
     return kern
 
 
-ASSIGN_KERNEL_MIN_K = 100  # kernel-vs-Catalyst crossover: the numpy path
-# pays fixed costs (the bounded centroid collect + a Python stage per
-# pass) that only amortise when N·K is large; K = ⌈√N⌉ tracks the corpus,
-# so K ≥ 100 ⇔ N ≥ ~10⁴ vectors.  A/B at sf1.0 (K=142/284): kernel
-# 19–36 s vs 26–46 s interleaved over the 3 heavy ANN queries; at
-# sf0.01 (K=32) the same kernel is ~1 s/query SLOWER — hence the
-# data-adaptive switch, with BOTH paths pinned bit-identical.  No tier up
-# to sf0.1 reaches the crossover: sf0.1 has 2,000 vectors, so K = 45 (90
-# for the semantic pass at SEM_K_MULT = 2); there only the forced-kernel
-# mirror tests (tests/test_assign_numpy_mirror.py) run _cos_cand_kernel.
-
-
-def _cand_scored_catalyst(e: DataFrame, cents: DataFrame) -> DataFrame:
-    """The Catalyst scoring form (all K candidates): broadcast cross
-    join + rounded fold cosine — the small-corpus path and the reference
-    the kernel is pinned against.  Norms are factored to per-row columns
-    (folded once per vector/centroid, not per pair), bit-identical to
-    the inline form."""
-    en = e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("_en"))
-    cn = cents.select("cent_id", "ce", _norm(F.col("ce")).alias("_cn"))
-    return en.crossJoin(F.broadcast(cn)).select(
-        "vec_id", "cent_id", _cos6("ce", "embedding", "_cn", "_en").alias("cos_c")
-    )
-
-
 def _cand_scored(e: DataFrame, cents: DataFrame, keep_top: int | None) -> DataFrame:
-    """(vec_id, cent_id, cos_c) candidate scores — numpy kernel above
-    the ASSIGN_KERNEL_MIN_K crossover, Catalyst cross join below.
+    """(vec_id, cent_id, cos_c) candidate scores from the numpy kernel
+    (_cos_cand_kernel), the only production scorer.
 
     The centroid frame is collected first — a BOUNDED model-class
     collect (≤ 2·K_MAX_CENTROIDS rows of 64 doubles, ≈4 MB worst case:
     the coarse quantiser IS the index's model, the same class as the
     BPE merge table and the NB weight broadcast), never a data collect.
     Rounding happens HERE in Spark, so no Python rounding mirror is
-    ever needed; both paths pinned bit-for-bit against each other by
+    ever needed; the raw scores are pinned bit-for-bit against the
+    Catalyst broadcast-cross-join form by
     tests/test_assign_numpy_mirror.py."""
     rows = cents.select("cent_id", "ce").collect()
     if len(rows) > SEM_K_MULT * K_MAX_CENTROIDS:
@@ -407,8 +377,6 @@ def _cand_scored(e: DataFrame, cents: DataFrame, keep_top: int | None) -> DataFr
             f"collect bound SEM_K_MULT * K_MAX_CENTROIDS = "
             f"{SEM_K_MULT * K_MAX_CENTROIDS}"
         )
-    if len(rows) < ASSIGN_KERNEL_MIN_K:
-        return _cand_scored_catalyst(e, cents)
     kern = _cos_cand_kernel(
         [int(r["cent_id"]) for r in rows],
         [[float(x) for x in r["ce"]] for r in rows],

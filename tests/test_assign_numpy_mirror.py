@@ -26,16 +26,6 @@ from rapidocr_spark.functions.similarity import (
 from rapidocr_spark.functions.caching import release_tracked
 
 
-@pytest.fixture(autouse=True)
-def _force_kernel_path(monkeypatch):
-    """The crossover (ASSIGN_KERNEL_MIN_K) routes small corpora to the
-    Catalyst path; these tests exist to pin the KERNEL, so force it on
-    regardless of scale."""
-    import rapidocr_spark.functions.similarity as sim
-
-    monkeypatch.setattr(sim, "ASSIGN_KERNEL_MIN_K", 0)
-
-
 def _catalyst_scored(e, cents):
     """The pre-round-8 Catalyst scoring (all K candidates), verbatim."""
     en = e.select("vec_id", "embedding", _norm(F.col("embedding")).alias("_en"))
@@ -148,22 +138,6 @@ def test_refine_centroids_bit_identical(spark):
         .collect()
     }
     assert got == want
-
-
-def test_default_routing_small_scale_is_catalyst_and_equal(spark, monkeypatch):
-    """With the real crossover, a small corpus takes the Catalyst path;
-    its output must equal the kernel-forced output (the two paths are
-    interchangeable by construction)."""
-    import rapidocr_spark.functions.similarity as sim
-
-    e = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet")
-    cents = _centroids(e)
-    monkeypatch.setattr(sim, "ASSIGN_KERNEL_MIN_K", 100)
-    small = sorted(map(tuple, sim._cand_scored(e, cents, 1).collect()))
-    monkeypatch.setattr(sim, "ASSIGN_KERNEL_MIN_K", 0)
-    forced = sim._cand_scored(e, cents, None)
-    full = sorted(map(tuple, forced.collect()))
-    assert small == full  # catalyst emits all K; kernel keep_top=None too
 
 
 def test_zero_vector_both_paths_fail_loudly(spark):

@@ -164,6 +164,35 @@ def test_lsh_plan_shows_canonical_prejoin(spark):
     assert "Union" in plan
 
 
+@pytest.mark.parametrize(
+    "name, keys",
+    [
+        ("dedup_ngram_jaccard", ["shingle"]),
+        ("dedup_containment", ["shingle"]),
+        ("lsh_candidate_pairs", ["band", "v0", "v1"]),
+        ("dedup_fuzzy_prefix", ["block"]),
+    ],
+)
+def test_df_capped_pairs_window_then_equi_join(spark, name, keys):
+    """Every df-capped dedup self-join has the one _capped_pairs shape:
+    the stop-key cap is a Window count, and the pairs come from an
+    equi-join on exactly the pairing key — never a cartesian or
+    nested-loop pairing of documents."""
+    import re
+
+    from rapidocr_spark.functions import dedup
+
+    plan = _formatted(getattr(dedup, name)(spark, SF_DIR))
+    assert "Window" in plan, plan
+    join_keys = [
+        [re.sub(r"#\d+L?$", "", k.strip()) for k in m.split(",")]
+        for m in re.findall(r"^Left keys \[\d+\]: \[(.*)\]$", plan, flags=re.M)
+    ]
+    assert keys in join_keys, join_keys
+    assert "CartesianProduct" not in plan
+    assert "BroadcastNestedLoopJoin" not in plan
+
+
 def test_salted_extraction_exchanges_on_conv_and_salt(spark):
     """x_extract_salted's heavy route must show an Exchange whose
     partitioning keys include conv_id AND the turn-hash salt — the

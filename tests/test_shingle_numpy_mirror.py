@@ -61,3 +61,19 @@ def test_numpy_shingles_edge_cases(spark):
     got = sorted(map(tuple, _shingles(d).collect()))
     want = sorted(map(tuple, _catalyst_shingles(d).collect()))
     assert got == want
+
+
+def test_chunks_bound_padded_matrix():
+    """_shingles_np's prefix-scan matrices are (n_docs × longest doc) per
+    chunk, so the chunk cap must bound that PADDED size, not the summed
+    characters: 500 tiny docs followed by one doc just under
+    CHUNK_CHARS fit a cumulative-chars budget together, and would pad to
+    ~501 × CHUNK_CHARS cells.  Every doc stays, in input order."""
+    from rapidocr_spark.functions.dedup import CHUNK_CHARS, _shingle_chunks
+
+    parsed = [(i, "tiny doc text", None, None) for i in range(500)]
+    parsed.append((500, "x" * (CHUNK_CHARS - 10_000), None, None))
+    chunks = _shingle_chunks(parsed)
+    padded = max(len(c) * max(len(doc[1]) for doc in c) for c in chunks)
+    assert padded <= CHUNK_CHARS
+    assert [doc[0] for c in chunks for doc in c] == list(range(501))

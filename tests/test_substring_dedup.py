@@ -82,3 +82,73 @@ def test_coverage_on_planted_corpus(spark, planted_dir):
         assert row.covered_chars >= longest
         assert row.n_regions <= row.n_spans
         assert abs(row.dup_frac - row.covered_chars / row.len_chars) < 1e-12
+
+
+def _generates(plan):
+    """Every Generate (explode) node of a JVM logical plan, depth-first."""
+    if plan.nodeName() == "Generate":
+        yield plan
+    children = plan.children()
+    for i in range(children.size()):
+        yield from _generates(children.apply(i))
+
+
+def test_span_pairs_stream_within_occurrence_list(spark, tmp_path):
+    """Memory bound of the span pair stage on a highly repetitive corpus:
+    two documents, each repeating one winnowing window (SS_W chars) over
+    1,000 times, so one df-2 fingerprint holds ~2,200 occurrences and
+    ~1.2M ordered pairs.  The df cap bounds distinct docs, not
+    occurrences, so the pairs must stream: no array that feeds a pair
+    explode may be longer than its row's occurrence list `occ` (a
+    flattened in-row pair array would be occ²/2 long), and the plan
+    has no flatten.  The rows equal the flattened form's on this
+    input (count, digest and end rows computed from it once)."""
+    import hashlib
+
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
+    from pyspark.sql.classic.column import Column
+
+    unit = "abcdefgh"[:SS_W]
+    pdf = pd.DataFrame(
+        [{"doc_id": 1, "text": unit * 1000}, {"doc_id": 2, "text": "zz" + unit * 1200}]
+    )
+    pdf["lang"] = "en"
+    pdf.to_parquet(os.path.join(tmp_path, "documents.parquet"))
+    df = dedup_substring_spans(spark, str(tmp_path))
+
+    qe = df._jdf.queryExecution()
+    assert "flatten" not in qe.analyzed().toString().lower()
+    jvm = spark._jvm
+    column = jvm.org.apache.spark.sql.classic.ExpressionUtils.column
+    checked = 0
+    for gen in _generates(qe.optimizedPlan()):
+        arr = gen.generator().children().apply(0)
+        refs = arr.references().toSeq()
+        if "occ" not in [refs.apply(i).name() for i in range(refs.size())]:
+            continue  # the run-splitter explode, not a pair explode
+        child = gen.child()
+        out = child.output()
+        occ = next(
+            out.apply(i) for i in range(out.size()) if out.apply(i).name() == "occ"
+        )
+        rows = DataFrame(
+            jvm.org.apache.spark.sql.classic.Dataset.ofRows(qe.sparkSession(), child),
+            spark,
+        )
+        got = rows.select(
+            F.max(F.size(Column(column(arr))) - F.size(Column(column(occ)))).alias("excess"),
+            F.max(F.size(Column(column(occ)))).alias("occ"),
+        ).first()
+        assert got["occ"] >= 2000, got  # the adversarial fingerprint is there
+        assert got["excess"] <= 0, got
+        checked += 1
+    assert checked >= 1
+
+    rows = sorted(tuple(r) for r in df.collect())
+    assert len(rows) == 2193
+    assert rows[:2] == [(1, 2, 7, 30, 9577, 9600, 24, 2), (1, 2, 7, 38, 9569, 9600, 32, 3)]
+    assert rows[-2:] == [(1, 2, 7967, 7998, 9, 40, 32, 3), (1, 2, 7975, 7998, 9, 32, 24, 2)]
+    assert hashlib.sha256(repr(rows).encode()).hexdigest() == (
+        "2c545b1dcee3b1ebd2cfba733f83de2a67696b21fbb65a09e742d73ea9d4dfb0"
+    )
