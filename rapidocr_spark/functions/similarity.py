@@ -582,8 +582,11 @@ def ann_ivf_topk_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall (measured: at sf0.1 mean recall@3 doubles, 0.111 → 0.222 —
     compare ann_recall_at_k vs ann_recall_probe2)."""
     e = _emb(spark, sf_dir)
-    cells = ann_ivf_cells(spark, sf_dir).select("vec_id", "cell")
-    return _ivf_search(e, cells, _centroids(e), 2)
+    # one centroid frame, persisted: _cand_scored collects it at build
+    # time for the assignment, and the lazy probe reads it again
+    cents = track_persist(_centroids(e))
+    cells = _assign_cells(e, cents).select("vec_id", "cell")
+    return _ivf_search(e, cells, cents, 2)
 
 
 def _recall_vs_brute(spark: SparkSession, sf_dir: str, ivf: DataFrame) -> DataFrame:

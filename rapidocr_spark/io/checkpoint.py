@@ -6,6 +6,16 @@ contract is:
 - results land in a parquet table partitioned by ``bucket = pmod(
   hash(conv_id), n_buckets)`` — the sandbox stand-in for an Iceberg table
   bucketed on conv_id (same pruning/clustering semantics, no catalog dep);
+- one run writes at most ONE file per bucket: the result rows are
+  hash-repartitioned on ``bucket`` into ``min(n_buckets,
+  defaultParallelism)`` write tasks before ``partitionBy("bucket")``, so
+  every bucket has exactly one writer.  Without it every extraction task
+  wrote into every bucket its rows touched (up to tasks × buckets files
+  per run, each a file open/close on the extraction critical path, and
+  that many more files for every resume's ``committed_keys`` scan).  The
+  shuffle moves result rows only (spans and text, ~0.5 KB a turn); the
+  payloads are consumed before it.  The partition count is explicit, so
+  AQE does not coalesce the shuffle into a single slow write task;
 - every row carries lineage: ``run_id``, ``stage_versions``,
   ``processed_at``;
 - a restart anti-joins the input against committed ``(conv_id, turn_idx)``
@@ -85,20 +95,25 @@ def run_extraction(
 
     results = extract_transcripts(todo, cfg)
 
+    out = (
+        results.withColumn("bucket", F.pmod(F.hash(F.col("conv_id")), F.lit(n_buckets)))
+        .withColumn("run_id", F.lit(run_id))
+        .withColumn("stage_versions", F.lit(STAGE_VERSIONS))
+        .withColumn("processed_at", F.current_timestamp())
+        # one writer per bucket → one file per bucket per run (docstring)
+        .repartition(min(n_buckets, spark.sparkContext.defaultParallelism), "bucket")
+    )
+    # observed ABOVE the shuffle, in the write stage: when a resume leaves
+    # no turns, AQE swaps the empty shuffle's subtree for an empty relation,
+    # and a metrics node below the shuffle would vanish with it
     obs = Observation(f"extract-{run_id}")
-    results = results.observe(
+    out = out.observe(
         obs,
         F.count(F.lit(1)).alias("turns"),
         F.sum("n_boxes").alias("boxes"),
         F.sum("n_chars").alias("chars"),
         F.count(F.col("error")).alias("errors"),
         F.count(F.when(F.col("extracted_text").isNull() & F.col("error").isNull(), 1)).alias("empty"),
-    )
-    out = (
-        results.withColumn("bucket", F.pmod(F.hash(F.col("conv_id")), F.lit(n_buckets)))
-        .withColumn("run_id", F.lit(run_id))
-        .withColumn("stage_versions", F.lit(STAGE_VERSIONS))
-        .withColumn("processed_at", F.current_timestamp())
     )
     out.write.mode("append").partitionBy("bucket").parquet(output_dir)
 

@@ -81,22 +81,5 @@ def glyph_bank() -> np.ndarray:
     return bank
 
 
-@lru_cache(maxsize=1)
-def packed_glyph_bank() -> np.ndarray:
-    """(n_charset, 9) uint8 — each glyph's 70 bits packed for popcount-LUT
-    hamming matching (the rec search path's fast distance kernel)."""
-    bank = glyph_bank()
-    return np.packbits(bank.reshape(bank.shape[0], -1), axis=1)
-
-
-# popcount lookup table for uint8 (np.bitwise_count needs numpy >= 2.0)
-POPCOUNT = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
-
-
-def pack_cells(cells: np.ndarray) -> np.ndarray:
-    """(n, GLYPH_H, GLYPH_W) bool/uint8 → (n, 9) packed uint8."""
-    return np.packbits(cells.reshape(cells.shape[0], -1).astype(np.uint8), axis=1)
-
-
 def renderable(text: str) -> bool:
     return all(c in CHAR_TO_IDX or c == " " for c in text)

@@ -31,10 +31,7 @@ import numpy as np
 
 from ..config import PipelineConfig
 from .ctc import ctc_greedy_decode
-from .font import (
-    BLANK_IDX, CELL_W, GLYPH_H, GLYPH_W, POPCOUNT, SPACE_IDX, glyph_bank,
-    pack_cells, packed_glyph_bank,
-)
+from .font import BLANK_IDX, CELL_W, GLYPH_H, GLYPH_W, SPACE_IDX, glyph_bank
 
 CONF_MATCH = 0.98
 CONF_APPROX = 0.91   # tolerant match on warped (scale>1) crops
@@ -43,12 +40,28 @@ REC_TOL = 6          # accepted bit flips (of 70) on the scale>1 path
 _SCALES = (1, 2, 3)
 _OFF = 2             # per-cell alignment search radius (px)
 
+# (n_classes, GLYPH_H·GLYPH_W) float32 glyph bits and their ink counts —
+# the right-hand operand of the matcher's Hamming GEMM (_hamming)
+GLYPH_MATRIX = glyph_bank().reshape(-1, GLYPH_H * GLYPH_W).astype(np.float32)
+_GLYPH_INK = GLYPH_MATRIX.sum(axis=1)
+
+
+def _hamming(cells: np.ndarray) -> np.ndarray:
+    """(..., GLYPH_H, GLYPH_W) binary cells → (..., n_classes) int32
+    Hamming distance to every glyph, as |a| + |b| − 2·(a @ B.T): one
+    float32 GEMM over all cells.  Every product, partial sum and result
+    is an integer ≤ GLYPH_H·GLYPH_W = 70, exact in float32 under any
+    summation order, so the distances are the exact integers (argmin
+    ties included)."""
+    a = (cells != 0).reshape(-1, GLYPH_H * GLYPH_W).astype(np.float32)
+    d = a.sum(axis=1, keepdims=True) + _GLYPH_INK - 2.0 * (a @ GLYPH_MATRIX.T)
+    return d.astype(np.int32).reshape(*cells.shape[:-2], GLYPH_MATRIX.shape[0])
+
 
 def _cell_logit_rows(crop_bin: np.ndarray) -> np.ndarray | None:
     """Locate the glyph grid in a binarised crop and emit per-cell
     (index, prob) pairs as a (n_cells, n_classes) one-hot-ish matrix."""
-    bank = glyph_bank()
-    n_classes = bank.shape[0]
+    n_classes = GLYPH_MATRIX.shape[0]
     row_sums = crop_bin.sum(axis=1)
     if row_sums.sum() == 0:
         return None
@@ -71,7 +84,7 @@ def _cell_logit_rows(crop_bin: np.ndarray) -> np.ndarray | None:
         if cw > 0:
             cells[k, :, :cw] = crop_bin[gy0:ur, cx : cx + cw]
     # vectorised template match: hamming distance to every glyph
-    diff = (cells[:, None, :, :] != bank[None, :, :, :]).sum(axis=(2, 3))
+    diff = _hamming(cells)
     diff[:, BLANK_IDX] = GLYPH_H * GLYPH_W + 1  # blank is never emitted by the net
     best = diff.argmin(axis=1)
     exact = diff[np.arange(n_cells), best] == 0
@@ -94,12 +107,11 @@ def _cell_logit_rows_search(crop_bin: np.ndarray) -> np.ndarray | None:
     Vectorised: per (scale, dy, dx) the WHOLE cell row is one strided
     strip (cell pitch k·CELL_W is a multiple of k, so a single aligned
     reshape downsamples every cell at once), and all cells match against
-    the glyph bank as packed 70-bit masks (xor + popcount LUT).  Scales
+    the glyph bank in one exact Hamming GEMM (_hamming).  Scales
     are tried starting from the underline-thickness estimate; the search
     stops once a scale explains the line well (total distance ≤ 1 bit per
     cell) — deterministic, since the order and threshold are fixed."""
-    bank_p = packed_glyph_bank()
-    n_classes = bank_p.shape[0]
+    n_classes = GLYPH_MATRIX.shape[0]
     row_sums = crop_bin.sum(axis=1)
     if row_sums.sum() == 0:
         return None
@@ -127,8 +139,8 @@ def _cell_logit_rows_search(crop_bin: np.ndarray) -> np.ndarray | None:
         strip_w = n_cells * k * CELL_W
         pad_r = max(0, x0g + _OFF + strip_w - w)
         padded = np.pad(crop_bin, ((0, 0), (0, pad_r))) if pad_r else crop_bin
-        # ALL valid (dy, dx) alignments matched in ONE batched xor+popcount
-        # pass (the 25-slice Python loop only collects views).  Reduction
+        # ALL valid (dy, dx) alignments matched in ONE batched Hamming
+        # GEMM (the 25-slice Python loop only collects views).  Reduction
         # semantics are identical to the old sequential strictly-less
         # update: argmin returns the FIRST minimum, so the earliest offset
         # in (dy, dx) iteration order wins ties, and within an offset the
@@ -176,10 +188,7 @@ def _cell_logit_rows_search(crop_bin: np.ndarray) -> np.ndarray | None:
         cells = g.reshape(n_off, GLYPH_H, n_cells, CELL_W).transpose(0, 2, 1, 3)[
             :, :, :, :GLYPH_W
         ]
-        cp = pack_cells(cells.reshape(n_off * n_cells, GLYPH_H, GLYPH_W))
-        diff = POPCOUNT[cp[:, None, :] ^ bank_p[None, :, :]].sum(
-            axis=2, dtype=np.int64
-        ).reshape(n_off, n_cells, n_classes)
+        diff = _hamming(cells)  # (n_off, n_cells, n_classes)
         diff[:, :, BLANK_IDX] = big
         cmin = diff.argmin(axis=2)  # (n_off, n_cells)
         dmin = np.take_along_axis(diff, cmin[:, :, None], axis=2)[:, :, 0]

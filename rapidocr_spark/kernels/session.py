@@ -7,7 +7,7 @@ analog is a session object created once per executor process from the
 frozen config plus (for the real backend) model bytes shipped via a Spark
 broadcast variable — executors never touch a filesystem path:
 
-- ``SyntheticSession``: the in-sandbox deterministic kernels (glyph bank
+- ``SyntheticSession``: the in-sandbox deterministic kernels (glyph matrix
   warmed once per process); normative for tests/benchmarks because this
   environment ships no model weights.
 - ``OnnxSession``: loads ``onnxruntime`` behind an availability-guarded
@@ -26,15 +26,15 @@ from ..config import PipelineConfig
 
 
 class SyntheticSession:
-    """Deterministic kernel-chain session: config + warmed glyph bank."""
+    """Deterministic kernel-chain session: config + warmed glyph matrix."""
 
     backend = "synthetic"
 
     def __init__(self, cfg: PipelineConfig):
-        from .font import glyph_bank, packed_glyph_bank
+        # importing rec builds the glyph bank and the matcher's
+        # (n_classes, 70) GLYPH_MATRIX once per executor
+        from .rec import GLYPH_MATRIX  # noqa: F401
 
-        glyph_bank()         # warm the template bank once per executor
-        packed_glyph_bank()  # and its packed popcount twin
         self.cfg = cfg
 
 

@@ -19,6 +19,14 @@ Architecture (SURVEY.md §3.1 ⇒ Spark):
   the expensive stage: per-turn work is independent, so turns of one
   conversation may spread across ``salt_buckets`` partitions; conversation-
   level assembly re-groups afterwards (SURVEY.md §4).
+- **The heavy branch comes first in the union.**  A union numbers its
+  partitions branch by branch and the scheduler launches tasks in
+  partition order, so the branch listed first gets the cores first.  The
+  Python tasks are the long ones and bound the stage; listed first they
+  launch at job start, and the short ``plain:`` tasks fill the cores as
+  heavy tasks finish.  Listed second, they could not launch until the
+  plain tasks had released the cores, and the stage ran the two sets
+  back to back.  Do not reorder the union.
 - **Per-executor session singleton**: the kernel "session" (glyph bank +
   frozen config) is initialised once per executor on first batch — the
   broadcast-ONNX-session analog of the reference's lru_cache model registry
@@ -227,7 +235,9 @@ def extract_transcripts(
     )
     heavy_out = heavy.mapInPandas(_heavy_stage(cfg, model_bc), schema=RESULT_FIELDS)
 
-    return plain_out.select([f.name for f in RESULT_FIELDS.fields]).unionByName(heavy_out)
+    # heavy branch FIRST so the Python tasks launch at job start (module
+    # docstring) — do not reorder
+    return heavy_out.unionByName(plain_out.select([f.name for f in RESULT_FIELDS.fields]))
 
 
 def extract_transcripts_multilang(

@@ -21,6 +21,22 @@ def _formatted(df) -> str:
     )
 
 
+def _first_union_child(node):
+    """Tree string of the first child of the first physical Union in
+    pre-order (looking through the AQE wrapper), or None."""
+    stack = [node]
+    while stack:
+        node = stack.pop()
+        name = node.getClass().getSimpleName()
+        if name == "UnionExec":
+            return node.children().apply(0).toString()
+        if name == "AdaptiveSparkPlanExec":
+            stack.append(node.executedPlan())
+        kids = node.children()
+        stack.extend(kids.apply(i) for i in reversed(range(kids.size())))
+    return None
+
+
 def test_docs_plain_scan_prunes_columns(spark):
     """x_extract_docs_plain projects 2 of the documents columns — the
     parquet ReadSchema must contain ONLY those (column pruning reached
@@ -80,6 +96,10 @@ def test_extraction_single_python_stage_per_route(spark):
     # extraction stage — never a second Python stage in the chain
     ops = re.findall(r"^\(\d+\) MapInPandas", plan, flags=re.M)
     assert len(ops) <= 3, plan
+    # the heavy (Python) branch is the union's FIRST child, so its tasks
+    # take the first partition indices and launch at job start
+    first = _first_union_child(out._jdf.queryExecution().executedPlan())
+    assert first is not None and "MapInPandas run(" in first, plan
 
 
 def test_dedup_exact_shuffles_on_hash_not_body(spark):

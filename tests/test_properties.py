@@ -117,17 +117,80 @@ def test_kmv_two_level_equals_direct_k_smallest(hs):
 
 
 # ---------------------------------------------------------------------------
-# round 3: the batched 25-offset popcount sweep must be indistinguishable
-# from the straightforward sequential implementation (first-strictly-
-# smaller update wins ties) on arbitrary binary crops
+# round 3: the batched 25-offset sweep must be indistinguishable from the
+# straightforward sequential implementation (first-strictly-smaller update
+# wins ties) on arbitrary binary crops; both production matchers' Hamming
+# GEMM must reproduce the pre-GEMM distance kernels (popcount LUT over
+# packed bits, elementwise != sum) bit for bit
+
+
+# popcount lookup table for uint8 (np.bitwise_count needs numpy >= 2.0)
+POPCOUNT = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
+
+
+def packed_glyph_bank() -> np.ndarray:
+    """(n_charset, 9) uint8 — each glyph's 70 bits packed for popcount."""
+    from rapidocr_spark.kernels.font import glyph_bank
+
+    bank = glyph_bank()
+    return np.packbits(bank.reshape(bank.shape[0], -1), axis=1)
+
+
+def pack_cells(cells: np.ndarray) -> np.ndarray:
+    """(n, GLYPH_H, GLYPH_W) bool/uint8 → (n, 9) packed uint8."""
+    return np.packbits(cells.reshape(cells.shape[0], -1).astype(np.uint8), axis=1)
+
+
+def _cell_logit_rows_reference(crop_bin):
+    """The pre-GEMM scale-1 grid matcher, kept as a test oracle: Hamming
+    distance as an elementwise != sum against the glyph bank."""
+    from rapidocr_spark.kernels.font import (
+        BLANK_IDX, CELL_W, GLYPH_H, GLYPH_W, SPACE_IDX, glyph_bank,
+    )
+    from rapidocr_spark.kernels.rec import CONF_MATCH, CONF_MISS
+
+    bank = glyph_bank()
+    n_classes = bank.shape[0]
+    row_sums = crop_bin.sum(axis=1)
+    if row_sums.sum() == 0:
+        return None
+    ur = int(np.argmax(row_sums))
+    if ur < GLYPH_H:
+        return None
+    xs = np.flatnonzero(crop_bin[ur])
+    if xs.size == 0:
+        return None
+    x0, x1 = int(xs[0]), int(xs[-1])
+    n_cells = (x1 - x0 + 2) // CELL_W
+    if n_cells <= 0:
+        return None
+    gy0 = ur - GLYPH_H
+    h, w = crop_bin.shape
+    cells = np.zeros((n_cells, GLYPH_H, GLYPH_W), dtype=np.uint8)
+    for k in range(n_cells):
+        cx = x0 + k * CELL_W
+        cw = min(GLYPH_W, w - cx)
+        if cw > 0:
+            cells[k, :, :cw] = crop_bin[gy0:ur, cx : cx + cw]
+    diff = (cells[:, None, :, :] != bank[None, :, :, :]).sum(axis=(2, 3))
+    diff[:, BLANK_IDX] = GLYPH_H * GLYPH_W + 1
+    best = diff.argmin(axis=1)
+    exact = diff[np.arange(n_cells), best] == 0
+    empty = cells.sum(axis=(1, 2)) == 0
+    out = np.zeros((n_cells, n_classes), dtype=np.float32)
+    for k in range(n_cells):
+        if empty[k]:
+            out[k, SPACE_IDX] = CONF_MATCH
+        else:
+            out[k, int(best[k])] = CONF_MATCH if exact[k] else CONF_MISS
+    return out
 
 
 def _search_sequential_reference(crop_bin):
     """The pre-batching sweep, kept as a test oracle: per (scale, dy, dx)
     one strip → downsample → pack → popcount diff → strictly-less update."""
     from rapidocr_spark.kernels.font import (
-        BLANK_IDX, CELL_W, GLYPH_H, GLYPH_W, POPCOUNT, SPACE_IDX,
-        pack_cells, packed_glyph_bank,
+        BLANK_IDX, CELL_W, GLYPH_H, GLYPH_W, SPACE_IDX,
     )
     from rapidocr_spark.kernels.rec import (
         CONF_APPROX, CONF_MATCH, CONF_MISS, REC_TOL, _OFF, _SCALES,
@@ -217,20 +280,22 @@ def _search_sequential_reference(crop_bin):
     st.floats(min_value=0.05, max_value=0.6),
 )
 def test_batched_offset_sweep_equals_sequential(seed, h, w, density):
-    from rapidocr_spark.kernels.rec import _cell_logit_rows_search
+    from rapidocr_spark.kernels.rec import _cell_logit_rows, _cell_logit_rows_search
 
     rng = np.random.default_rng(seed)
     crop = rng.random((h, w)) < density
     # plant a dense underline-ish row so the grid anchor is realistic
     ur = int(rng.integers(h // 2, h))
     crop[ur, : int(w * 0.9)] = True
-    got = _cell_logit_rows_search(crop)
-    want = _search_sequential_reference(crop)
-    if want is None:
-        assert got is None
-    else:
-        assert got is not None
-        np.testing.assert_array_equal(got, want)
+    for got, want in (
+        (_cell_logit_rows_search(crop), _search_sequential_reference(crop)),
+        (_cell_logit_rows(crop), _cell_logit_rows_reference(crop)),
+    ):
+        if want is None:
+            assert got is None
+        else:
+            assert got is not None
+            np.testing.assert_array_equal(got, want)
 
 
 # ---- round-5 kernels -------------------------------------------------------

@@ -66,3 +66,34 @@ def test_metrics_persisted(spark, tmp_path):
     assert saved["run_id"] == m["run_id"]
     assert saved["turns"] == sum(turns_per_conv(c) for c in range(3))
     assert saved["turns_per_sec"] > 0
+
+
+def test_one_file_per_bucket_per_run(spark, tmp_path):
+    """The sink gives every bucket ONE writer per run: each ``bucket=*``
+    dir holds exactly one parquet file per run_id, however many input
+    files, extraction tasks and union branches the run's rows came from."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    src = str(tmp_path / "src")
+    transcripts_df(spark, N).repartition(4).write.parquet(src)
+    assert len(glob.glob(f"{src}/*.parquet")) >= 4
+    inp = spark.read.parquet(src)
+    out = str(tmp_path / "extract_out")
+    m1 = run_extraction(spark, inp.where(F.col("conv_id") < "conv000006"), out, CFG)
+    m2 = run_extraction(spark, inp.where(F.col("conv_id") >= "conv000006"), out, CFG)
+    assert m1["turns"] and m2["turns"]
+
+    bucket_dirs = glob.glob(f"{out}/bucket=*")
+    assert bucket_dirs
+    seen = set()
+    for d in bucket_dirs:
+        runs = []
+        for f in glob.glob(f"{d}/*.parquet"):
+            ids = set(pq.read_table(f, columns=["run_id"]).column("run_id").to_pylist())
+            assert len(ids) == 1, (f, ids)
+            runs.extend(ids)
+        assert len(runs) == len(set(runs)), (d, runs)
+        seen.update(runs)
+    assert seen == {m1["run_id"], m2["run_id"]}
