@@ -66,13 +66,8 @@ class PipelineConfig:
     # keep the span payload lean
     rec_char_scores: bool = False
 
-    # ---- Reading order (W1, rapid_ocr_api.py:152-174) ----
-    line_merge_tolerance: float = 10.0  # Δy < 10px counts as same line
-
     # ---- Engine-side scale knobs (no reference analog; SURVEY.md §4) ----
     salt_buckets: int = 16           # salted repartition on conv_id
-    target_partitions: int = 0       # 0 = leave to AQE / input splits
-    arrow_max_records_per_batch: int = 1024
 
     # ---- Inference backend (S5/S6 session seam, kernels/session.py) ----
     # 'synthetic' = the deterministic in-sandbox kernels; 'onnx' = a real

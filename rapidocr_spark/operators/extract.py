@@ -176,7 +176,6 @@ def _heavy_stage(cfg: PipelineConfig, model_bc=None):
 def extract_transcripts(
     df: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    num_partitions: int | None = None,
     salt: str = "auto",
     model_bytes: bytes | dict[str, bytes] | None = None,
 ) -> DataFrame:
@@ -219,7 +218,7 @@ def extract_transcripts(
         "conv_id", "turn_idx", "role", "tool", "kind", "skip_det", "text"
     )
     if salt == "always":
-        heavy = salted_repartition(heavy, cfg, num_partitions)
+        heavy = salted_repartition(heavy, cfg)
     elif salt == "auto":
         try:
             cores = df.sparkSession.sparkContext.defaultParallelism
@@ -227,7 +226,7 @@ def extract_transcripts(
         except Exception:  # noqa: BLE001 — e.g. Connect; fall back to safe
             cores, in_parts = 1, 0
         if in_parts < cores:
-            heavy = salted_repartition(heavy, cfg, num_partitions)
+            heavy = salted_repartition(heavy, cfg)
     model_bc = (
         df.sparkSession.sparkContext.broadcast(model_bytes)
         if model_bytes is not None
