@@ -3,8 +3,8 @@
 Spark event-log fold of every (leaf, scale) cell, in one session.
 
 Usage:
-    python scripts/profile.py --sf DIR [--sf DIR ...] [--rounds N]
-                              [--explain DIR] [--out PATH] [leaf ...]
+    python scripts/leaf_profile.py --sf DIR [--sf DIR ...] [--rounds N]
+                                   [--explain DIR] [--out PATH] [leaf ...]
 
 - Leaves default to bench.py's headline list plus x_extract_transcripts;
   the session is bench.py's (``build_spark`` on every core this process
@@ -18,6 +18,8 @@ Usage:
   build and whose timed pass is its action.
 - After the session stops, ``perfbench.eventlog.fold`` sums each cell's
   action stages.  README.md "Reading a profile" explains the fields.
+- A cell's wall leaves out the profiler's own bookkeeping between build
+  and action (the build-job count and the CPU reading).
 - ``--explain DIR`` writes ``<leaf>@<sf>.txt`` (formatted plan) in round
   one, after the action; the extraction leaf has no single plan.
 """
@@ -36,9 +38,7 @@ import time
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
-# the repo root, not scripts/: this file would shadow the stdlib ``profile``
-# module, which cProfile (imported by pyspark) loads
-sys.path[0] = str(ROOT)
+sys.path.insert(0, str(ROOT))
 
 from perfbench import eventlog, meter  # noqa: E402
 
@@ -57,8 +57,12 @@ def headline() -> list[str]:
 
 
 def sf_of(sf_dir: str) -> float:
-    """bench.py's scale factor: the number after the last 'sf' in the dir."""
-    return float(sf_dir.rstrip("/").rsplit("sf", 1)[1])
+    """bench.py's scale factor: the number after the last 'sf' in the dir,
+    else 0.1."""
+    try:
+        return float(sf_dir.rstrip("/").rsplit("sf", 1)[1])
+    except (IndexError, ValueError):
+        return 0.1
 
 
 def schema_read(st, job_id: int) -> bool:
@@ -73,7 +77,7 @@ class Cell:
     """One (leaf, sf) cell: per-attempt walls, builds, actions and CPU."""
 
     def __init__(self, leaf: str, label: str, sf_dir: str):
-        self.leaf, self.sf_dir = leaf, sf_dir
+        self.leaf, self.sf_dir, self.sf = leaf, sf_dir, sf_of(sf_dir)
         self.group = f"{leaf}@{label}"
         self.wall, self.build, self.run, self.cpu, self.jobs = [], [], [], [], []
         self._seen: set[int] = set()
@@ -84,8 +88,8 @@ class Cell:
 
     def begin_action(self, sc) -> None:
         """Close the build phase: count its new jobs, schema reads aside,
-        and switch job group."""
-        t = time.perf_counter()
+        and switch job group.  The time this takes is kept out of the wall."""
+        self._tb = t = time.perf_counter()
         st = sc.statusTracker()
         new = set(st.getJobIdsForGroup(f"{self.group}:build")) - self._seen
         self._seen |= new
@@ -100,7 +104,8 @@ class Cell:
         self.cpu.append(meter.tree_cpu_s(os.getpid()) - self._cpu0)
         sc._jsc.clearJobGroup()
         self.run.append(t - self._t1)
-        self.wall.append(round(wall if wall is not None else t - self._t0, 3))
+        wall = wall if wall is not None else t - self._t0
+        self.wall.append(round(wall - (self._t1 - self._tb), 3))
 
     def report(self, fold: dict[str, float], cores: int) -> dict:
         run_s = statistics.fmean(self.run)  # the fold is a per-round mean too
@@ -151,7 +156,7 @@ def run_extraction(spark, cell: Cell) -> None:
     try:
         spark.catalog.clearCache()
         cell.start(sc)
-        timed, _turns = bench_extraction(spark, max(120, int(12000 * sf_of(cell.sf_dir))), 1)
+        timed, _turns = bench_extraction(spark, max(120, int(12000 * cell.sf)), 1)
         cell.end(sc, wall=timed)
     finally:
         hook.close()
@@ -203,13 +208,16 @@ def main() -> int:
     from rapidocr_spark.plans.shell import queries
 
     q = queries()
-    leaves = args.leaves or headline()
+    leaves = list(dict.fromkeys(args.leaves)) or headline()
     unknown = [n for n in leaves if n not in q and n != EXTRACT_LEAF]
     if unknown:
         ap.error(f"unknown leaves: {' '.join(unknown)}")
     if args.explain:
         os.makedirs(args.explain, exist_ok=True)
-    cells = [Cell(leaf, os.path.basename(d.rstrip("/")), d) for leaf in leaves for d in args.sf]
+    labels = [os.path.basename(d.rstrip("/")) for d in args.sf]
+    if len(set(labels)) < len(labels):
+        ap.error(f"--sf dirs must have distinct base names: {' '.join(labels)}")
+    cells = [Cell(leaf, label, d) for leaf in leaves for label, d in zip(labels, args.sf)]
 
     cores = len(os.sched_getaffinity(0))
     with tempfile.TemporaryDirectory(prefix="profile-eventlog-") as tmp:

@@ -1,4 +1,4 @@
-"""scripts/profile.py end to end at the smallest scale: every cell carries
+"""scripts/leaf_profile.py end to end at the smallest scale: every cell carries
 the documented fields, the event-log fold sees the action's tasks, and
 build-time jobs are attributed to the build, not to the action."""
 
@@ -22,7 +22,7 @@ FIELDS = ("best_s", "median_s", "attempts_s", "build_s", "build_jobs", "run_s", 
 def test_profile_cells_fold_and_attribute_build_jobs(tmp_path):
     plans = tmp_path / "plans"
     proc = subprocess.run(
-        [sys.executable, str(ROOT / "scripts" / "profile.py"), "--sf", SF_DIR,
+        [sys.executable, str(ROOT / "scripts" / "leaf_profile.py"), "--sf", SF_DIR,
          "--rounds", "1", "--explain", str(plans), *LEAVES],
         cwd=tmp_path, capture_output=True, text=True, timeout=600,
     )
