@@ -7,16 +7,20 @@
 - ``ann_lsh_buckets``: random-hyperplane (sign) LSH with arithmetically
   derived hyperplanes (integer weights, so the DuckDB oracle is
   bit-identical); the scale path — candidates only compare within buckets.
-- All dot products run as left-fold ``aggregate`` over zipped arrays in
-  both engines, so floating-point summation order is identical; cosine is
-  rounded to 6 digits before ranking, with doc-id tie-breaks, making the
-  top-k deterministic across engines.
+- Every dot product is the same per-dimension left fold
+  ``((0 + x1·y1) + x2·y2)…`` in all three places it runs: Catalyst's
+  ``aggregate`` over zipped arrays (pair cosines over joined rows), the
+  numpy kernels (``_fold``: centroid scoring and sign-LSH planes) and
+  DuckDB's ``list_reduce``, so floating-point summation order is
+  identical; cosine is rounded to 6 digits before ranking, with doc-id
+  tie-breaks, making the top-k deterministic across engines.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, LongType, StructField, StructType
 
 from .caching import track_persist
 
@@ -128,30 +132,73 @@ def _plane_weight(k, i, table=0):
     return ((i * 73 + k * 37 + table * 101) % 19) - 9
 
 
-def _plane_proj(k, table=0) -> "F.Column":
-    """dot(embedding, plane k of ``table``).  HOF fold kept on purpose —
-    see _dot: unrolled chains lose under whole-stage codegen (JIT
-    method-size bailout; measured 4× slower at sf1.0 for the 20-plane
-    variant)."""
-    return F.aggregate(
-        F.zip_with(
-            F.col("embedding"),
-            F.array(*[F.lit(float(_plane_weight(k, i, table))) for i in range(DIM)]),
-            lambda x, wgt: x.cast("double") * wgt,
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
+def _fold(a, b):
+    """The left fold ((0 + a1·b1) + a2·b2)… over the last (DIM) axis of
+    broadcast numpy operands — per element, the IEEE op sequence of
+    Catalyst's aggregate(zip_with(…)) and DuckDB's list_reduce.  Never a
+    BLAS ``@``/``einsum``: they reorder the sum."""
+    acc = 0.0
+    for d in range(DIM):
+        acc = acc + a[..., d] * b[..., d]
+    return acc
+
+
+def _emb_matrix(col):
+    """(E, ok) for an Arrow list<float> column: an (n, DIM) float64 matrix
+    and the rows whose Catalyst folds are not NULL — a NULL list, a NULL
+    element or a length other than DIM (zip_with pads with NULL) makes
+    every fold over the row NULL; E holds zeros there."""
+    import numpy as np
+    import pyarrow.compute as pc
+
+    lens = pc.fill_null(pc.list_value_length(col), 0).to_numpy(zero_copy_only=False)
+    flat = col.flatten()  # the values of the non-NULL lists, in row order
+    ok = lens == DIM
+    if flat.null_count:
+        row = np.repeat(np.arange(len(col)), lens)
+        ok &= np.bincount(row, flat.is_null().to_numpy(zero_copy_only=False), len(col)) == 0
+    E = np.zeros((len(col), DIM))
+    E[ok] = flat.to_numpy(zero_copy_only=False)[np.repeat(ok, lens)].reshape(-1, DIM)
+    return E, ok
+
+
+def _sign_buckets(df: DataFrame, tables) -> DataFrame:
+    """df's rows (vec_id, embedding, planes, …) once per sign-LSH table in
+    ``tables``, with tbl and bucket appended: bit k is set when k < planes
+    and dot(embedding, plane k of tbl) > 0.0 — _fold against _plane_weight,
+    in one mapInArrow kernel pinned to the Catalyst fold it replaced by
+    tests/test_lsh_numpy_mirror.py.  As there, a NULL projection (see
+    _emb_matrix) leaves the bit 0 and a NaN one sets it (Spark orders NaN
+    above every double)."""
+    n_planes = max(LSH_PLANES, MAX_PLANES)
+    names = df.columns + ["tbl", "bucket"]
+
+    def kern(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        k, t = np.arange(n_planes)[None, :, None], np.array(tables)[:, None, None]
+        W = _plane_weight(k, np.arange(DIM), t).astype(np.float64)  # (table, plane, dim)
+        bit = 1 << np.arange(n_planes, dtype=np.int64)
+        for batch in batches:
+            E, ok = _emb_matrix(batch.column("embedding"))
+            planes = batch.column("planes").to_numpy(zero_copy_only=False)
+            p = min(int(planes.max(initial=0)), n_planes)
+            live = (np.arange(p) < planes[:, None]) & ok[:, None]
+            proj = _fold(E[:, None, None, :], W[None, :, :p, :])  # (row, table, plane)
+            bucket = ((~(proj <= 0.0) & live[:, None, :]) * bit[:p]).sum(axis=2)
+            for j, tbl in enumerate(tables):
+                cols = [pa.array(np.full(len(E), tbl, np.int32)), pa.array(bucket[:, j])]
+                yield pa.record_batch(batch.columns + cols, names=names)
+
+    extra = [StructField("tbl", IntegerType()), StructField("bucket", LongType())]
+    return df.mapInArrow(kern, StructType(df.schema.fields + extra))
 
 
 def ann_lsh_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sign-LSH bucket id per vector: bit k = [dot(v, plane_k) > 0]."""
-    e = _emb(spark, sf_dir)
-    bucket = F.lit(0)
-    for k in range(LSH_PLANES):
-        bucket = bucket + F.when(_plane_proj(k) > 0.0, F.lit(1 << k)).otherwise(F.lit(0))
-    out = e.select("vec_id", "label", bucket.cast("int").alias("bucket"))
-    return out
+    b = _sign_buckets(_emb(spark, sf_dir).withColumn("planes", F.lit(LSH_PLANES)), (0,))
+    return b.select("vec_id", "label", F.col("bucket").cast("int").alias("bucket"))
 
 
 # DATA-ADAPTIVE centroid count (VERDICT r04 item 2): K = clamp(⌈√N⌉,
@@ -179,23 +226,25 @@ def _adaptive_k() -> "F.Column":
     )
 
 
-def _centroids(e: DataFrame, k_mult: int = 1) -> DataFrame:
-    """≤ K deterministic sample centroids, K data-adaptive (∝ √N).  The
+def _stride_sample(e: DataFrame, n) -> DataFrame:
+    """(cent_id, ce): the ≤ n vectors with vec_id % ceil(N / n) == 0.  The
     stride is a 1-row aggregate cross-joined in (no driver action,
     broadcast by AQE); at 100 TB this is a metadata-cheap count + an
-    O(K) broadcast.  ``k_mult`` scales the cell count (k_mult·K smaller
-    cells — the semantic-dedup pass trades finer cells + more probes for
-    recall at the same total pair work)."""
-    stride = e.agg(
-        F.ceil(F.count(F.lit(1)) / (_adaptive_k() * F.lit(k_mult)))
-        .cast("bigint")
-        .alias("stride")
-    )
+    O(n) broadcast."""
+    stride = e.agg(F.ceil(F.count(F.lit(1)) / n).cast("bigint").alias("stride"))
     return (
         e.crossJoin(F.broadcast(stride))
         .where(F.col("vec_id") % F.col("stride") == 0)
         .select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"))
     )
+
+
+def _centroids(e: DataFrame, k_mult: int = 1) -> DataFrame:
+    """≤ K deterministic sample centroids, K data-adaptive (∝ √N).
+    ``k_mult`` scales the cell count (k_mult·K smaller cells — the
+    semantic-dedup pass trades finer cells + more probes for recall at
+    the same total pair work)."""
+    return _stride_sample(e, _adaptive_k() * F.lit(k_mult))
 
 
 def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -286,43 +335,34 @@ ASSIGN_CAND_MARGIN = 3e-6  # raw-cosine slack around the keep_top-th
 
 def _cos_cand_kernel(cent_ids: list, cent_vecs: list, keep_top: int | None):
     """mapInArrow body factory for vector-vs-centroid cosine scoring
-    (closure captures only plain int/float lists — picklable).
+    (closure captures only plain int/float/None lists — picklable).
 
     Emits (vec_id, cent_id, cos_raw) with cos_raw BIT-IDENTICAL to the
-    Catalyst form round()'s input: the dot is the same left fold
-    ((0 + x1·y1) + x2·y2)… vectorised across rows (one fused
-    multiply-add step per dimension — identical IEEE op sequence per
-    element), norms fold the same way, and the division mirrors
-    dot / (cn · en) exactly.  With keep_top set, only candidates within
-    ASSIGN_CAND_MARGIN of the row's keep_top-th largest raw cosine are
-    emitted (see the margin note); with keep_top=None all K rows flow."""
+    Catalyst form round()'s input: dots and norms are _fold's left fold
+    vectorised across rows, and the division mirrors dot / (cn · en)
+    exactly.  A vector or centroid whose Catalyst folds are NULL (see
+    _emb_matrix) scores NULL against everything, as there.  With
+    keep_top set, only candidates within ASSIGN_CAND_MARGIN of the row's
+    keep_top-th largest raw cosine are emitted (see the margin note);
+    with keep_top=None all K rows flow."""
 
     def kern(batches):
         import numpy as np
         import pyarrow as pa
 
-        C = np.array(cent_vecs, dtype=np.float64)
+        C, cok = _emb_matrix(pa.array(cent_vecs, pa.list_(pa.float64())))
         cid = np.array(cent_ids, dtype=np.int64)
         K = C.shape[0]
-        cn = np.zeros(K, dtype=np.float64)
-        for d in range(DIM):
-            x = C[:, d]
-            cn = cn + x * x
-        cn = np.sqrt(cn)
+        # NULL sides get a NaN norm: never a zero divisor below
+        cn = np.where(cok, np.sqrt(_fold(C, C)), np.nan)
         for batch in batches:
             n = batch.num_rows
             if n == 0:
                 continue
             vids = batch.column("vec_id").to_numpy(zero_copy_only=False).astype(np.int64)
-            E = np.asarray(
-                batch.column("embedding").flatten(), dtype=np.float64
-            ).reshape(n, DIM)
-            en = np.zeros(n, dtype=np.float64)
-            for d in range(DIM):
-                x = E[:, d]
-                en = en + x * x
-            en = np.sqrt(en)
-            if (en == 0.0).any() or (cn == 0.0).any():
+            E, ok = _emb_matrix(batch.column("embedding"))
+            den = cn[None, :] * np.where(ok, np.sqrt(_fold(E, E)), np.nan)[:, None]
+            if (den == 0.0).any():
                 # mirror the Catalyst path faithfully: under ANSI mode a
                 # zero-norm vector/centroid makes the cosine division
                 # throw DIVIDE_BY_ZERO — fail loudly, never silently
@@ -331,16 +371,15 @@ def _cos_cand_kernel(cent_ids: list, cent_vecs: list, keep_top: int | None):
                     "zero-norm embedding/centroid: cosine is undefined "
                     "(the ANSI Catalyst path raises DIVIDE_BY_ZERO here)"
                 )
-            acc = np.zeros((n, K), dtype=np.float64)
-            for d in range(DIM):
-                acc = acc + E[:, d : d + 1] * C[:, d][None, :]
-            cos = acc / (cn[None, :] * en[:, None])
+            cos = _fold(E[:, None, :], C[None, :, :]) / den
+            null = ~(ok[:, None] & cok[None, :])
+            cos[null] = -np.inf  # NULL ranks below every cosine in Spark
             if keep_top is not None and keep_top < K:
                 kth = np.partition(cos, K - keep_top, axis=1)[:, K - keep_top]
-                # NaN cosines (zero-norm vector/centroid) must survive the
-                # prune: Spark orders NaN GREATEST, so a NaN candidate is
-                # always a potential winner on the Catalyst path — emit
-                # them all (and a NaN kth would otherwise mask everything)
+                # NaN cosines (NaN elements) must survive the prune: Spark
+                # orders NaN GREATEST, so a NaN candidate is always a
+                # potential winner on the Catalyst path — emit them all
+                # (and a NaN kth would otherwise mask everything)
                 mask = (cos >= (kth - ASSIGN_CAND_MARGIN)[:, None]) | np.isnan(cos)
                 ridx, cidx = np.nonzero(mask)
             else:
@@ -350,7 +389,7 @@ def _cos_cand_kernel(cent_ids: list, cent_vecs: list, keep_top: int | None):
                 {
                     "vec_id": pa.array(vids[ridx], type=pa.int64()),
                     "cent_id": pa.array(cid[cidx], type=pa.int64()),
-                    "cos_raw": pa.array(cos[ridx, cidx], type=pa.float64()),
+                    "cos_raw": pa.array(cos[ridx, cidx], type=pa.float64(), mask=null[ridx, cidx]),
                 }
             )
 
@@ -377,11 +416,7 @@ def _cand_scored(e: DataFrame, cents: DataFrame, keep_top: int | None) -> DataFr
             f"collect bound SEM_K_MULT * K_MAX_CENTROIDS = "
             f"{SEM_K_MULT * K_MAX_CENTROIDS}"
         )
-    kern = _cos_cand_kernel(
-        [int(r["cent_id"]) for r in rows],
-        [[float(x) for x in r["ce"]] for r in rows],
-        keep_top,
-    )
+    kern = _cos_cand_kernel([int(r["cent_id"]) for r in rows], [r["ce"] for r in rows], keep_top)
     return e.select("vec_id", "embedding").mapInArrow(
         kern, "vec_id bigint, cent_id bigint, cos_raw double"
     ).select("vec_id", "cent_id", F.round(F.col("cos_raw"), 6).alias("cos_c"))
@@ -443,10 +478,10 @@ def _centroids_lloyd(e: DataFrame, k_mult: int = 1) -> DataFrame:
     cents = _centroids(e, k_mult)
     for _ in range(LLOYD_ITERS):
         # every intermediate centroid frame is persisted (tiny: ≤ K
-        # rows): _cand_scored COLLECTS its input to route/ship the
-        # model, and without the persist that build-time evaluation
-        # would run the previous refine pass once for the collect and
-        # AGAIN inside the next consumer's lazy plan
+        # rows): _cand_scored COLLECTS its input to ship the model, and
+        # without the persist that build-time evaluation would run the
+        # previous refine pass once for the collect and AGAIN inside the
+        # next consumer's lazy plan
         cents = track_persist(_refine_once(e, cents))
     return cents
 
@@ -497,18 +532,22 @@ MAX_PLANES = 20     # adaptive plane-count ceiling (2^20 buckets)
 MIN_PLANES = 8
 
 
-def _adaptive_bucket(table: int, planes_col) -> "F.Column":
-    """Sign-LSH bucket with a DATA-ADAPTIVE plane count: p = max(8,
-    ceil(log2 N)) planes ⇒ ≥ N buckets ⇒ expected bucket occupancy O(1),
-    so the within-bucket all-pairs residual is O(N), not O(N²/constant)
-    (VERDICT r01 item 4).  Plane weights stay the arithmetically-derived
-    integers so the DuckDB oracle is bit-identical."""
-    bucket = F.lit(0).cast("bigint")
-    for k in range(MAX_PLANES):
-        proj = _plane_proj(k, table)
-        bit = F.when((F.lit(k) < planes_col) & (proj > 0.0), F.lit(1 << k)).otherwise(F.lit(0))
-        bucket = bucket + bit
-    return bucket
+def _dedup_buckets(e: DataFrame) -> DataFrame:
+    """(vec_id, embedding, _n, planes, tbl, bucket) for DEDUP_TABLES
+    sign-LSH tables of p = clamp(ceil(log2 N), MIN_PLANES, MAX_PLANES)
+    planes: ≥ N buckets keep the within-bucket all-pairs residual O(N)
+    (VERDICT r01 item 4); past 2^MAX_PLANES vectors the bucket count
+    stops growing (ADVICE r02 item 2) — shard or raise MAX_PLANES."""
+    planes = e.agg(
+        F.least(
+            F.lit(MAX_PLANES),
+            F.greatest(F.lit(MIN_PLANES), F.ceil(F.log2(F.count(F.lit(1)))).cast("int")),
+        ).alias("planes")
+    )
+    base = e.crossJoin(F.broadcast(planes)).select(
+        "vec_id", "embedding", _norm(F.col("embedding")).alias("_n"), "planes"
+    )
+    return _sign_buckets(base, range(DEDUP_TABLES))
 
 
 def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -518,38 +557,11 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     log2(N) — bucket count ∝ N keeps expected occupancy (and hence the
     pairwise residual per bucket) constant at any corpus size.  The
     brute-force twin is knn_brute_cosine."""
-    e = _emb(spark, sf_dir)
-    # p = clamp(ceil(log2 N), MIN_PLANES, MAX_PLANES): _adaptive_bucket only
-    # materialises MAX_PLANES bit terms, so past 2^MAX_PLANES vectors the
-    # bucket count stops growing — the cap is now explicit (ADVICE r02
-    # item 2); shard the corpus or raise MAX_PLANES beyond that size
-    planes = e.agg(
-        F.least(
-            F.lit(MAX_PLANES),
-            F.greatest(
-                F.lit(MIN_PLANES),
-                F.ceil(F.log2(F.count(F.lit(1)))).cast("int"),
-            ),
-        ).alias("planes")
-    )
-    base = e.crossJoin(F.broadcast(planes))
-    tables = [
-        base.select(
-            "vec_id",
-            "embedding",
-            _norm(F.col("embedding")).alias("_n"),
-            F.lit(t).alias("tbl"),
-            _adaptive_bucket(t, F.col("planes")).alias("bucket"),
-        )
-        for t in range(DEDUP_TABLES)
-    ]
-    v = tables[0]
-    for tdf in tables[1:]:
-        v = v.unionByName(tdf)
-    v = track_persist(v)  # consumed by both sides of the self-join
+    # consumed by both sides of the self-join
+    v = track_persist(_dedup_buckets(_emb(spark, sf_dir)))
     a, c = v.alias("a"), v.alias("c")
     cos = _cos6("a.embedding", "c.embedding", "a._n", "c._n")
-    pairs = (
+    return (
         a.join(
             c,
             (F.col("a.tbl") == F.col("c.tbl"))
@@ -564,7 +576,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("cosine") >= COS_DUP_MIN)
         .distinct()  # a pair may collide in several tables
     )
-    return pairs
 
 
 def _cos_band(col) -> "F.Column":
@@ -731,19 +742,6 @@ PQ_SCALE = 1_000_000.0  # partial dots / norms^2 go through floor(x*1e6)
                         # bigint sums: order-independent, engine-identical
 
 
-def _pq_codebook(e: DataFrame) -> DataFrame:
-    """≤ PQ_KS deterministic sample rows; row r's m-th subvector is
-    subspace m's codebook entry r (shared sample across subspaces)."""
-    stride = e.agg(
-        F.ceil(F.count(F.lit(1)) / float(PQ_KS)).cast("bigint").alias("stride")
-    )
-    return (
-        e.crossJoin(F.broadcast(stride))
-        .where(F.col("vec_id") % F.col("stride") == 0)
-        .select(F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce"))
-    )
-
-
 def _pq_codebook_refined(e: DataFrame) -> DataFrame:
     """Stride seed + ONE Lloyd round PER SUBSPACE — the same fix the
     r02 verdict demanded for the IVF centroids, applied to the PQ
@@ -754,7 +752,8 @@ def _pq_codebook_refined(e: DataFrame) -> DataFrame:
     that wins no vectors in a subspace keeps its seed subvector.  One
     broadcast-assign pass + one 8-dim mean per (subspace, entry); the
     iteration count is fixed so the oracle stays a finite CTE chain."""
-    cb0 = _pq_codebook(e)
+    # ≤ PQ_KS seed rows; row r's m-th subvector is subspace m's entry r
+    cb0 = _stride_sample(e, float(PQ_KS))
     codes0 = _pq_encode(e, cb0).select("vec_id", "m", "code")
     mem = codes0.join(e.select("vec_id", "embedding"), "vec_id")
     # narrow-codegen rebuild (late round 5): per-dim sums travel as

@@ -15,7 +15,10 @@ from __future__ import annotations
 import os
 import sys
 
-sys.path.insert(0, os.path.join(os.path.dirname(__file__), ".."))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too, through PYTHONPATH
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 from rapidocr_spark.sources.fixtures import (  # noqa: E402
     CHAR_SCORES_FIXTURE, CONVS_FIXTURE, MOSTANGLE_FIXTURE, MULTILANG_FIXTURE,

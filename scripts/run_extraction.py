@@ -25,7 +25,10 @@ import sys
 
 # direct `python scripts/run_extraction.py` puts scripts/ (not the repo
 # root) on sys.path; under spark-submit --py-files the zip covers it
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too, through PYTHONPATH
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.environ.get("PYTHONPATH")]))
 
 
 def parse_args() -> argparse.Namespace:

@@ -164,6 +164,34 @@ def test_zero_vector_both_paths_fail_loudly(spark):
     assert "zero-norm" in str(exc.value)
 
 
+@pytest.mark.parametrize("null_centroid", [False, True])
+def test_null_embedding_scores_like_catalyst(spark, null_centroid):
+    """A NULL embedding makes every Catalyst fold over it NULL: its
+    cosines are NULL (no DIVIDE_BY_ZERO), a NULL vector still lands in a
+    cell (the lowest cent_id wins the all-NULL tie) and a NULL centroid
+    never beats a scored one.  The kernel must give the same rows, not
+    fail the task."""
+    from pyspark.sql import Row
+
+    rows = [Row(vec_id=i, embedding=[float((i * 7 + j) % 5 - 2) for j in range(64)])
+            for i in range(20)]
+    rows[3] = Row(vec_id=3, embedding=None)
+    e = spark.createDataFrame(rows, "vec_id bigint, embedding array<float>")
+    picked = [0, 1, 2, 3, 4, 5] if null_centroid else [0, 1, 2, 4, 5, 6]
+    cents = e.where(F.col("vec_id").isin(picked)).select(
+        F.col("vec_id").alias("cent_id"), F.col("embedding").alias("ce")
+    )
+
+    def rows_of(df):
+        return sorted(map(tuple, df.collect()), key=repr)
+
+    assert rows_of(_cand_scored(e, cents, None)) == rows_of(_catalyst_scored(e, cents))
+    assert rows_of(_assign_cells(e, cents)) == rows_of(_catalyst_assign(e, cents))
+    assert rows_of(_assign_cells_multi(e, cents, SEM_ASSIGN)) == rows_of(
+        _catalyst_assign_multi(e, cents, SEM_ASSIGN)
+    )
+
+
 def test_centroid_collect_bound_raises(spark, monkeypatch):
     """_cand_scored collects the centroid frame to ship it as the model;
     a frame above SEM_K_MULT * K_MAX_CENTROIDS rows must fail with a

@@ -78,6 +78,25 @@ def test_ivf_candidate_join_is_broadcast_hash(spark, name):
     assert "SortMergeJoin" not in plan
 
 
+@pytest.mark.parametrize("name", ["ann_lsh_buckets", "dedup_embedding_cosine", "dedup_recall"])
+def test_sign_lsh_buckets_are_one_arrow_kernel(spark, name):
+    """Sign-LSH bucketing is one MapInArrow node (similarity._sign_buckets):
+    no plane fold over a literal weight array is left in the plan, and
+    the dedup self-join reads that one kernel pass, not a Union of
+    per-table projections.  Only the pair-cosine folds over joined rows
+    stay Catalyst folds."""
+    import re
+
+    from rapidocr_spark.functions import similarity
+
+    plan = _formatted(getattr(similarity, name)(spark, SF_DIR))
+    assert "MapInArrow" in plan, plan
+    assert not re.search(r"zip_with\([^,()]+, \[", plan), plan
+    assert "Union" not in plan, plan
+    if name == "ann_lsh_buckets":
+        assert "zip_with" not in plan and "aggregate(" not in plan, plan
+
+
 def test_extraction_single_python_stage_per_route(spark):
     """The fused det→cls→rec chain is exactly ONE MapInPandas operator (no
     shuffle between stages, J1-J3 zips never cross partitions); the plain:

@@ -22,12 +22,13 @@ def test_no_script_shadows_a_stdlib_module():
 
 
 def test_run_extraction_cli_runs_as_a_script(tmp_path):
+    """From any cwd: the Python workers, too, must find the package."""
     out = tmp_path / "out"
     proc = subprocess.run(
         [sys.executable, str(ROOT / "scripts" / "run_extraction.py"),
          "--synthetic-convs", "2", "--buckets", "2", "--shuffle-partitions", "2",
          "--output", str(out)],
-        cwd=ROOT, capture_output=True, text=True, timeout=600,
+        cwd=tmp_path, capture_output=True, text=True, timeout=600,
     )
     assert proc.returncode == 0, proc.stderr[-3000:]
     metrics = json.loads(proc.stdout.strip().splitlines()[-1])
