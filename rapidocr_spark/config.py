@@ -49,7 +49,6 @@ class PipelineConfig:
     # ---- Cls (config.yaml:29-37) ----
     cls_thresh: float = 0.9          # F8 rotate gate
     cls_batch_num: int = 6
-    cls_label_list: tuple[str, ...] = ("0", "180")
     # A4 mostAngle batch majority vote (.NET surface, dotnet
     # OcrLib/AngleNet.cs:74-97): when on, per-crop angle indexes are
     # overridden by the batch majority — sum(index) >= count/2 rotates ALL
@@ -60,7 +59,6 @@ class PipelineConfig:
 
     # ---- Rec (config.yaml:39-46) ----
     rec_batch_num: int = 6
-    rec_img_height: int = 48
     # per-char confidences in every span (the .NET rich-TextBlock surface,
     # dotnet OcrResult.cs:41-68 / CrnnNet.cs:114-146); off by default to
     # keep the span payload lean
@@ -69,11 +67,12 @@ class PipelineConfig:
     # ---- Engine-side scale knobs (no reference analog; SURVEY.md §4) ----
     salt_buckets: int = 16           # salted repartition on conv_id
 
-    # ---- Inference backend (S5/S6 session seam, kernels/session.py) ----
+    # ---- Inference backend (S5 session seam, kernels/session.py) ----
     # 'synthetic' = the deterministic in-sandbox kernels; 'onnx' = a real
     # onnxruntime InferenceSession loaded from broadcast model bytes
     # (availability-guarded import; the reference's get_onnx_session analog,
-    # rapidocr_onnxruntime/utils.py:21-88)
+    # rapidocr_onnxruntime/utils.py:21-88); 'onnx_mini' = the synthetic nets
+    # serialised as ONNX graphs, run by the in-repo executor
     backend: str = "synthetic"
 
     def replace(self, **kw) -> "PipelineConfig":

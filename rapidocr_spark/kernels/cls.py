@@ -7,10 +7,11 @@ over label_list ('0','180') (K11, ch_ppocr_v2_cls/utils.py:14-29), and the
 F8 gate — rotate 180° only when label=='180' AND score > cls_thresh(0.9),
 via K12 rotate180.
 
-The "network" is the deterministic synthetic kernel: rendered lines carry a
-full-width baseline (underline) row below the glyphs, so orientation is the
-sign of (underline row − ink centroid row).  Confidence is 0.97 when the
-margin is decisive, 0.55 otherwise (exercising both sides of the 0.9 gate).
+The "network" is a session's ``cls_probs`` head (kernels/session.py).  The
+synthetic net is ``classify_crop``: rendered lines carry a full-width
+baseline (underline) row below the glyphs, so orientation is the sign of
+(underline row − ink centroid row).  Confidence is 0.97 when the margin is
+decisive, 0.55 otherwise (exercising both sides of the 0.9 gate).
 """
 
 from __future__ import annotations
@@ -18,7 +19,11 @@ from __future__ import annotations
 import numpy as np
 
 from ..config import PipelineConfig
+from .session import session_for
 
+# K11 label_list: the F8 gate and mostAngle test for "180", so the list is
+# fixed rather than configurable
+CLS_LABELS = ("0", "180")
 CONF_DECISIVE = 0.97
 CONF_AMBIGUOUS = 0.55
 _MARGIN_PX = 3
@@ -52,23 +57,20 @@ def classify_and_rotate(
     deterministic kernel but kept for parity with the reference's
     memory-bounded execution (config.yaml:34).
 
-    ``session``: an ONNX session supplies (N, 2) probs per mini-batch (K8
-    preprocessing inside session.cls_probs); K11 argmax post-processing is
-    shared with the synthetic path (text_cls.py:50-68)."""
+    ``session`` (default: ``session_for(cfg)``) supplies (N, 2) probs per
+    mini-batch; the K11 argmax post-processing is shared
+    (text_cls.py:50-68)."""
+    session = session or session_for(cfg)
     n = len(crops)
     results: list[tuple[str, float] | None] = [None] * n
     ratios = [c.shape[1] / float(c.shape[0]) for c in crops]
     indices = np.argsort(np.array(ratios), kind="stable")
     for beg in range(0, n, cfg.cls_batch_num):
         batch = [int(i) for i in indices[beg : beg + cfg.cls_batch_num]]
-        if session is not None and batch:
-            probs = session.cls_probs([crops[i] for i in batch])
-            for row, i in enumerate(batch):  # K11 argmax post + J3 scatter
-                idx = int(np.argmax(probs[row]))
-                results[i] = (cfg.cls_label_list[idx], float(probs[row][idx]))
-        else:
-            for i in batch:
-                results[i] = classify_crop(crops[i])  # J3 scatter-back
+        probs = session.cls_probs([crops[i] for i in batch])
+        for row, i in enumerate(batch):  # K11 argmax post + J3 scatter
+            idx = int(np.argmax(probs[row]))
+            results[i] = (CLS_LABELS[idx], float(probs[row][idx]))
     out_crops = list(crops)
     final: list[tuple[str, float]] = []
     if cfg.cls_most_angle and n:
@@ -84,7 +86,7 @@ def classify_and_rotate(
             _label, score = res  # type: ignore[misc]
             if most == 1:
                 out_crops[i] = rotate180(out_crops[i])
-            final.append((cfg.cls_label_list[most], score))
+            final.append((CLS_LABELS[most], score))
         return out_crops, final
     for i, res in enumerate(results):
         label, score = res  # type: ignore[misc]

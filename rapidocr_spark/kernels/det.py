@@ -24,9 +24,10 @@ post-processing pipeline of the reference's DBPostProcess + TextDetector:
 - W1 sorted_boxes reading order (Δy<10 same-line pass)
       /root/reference/python/rapidocr_onnxruntime/rapid_ocr_api.py:152-174
 
-The "network" itself (prob map from pixels) is the deterministic synthetic
-kernel: a normalised box blur of the ink mask, scaled so text interiors
-saturate — see SURVEY.md §7 M1 (sandbox ships no ONNX weights).
+The "network" (prob map from pixels) is a session's ``det_prob`` head
+(kernels/session.py).  The synthetic net is ``prob_map``: a normalised box
+blur of the ink mask, scaled so text interiors saturate — see SURVEY.md §7
+M1 (no ONNX weights ship with the engine).
 """
 
 from __future__ import annotations
@@ -35,6 +36,7 @@ import numpy as np
 
 from ..config import PipelineConfig
 from .geometry import min_area_rect, unclip_quad
+from .session import session_for
 
 # ---------------------------------------------------------------- K1 resize
 
@@ -340,9 +342,8 @@ def detect(img: np.ndarray, cfg: PipelineConfig, session=None) -> np.ndarray:
     bounding boxes exactly."""
     src_h, src_w = img.shape[:2]
     resized, ratio_h, ratio_w = det_resize_for_test(img, cfg)
-    # inference head: a broadcast ONNX session's prob map (S5/S6 deploy
-    # path) or the synthetic net; post-processing below is identical
-    prob = session.det_prob(resized) if session is not None else prob_map(resized)
+    # inference head (kernels/session.py); post-processing below is shared
+    prob = (session or session_for(cfg)).det_prob(resized)
     seg = prob > cfg.det_thresh  # F3
     if cfg.det_use_dilation:
         seg = dilate2x2(seg)  # K6

@@ -15,10 +15,10 @@ The flagship artifact is ``build_det_model()``: a Greater→Cast→Conv→Clip
 graph that reproduces the synthetic det net EXACTLY (kernels/det.py
 ``prob_map``: ink threshold → asymmetric 3×5 box mean → clip 2·mean to
 [0,1]) from the NCHW-normalized input contract of
-``OnnxSession.det_prob`` (kernels/session.py:105-113, mirroring
+``OnnxSession.det_prob`` (kernels/session.py, mirroring
 ch_ppocr_v3_det/text_detect.py:60-79) — so ``detect(img, cfg,
-session=MiniOnnxDetSession(...))`` runs the REAL serialized-model path
-and must emit the same quads as the synthetic path.
+session=MiniOnnxSession(...))`` (kernels/onnx_models.py) runs the REAL
+serialized-model path and must emit the same quads as the synthetic path.
 
 Supported ops (numpy executor): Conv, Greater, Cast, Clip, Sigmoid,
 Relu, Add, Mul.  Everything here is public knowledge: the protobuf wire
@@ -882,23 +882,3 @@ def build_det_model(charset: str | None = None) -> bytes:
     meta = {"character": charset} if charset else None
     return build_model(nodes, inputs, outputs, [t_init, w_init, lo, hi],
                        graph_name="det_prob", metadata=meta)
-
-
-class MiniOnnxDetSession:
-    """A session whose det head runs REAL serialized ONNX bytes through
-    the in-repo executor, under the exact OnnxSession.det_prob tensor
-    contract (normalize → CHW → batch-1 NCHW float32 → out[0][0,0]).
-    backend='onnx' so kernels/oracle.py routes inference through it."""
-
-    backend = "onnx"
-
-    def __init__(self, cfg, model_bytes: bytes):
-        self.cfg = cfg
-        self.model_bytes = bytes(model_bytes)
-
-    def det_prob(self, resized: np.ndarray) -> np.ndarray:
-        from .preprocess import normalize_image, to_chw
-
-        x = to_chw(normalize_image(resized))[None].astype(np.float32)
-        out = run_model(self.model_bytes, {"x": x})["prob"]
-        return np.asarray(out)[0, 0].astype(np.float32)

@@ -418,13 +418,11 @@ class MiniOnnxSession:
     """Full det+cls+rec session over parsed ONNX model bytes — the
     backend='onnx_mini' target of kernels/session.make_session.
 
-    backend attribute is 'onnx' so kernels/oracle.py routes ALL THREE
-    inference heads through the serialized models (the same seam a real
-    onnxruntime session uses); graphs are parsed ONCE per session (i.e.
-    once per executor, via the operators/extract.py session cache) and
+    It has the four heads every session has, so det/cls/rec run ALL THREE
+    inference steps through the serialized models; graphs are parsed ONCE
+    per session (once per executor, via kernels/session.session_for) and
     executed per input by the in-repo numpy executor."""
 
-    backend = "onnx"
     ROLES = ("det", "cls", "rec")
 
     def __init__(self, cfg, model_bytes: dict[str, bytes]):

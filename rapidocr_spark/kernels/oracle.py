@@ -66,12 +66,9 @@ def extract_bitmap(
 ) -> dict[str, Any]:
     """det→cls→rec over one decoded bitmap (rapid_ocr_api.py:67-107).
 
-    ``session``: when it is an ONNX session (backend == 'onnx'), the det
-    prob map and the cls/rec probability tensors come from
-    ``session.run()`` under the reference's tensor contracts
-    (kernels/session.py) and flow through the SAME post-processing;
-    otherwise the synthetic nets run (the in-sandbox default)."""
-    onnx = session if getattr(session, "backend", None) == "onnx" else None
+    ``session`` supplies the det prob map and the cls/rec probability
+    tensors (kernels/session.py); each stage resolves ``None`` through
+    ``session_for(cfg)``, so the eager path follows ``cfg.backend``."""
     h, w = img.shape[:2]
     use_limit_ratio = (
         cfg.width_height_ratio != -1 and w / h > cfg.width_height_ratio
@@ -89,7 +86,7 @@ def extract_bitmap(
         # convention; the reference pads white on white-background mats).
         pad = max(0, int(cfg.det_padding))
         det_img = np.pad(img, pad, mode="constant") if pad else img
-        dt_boxes = detect(det_img, cfg, session=onnx)
+        dt_boxes = detect(det_img, cfg, session=session)
         if dt_boxes.shape[0] < 1:  # F2
             return _result(None, None)
         dt_boxes = sorted_boxes(dt_boxes)  # W1
@@ -97,8 +94,8 @@ def extract_bitmap(
         if pad:
             dt_boxes = dt_boxes - float(pad)
     if cfg.use_cls:
-        crops, _cls_res = cls_kernel.classify_and_rotate(crops, cfg, session=onnx)
-    rec_res = rec_kernel.recognize(crops, cfg, session=onnx) if cfg.use_rec else [
+        crops, _cls_res = cls_kernel.classify_and_rotate(crops, cfg, session=session)
+    rec_res = rec_kernel.recognize(crops, cfg, session=session) if cfg.use_rec else [
         ("", 0.0)
     ] * len(crops)
     spans = [

@@ -7,13 +7,14 @@ dynamic width from max aspect ratio (A3 — tracked for parity, a no-op for
 the synthetic net), inference, CTC greedy decode (K10), scatter-back into
 original order (J3).
 
-The "network" is the deterministic synthetic kernel: the renderer's glyph
-grid is located from the underline baseline, each CELL_W-wide cell is
-template-matched against the charset glyph bank (exact match → conf 0.98,
-empty cell → space, near-miss → hamming-nearest at conf 0.40 so that
-corrupted lines score below text_score and exercise F7), and per-cell
-matches are expanded into a [c, c, blank] logit sequence so the CTC decode
-does real blank-dropping and repeat-collapsing work.
+The "network" is a session's ``rec_probs`` head (kernels/session.py).  The
+synthetic net is ``ctc_rows``: the renderer's glyph grid is located from
+the underline baseline, each CELL_W-wide cell is template-matched against
+the charset glyph bank (exact match → conf 0.98, empty cell → space,
+near-miss → hamming-nearest at conf 0.40 so that corrupted lines score
+below text_score and exercise F7), and per-cell matches are expanded into
+a [c, c, blank] logit sequence so the CTC decode does real blank-dropping
+and repeat-collapsing work.
 
 Scale handling (the K9 resize_norm analog): rotated fixtures are rendered
 at glyph scale 3 so their features survive the det-warp resampling; when
@@ -32,6 +33,7 @@ import numpy as np
 from ..config import PipelineConfig
 from .ctc import ctc_greedy_decode
 from .font import BLANK_IDX, CELL_W, GLYPH_H, GLYPH_W, SPACE_IDX, glyph_bank
+from .session import session_for
 
 CONF_MATCH = 0.98
 CONF_APPROX = 0.91   # tolerant match on warped (scale>1) crops
@@ -209,12 +211,16 @@ def _cell_logit_rows_search(crop_bin: np.ndarray) -> np.ndarray | None:
     return best_rows
 
 
-def recognize_crop(crop: np.ndarray, with_chars: bool = False) -> tuple:
-    """One (orientation-corrected) crop → (text, score) via CTC decode.
+def ctc_rows(crop: np.ndarray) -> np.ndarray | None:
+    """The synthetic rec net: one (orientation-corrected) crop → a
+    (3·n_cells, n_classes) float32 CTC matrix, ``None`` when the crop has
+    no glyph grid.
 
     Exact scale-1 grid match first (the hot path, bit-identical to the
     flat-render contract); if any cell is a near-miss the tolerant
-    scale/offset search takes over (warped rotated crops)."""
+    scale/offset search takes over (warped rotated crops).  Each cell
+    expands to [c, c, blank], so the K10 decode does real repeat-collapse
+    and blank-drop work."""
     crop_bin = crop > 127
     cell_rows = _cell_logit_rows(crop_bin)
     if cell_rows is None or (cell_rows.max(axis=1) < CONF_MATCH).any():
@@ -222,14 +228,26 @@ def recognize_crop(crop: np.ndarray, with_chars: bool = False) -> tuple:
         if searched is not None:
             cell_rows = searched
     if cell_rows is None:
-        return ("", 0.0, []) if with_chars else ("", 0.0)
+        return None
     n_cells, n_classes = cell_rows.shape
-    # expand to a CTC time series: [c, c, blank] per cell — exercises both
-    # repeat-collapse and blank-drop paths of K10
     probs = np.zeros((3 * n_cells, n_classes), dtype=np.float32)
     probs[0::3] = cell_rows
     probs[1::3] = cell_rows
     probs[2::3, BLANK_IDX] = 1.0
+    return probs
+
+
+def _no_text(with_chars: bool) -> tuple:
+    """A crop without a glyph grid: empty text at score 0.0 (the model's
+    all-blank decode scores 1e-50 instead, kernels/onnx_models.py)."""
+    return ("", 0.0, []) if with_chars else ("", 0.0)
+
+
+def recognize_crop(crop: np.ndarray, with_chars: bool = False) -> tuple:
+    """One crop → (text, score) through the synthetic net and K10."""
+    probs = ctc_rows(crop)
+    if probs is None:
+        return _no_text(with_chars)
     return ctc_greedy_decode(probs, with_chars=with_chars)
 
 
@@ -240,35 +258,31 @@ def recognize(
     per-batch max_wh_ratio (A3), scatter results back to original order
     (J3, text_recognize.py:74-75).
 
-    ``session``: an ONNX session supplies (N, T, C) CTC prob sequences per
-    mini-batch (K9 dynamic-width preprocessing inside session.rec_probs);
-    the K10 greedy decode is shared with the synthetic path
-    (text_recognize.py:63-72).
+    ``session`` (default: ``session_for(cfg)``) supplies CTC prob
+    sequences per mini-batch (K9 preprocessing inside session.rec_probs);
+    the K10 greedy decode is shared (text_recognize.py:63-72), with the
+    charset from the model's metadata when it has one
+    (S-charset-from-ONNX, P/utils.py:72-79).  A ``None`` row (no glyph
+    grid) keeps the empty result.
 
     ``cfg.rec_char_scores`` switches every tuple to (text, score,
     char_scores) — the .NET per-char confidence surface."""
+    session = session or session_for(cfg)
     with_chars = cfg.rec_char_scores
+    charset = session.rec_charset()
     n = len(crops)
-    results: list[tuple] = [(("", 0.0, []) if with_chars else ("", 0.0))] * n
+    results: list[tuple] = [_no_text(with_chars)] * n
     ratios = np.array([c.shape[1] / float(c.shape[0]) for c in crops])
     indices = np.argsort(ratios, kind="stable")
     for beg in range(0, n, cfg.rec_batch_num):
         batch = indices[beg : beg + cfg.rec_batch_num]
-        max_wh_ratio = float(ratios[batch].max()) if batch.size else 0.0  # A3
-        if session is not None and batch.size:
-            probs = session.rec_probs(
-                [crops[int(i)] for i in batch], max_wh_ratio
-            )
-            # charset priority: model metadata (S-charset-from-ONNX,
-            # P/utils.py:72-79) over the packaged bank
-            charset = session.rec_charset()
-            for row, i in enumerate(batch):  # K10 decode + J3 scatter-back
+        max_wh_ratio = float(ratios[batch].max())  # A3
+        probs = session.rec_probs([crops[int(i)] for i in batch], max_wh_ratio)
+        for row, i in enumerate(batch):  # K10 decode + J3 scatter-back
+            if probs[row] is not None:
                 results[int(i)] = ctc_greedy_decode(
                     np.asarray(probs[row], dtype=np.float32),
                     charset=charset,
                     with_chars=with_chars,
                 )
-        else:
-            for i in batch:
-                results[int(i)] = recognize_crop(crops[int(i)], with_chars=with_chars)
     return results

@@ -1,34 +1,40 @@
-"""Per-executor inference sessions — the S5/S6 seam made real.
+"""Inference sessions — the one seam between det/cls/rec and a backend.
 
-The reference builds one ONNX InferenceSession per model and caches it
-(/root/reference/python/rapidocr_onnxruntime/utils.py:21-88;
-ocrweb_multi/rapidocr/main.py:15-19 lru_cache registry).  The engine's
-analog is a session object created once per executor process from the
-frozen config plus (for the real backend) model bytes shipped via a Spark
-broadcast variable — executors never touch a filesystem path:
+The reference hides every net behind one session interface and caches one
+session per model (python/rapidocr_onnxruntime/utils.py:21-88;
+ocrweb_multi/rapidocr/main.py:15-19 lru_cache registry).  Here every
+backend is a session with the same four heads — ``det_prob``,
+``cls_probs``, ``rec_probs`` and ``rec_charset`` — and det/cls/rec call
+those heads and then run the one shared post-processing; they never
+branch on the backend.
 
-- ``SyntheticSession``: the in-sandbox deterministic kernels (glyph matrix
-  warmed once per process); normative for tests/benchmarks because this
-  environment ships no model weights.
-- ``OnnxSession``: loads ``onnxruntime`` behind an availability-guarded
-  import and builds a real InferenceSession from the broadcast bytes —
-  the deploy path; swapping backends never touches the Spark plan.
+- ``SyntheticSession``: the deterministic nets (glyph matrix warmed once
+  per process); normative for tests/benchmarks because the engine ships
+  no model weights.
+- ``OnnxSession``: ``onnxruntime`` behind an availability-guarded import,
+  one InferenceSession per role from broadcast model bytes — the deploy
+  path; swapping backends never touches the Spark plan.
+- ``MiniOnnxSession`` (kernels/onnx_models.py): the same nets serialised
+  as ONNX graphs and run by the in-repo executor.
 
-Dispatch lives in ``make_session``; the per-executor cache keyed by config
-is in operators/extract.py (_SESSIONS).
+``make_session`` dispatches on ``cfg.backend``; ``session_for`` is the one
+per-process cache, keyed on (config, model broadcast).  The Spark stage
+(operators/extract.py) and the eager path (a ``None`` session in
+det/cls/rec) both resolve through it.
 """
 
 from __future__ import annotations
 
+import functools
 from typing import Any
+
+import numpy as np
 
 from ..config import PipelineConfig
 
 
 class SyntheticSession:
-    """Deterministic kernel-chain session: config + warmed glyph matrix."""
-
-    backend = "synthetic"
+    """The deterministic kernel nets behind the session heads."""
 
     def __init__(self, cfg: PipelineConfig):
         # importing rec builds the glyph bank and the matcher's
@@ -36,6 +42,38 @@ class SyntheticSession:
         from .rec import GLYPH_MATRIX  # noqa: F401
 
         self.cfg = cfg
+
+    def det_prob(self, resized: np.ndarray) -> np.ndarray:
+        """K1-resized image → (H, W) float32 probability map."""
+        from .det import prob_map
+
+        return prob_map(resized)
+
+    def cls_probs(self, crops: list) -> np.ndarray:
+        """Crop batch → (N, 2) float64 rows in CLS_LABELS order: the
+        classifier's score at its label, the complement at the other.
+        Every score is > 0.5, so argmax and the score read back give
+        ``classify_crop``'s (label, score) exactly."""
+        from .cls import CLS_LABELS, classify_crop
+
+        probs = np.empty((len(crops), 2))
+        for row, crop in enumerate(crops):
+            label, score = classify_crop(crop)
+            j = CLS_LABELS.index(label)
+            probs[row, j] = score
+            probs[row, 1 - j] = 1.0 - score
+        return probs
+
+    def rec_probs(self, crops: list, max_wh_ratio: float) -> list:
+        """Crop batch → per-crop [c, c, blank] CTC matrices from the grid
+        matchers, ``None`` for a crop with no glyph grid.  The nets match
+        at native resolution, so the A3 batch width is unused."""
+        from .rec import ctc_rows
+
+        return [ctc_rows(c) for c in crops]
+
+    def rec_charset(self) -> list[str] | None:
+        return None  # the packaged glyph bank (font.CHARSET)
 
 
 class OnnxSession:
@@ -60,7 +98,6 @@ class OnnxSession:
     dependency: executors raise a clear error at session-build time (not a
     job-submit-time crash) if the package is absent."""
 
-    backend = "onnx"
     ROLES = ("det", "cls", "rec")
 
     def __init__(self, cfg: PipelineConfig, model_bytes):
@@ -102,20 +139,16 @@ class OnnxSession:
         """Raw inference head — get_onnx_session(...).run analog."""
         return self.sessions[role].run(None, inputs)
 
-    def det_prob(self, resized: "np.ndarray") -> "np.ndarray":
+    def det_prob(self, resized: np.ndarray) -> np.ndarray:
         """K1-resized image → (H, W) float32 probability map."""
-        import numpy as np
-
         from .preprocess import normalize_image, to_chw
 
         x = to_chw(normalize_image(resized))[None].astype(np.float32)
         out = self.run({self._input_names["det"]: x}, role="det")[0]
         return np.asarray(out)[0, 0].astype(np.float32)
 
-    def cls_probs(self, crops: list) -> "np.ndarray":
-        """Crop batch → (N, 2) orientation probs (label_list order)."""
-        import numpy as np
-
+    def cls_probs(self, crops: list) -> np.ndarray:
+        """Crop batch → (N, 2) orientation probs (CLS_LABELS order)."""
         from .preprocess import cls_resize_norm
 
         x = np.stack([cls_resize_norm(c) for c in crops]).astype(np.float32)
@@ -136,11 +169,9 @@ class OnnxSession:
             return None
         return ["blank"] + chars.splitlines() + [" "]
 
-    def rec_probs(self, crops: list, max_wh_ratio: float) -> "np.ndarray":
+    def rec_probs(self, crops: list, max_wh_ratio: float) -> np.ndarray:
         """Crop batch → (N, T, C) CTC probability sequences (A3 dynamic
         width from the batch's max aspect ratio)."""
-        import numpy as np
-
         from .preprocess import rec_resize_norm
 
         x = np.stack(
@@ -149,43 +180,36 @@ class OnnxSession:
         return np.asarray(self.run({self._input_names["rec"]: x}, role="rec")[0])
 
 
-def make_session(cfg: PipelineConfig, model_bytes: bytes | None = None):
-    """Backend dispatch (one session per executor per config).
-
-    The reference ships TWO inference engines with identical pipeline
-    semantics — onnxruntime and OpenVINO
-    (/root/reference/python/rapidocr_openvino/utils.py:19-39; parity table
-    python/README.md:45-56: same models, same post-processing, different
-    runtime).  The seam here mirrors that: 'openvino' dispatches like
-    'onnx' and raises the same availability-guarded error when the runtime
-    is absent (neither runtime ships in this container); a deployment
-    installs openvino and supplies an OpenVinoSession implementing the
-    same det_prob/cls_probs/rec_probs tensor contracts — post-processing
-    is shared and untouched."""
+def make_session(cfg: PipelineConfig, model_bytes: bytes | dict | None = None):
+    """Backend dispatch: 'synthetic', 'onnx' or 'onnx_mini'."""
     if cfg.backend == "synthetic":
         return SyntheticSession(cfg)
     if cfg.backend == "onnx":
         return OnnxSession(cfg, model_bytes)
     if cfg.backend == "onnx_mini":
         # the in-repo serialized-model chain: det+cls+rec all execute from
-        # parsed ONNX bytes (kernels/onnx_models.py) — same oracle routing
-        # as 'onnx' (session.backend == 'onnx'), no runtime dependency
+        # parsed ONNX bytes (kernels/onnx_models.py), no runtime dependency
         from .onnx_models import MiniOnnxSession, build_default_model_set
 
         return MiniOnnxSession(cfg, model_bytes or build_default_model_set())
-    if cfg.backend == "openvino":
-        try:
-            import openvino  # type: ignore[import-not-found]  # noqa: F401
-        except ImportError as exc:
-            raise RuntimeError(
-                "backend='openvino' requires the openvino package on every "
-                "executor (pip install openvino); this environment does not "
-                "ship it — use backend='synthetic' (identical semantics: "
-                "reference python/README.md:45-56 parity table)"
-            ) from exc
-        raise NotImplementedError(
-            "OpenVinoSession: wire openvino.Core().compile_model over the "
-            "broadcast model bytes with the same det/cls/rec tensor "
-            "contracts as OnnxSession"
-        )
     raise ValueError(f"unknown backend {cfg.backend!r}")
+
+
+def session_for(cfg: PipelineConfig, model_bc=None):
+    """The one session per (config, model broadcast) per process.
+
+    ``model_bc`` is the Spark broadcast of the model bytes (anything with
+    ``.value``), or ``None``.  It keys the cache by identity: Python
+    workers are reused across jobs, and a job that broadcasts other bytes
+    under the same config must not run the previous job's models.  A
+    worker keeps one object per broadcast across its tasks, so the
+    session is built once per broadcast; the cache holds the key, so an
+    identity cannot be reused while its entry lives."""
+    return _cached_session(cfg, model_bc)
+
+
+@functools.lru_cache(maxsize=16)
+def _cached_session(cfg: PipelineConfig, model_bc):
+    # positional-only, so session_for(cfg) and session_for(cfg, None) share
+    # one entry (lru_cache keys the call's argument shape)
+    return make_session(cfg, model_bc.value if model_bc is not None else None)

@@ -27,9 +27,10 @@ Architecture (SURVEY.md §3.1 ⇒ Spark):
   heavy tasks finish.  Listed second, they could not launch until the
   plain tasks had released the cores, and the stage ran the two sets
   back to back.  Do not reorder the union.
-- **Per-executor session singleton**: the kernel "session" (glyph bank +
-  frozen config) is initialised once per executor on first batch — the
-  broadcast-ONNX-session analog of the reference's lru_cache model registry
+- **Per-executor session cache**: the inference session (synthetic nets
+  or models from the broadcast bytes) is built once per (config,
+  broadcast) per Python worker by ``kernels.session.session_for`` — the
+  analog of the reference's lru_cache model registry
   (ocrweb_multi/rapidocr/main.py:15-19).
 """
 
@@ -75,23 +76,6 @@ RESULT_FIELDS = StructType(
     ]
 )
 
-# ---------------------------------------------------------------------------
-# per-executor session cache (S5/S6): one kernel session per config per
-# executor process, built by kernels/session.py (synthetic ⇔ onnx dispatch,
-# model bytes arriving via Spark broadcast)
-_SESSIONS: dict[tuple, object] = {}
-
-
-def _get_session(cfg_tuple: tuple, model_bytes: bytes | None = None):
-    sess = _SESSIONS.get(cfg_tuple)
-    if sess is None:
-        from ..kernels.session import make_session
-
-        sess = make_session(PipelineConfig(*cfg_tuple), model_bytes)
-        _SESSIONS[cfg_tuple] = sess
-    return sess
-
-
 def payload_kind_col(text: Column) -> Column:
     """Routing tag computed Catalyst-side (mirrors kernels.codec.payload_kind)."""
     return (
@@ -127,32 +111,26 @@ def skip_det_col(text: Column, cfg: PipelineConfig) -> Column:
     return F.when(h.isNull(), F.lit("")).otherwise(F.when(gate, F.lit("skip")).otherwise(F.lit("det")))
 
 
-def salted_repartition(df: DataFrame, cfg: PipelineConfig, num_partitions: int | None = None) -> DataFrame:
+def salted_repartition(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
     """Spread each conversation over cfg.salt_buckets partitions so one
     10^5-turn conversation cannot pin a single task (SURVEY.md §4)."""
     salt = F.pmod(F.hash(F.col("turn_idx")), F.lit(cfg.salt_buckets))
-    if num_partitions:
-        return df.repartition(num_partitions, F.col("conv_id"), salt)
     return df.repartition(F.col("conv_id"), salt)
 
 
 def _heavy_stage(cfg: PipelineConfig, model_bc=None):
     """Build the fused mapInPandas function for html/bitmap/invalid rows.
-    ``model_bc``: optional Spark broadcast of model bytes (onnx backend)."""
-    cfg_tuple = tuple(getattr(cfg, f.name) for f in cfg.__dataclass_fields__.values())  # type: ignore[attr-defined]
+    ``model_bc``: optional Spark broadcast of model bytes (onnx backends)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..kernels.oracle import extract_turn
+        from ..kernels.session import session_for
 
-        sess = _get_session(cfg_tuple, model_bc.value if model_bc is not None else None)
-        sess_cfg = sess.cfg
+        sess = session_for(cfg, model_bc)
         for pdf in batches:
             if pdf.empty:
                 continue
-            # the session rides along: backend='onnx' routes det/cls/rec
-            # inference through session.run() (kernels/oracle.py), the
-            # synthetic backend is a no-op passenger
-            results = [extract_turn(t, sess_cfg, session=sess) for t in pdf["text"]]
+            results = [extract_turn(t, cfg, session=sess) for t in pdf["text"]]
             out = pd.DataFrame(
                 {
                     "conv_id": pdf["conv_id"].values,
@@ -253,8 +231,9 @@ def extract_transcripts_multilang(
 
     Plan shape: one union of per-language branches over the same scan;
     Catalyst pushes each branch's equality filter to the source, and the
-    per-executor session cache (_SESSIONS) ends up holding one session per
-    distinct config — sessions bind to languages exactly once per executor.
+    per-executor session cache (kernels.session.session_for) ends up
+    holding one session per distinct config — sessions bind to languages
+    exactly once per executor.
     Rows whose language has no binding run under ``default`` (tagged
     'other') or are dropped if no default is given."""
     branches: list[DataFrame] = []

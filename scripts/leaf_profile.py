@@ -17,7 +17,8 @@ Usage:
   ``bench.bench_extraction``, whose corpus, count and warm pass are its
   build and whose timed pass is its action.
 - After the session stops, ``perfbench.eventlog.fold`` sums each cell's
-  action stages.  README.md "Reading a profile" explains the fields.
+  action stages, one cell per process of a pool with one process per
+  core.  README.md "Reading a profile" explains the fields.
 - A cell's wall leaves out the profiler's own bookkeeping between build
   and action (the build-job count and the CPU reading).
 - ``--explain DIR`` writes ``<leaf>@<sf>.txt`` (formatted plan) in round
@@ -29,12 +30,15 @@ from __future__ import annotations
 import argparse
 import ast
 import json
+import multiprocessing
 import os
 import shlex
 import statistics
 import sys
 import tempfile
 import time
+from concurrent.futures import ProcessPoolExecutor
+from itertools import repeat
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -235,7 +239,12 @@ def main() -> int:
         peak_rss = run_session(args, q, cells, cores)
         session_s = time.perf_counter() - t
         t = time.perf_counter()
-        folds = {c.group: eventlog.fold(log_dir, c.group, args.rounds) for c in cells}
+        # every fold re-reads the whole log, so the cells fold in parallel;
+        # spawn, since py4j's threads outlive the stopped session
+        groups = [c.group for c in cells]
+        ctx = multiprocessing.get_context("spawn")
+        with ProcessPoolExecutor(max_workers=min(cores, len(groups)), mp_context=ctx) as pool:
+            folds = dict(zip(groups, pool.map(eventlog.fold, repeat(log_dir), groups, repeat(args.rounds))))
         fold_s = time.perf_counter() - t
         log_mb = sum(p.stat().st_size for p in log_dir.rglob("*") if p.is_file()) / 2**20
 

@@ -215,6 +215,16 @@ def test_rec_roundtrip_with_space():
     assert score == pytest.approx(0.98 * 6 / 7)
 
 
+def test_rec_empty_line_keeps_synthetic_result():
+    """A crop with no glyph grid decodes to ("", 0.0) through the session
+    path, not the all-blank model decode's 1e-50 (kernels/onnx_models.py)."""
+    from rapidocr_spark.kernels.rec import recognize
+
+    blank = [np.zeros((10, 20), np.uint8)]
+    assert recognize(blank, DEFAULT_CONFIG) == [("", 0.0)]
+    assert recognize(blank, DEFAULT_CONFIG.replace(rec_char_scores=True)) == [("", 0.0, [])]
+
+
 def test_rec_cjk_golden():
     crop = render.render_lines(["韩国小馆"], margin=2)
     text, _ = recognize_crop(crop)

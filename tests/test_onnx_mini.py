@@ -11,9 +11,10 @@ import numpy as np
 import pytest
 
 from rapidocr_spark.kernels.onnx_mini import (
-    MiniOnnxDetSession, _attr_int, _attr_ints, _node, _tensor, _value_info,
+    _attr_int, _attr_ints, _node, _tensor, _value_info,
     build_det_model, build_model, parse_model, run_model,
 )
+from rapidocr_spark.kernels.onnx_models import MiniOnnxSession, build_default_model_set
 from rapidocr_spark.plans.shell import EXTRACT_CFG
 
 
@@ -89,7 +90,7 @@ def test_hand_built_model_drives_det_identically(case):
         "rotated_canvas": np.rot90(render_lines(["flip me", "and me"]), 2).copy(),
     }
     img = imgs[case]
-    sess = MiniOnnxDetSession(EXTRACT_CFG, build_det_model())
+    sess = MiniOnnxSession(EXTRACT_CFG, build_default_model_set())
     resized, _, _ = det_resize_for_test(img, EXTRACT_CFG)
     assert np.abs(sess.det_prob(resized) - prob_map(resized)).max() < 1e-6
     ref = detect(img, EXTRACT_CFG)
@@ -104,7 +105,7 @@ def test_noise_image_yields_no_boxes_through_model():
     from rapidocr_spark.kernels.render import render_noise
 
     img = render_noise(64, 96, seed=42)
-    sess = MiniOnnxDetSession(EXTRACT_CFG, build_det_model())
+    sess = MiniOnnxSession(EXTRACT_CFG, build_default_model_set())
     assert detect(img, EXTRACT_CFG, session=sess).shape[0] == 0
 
 

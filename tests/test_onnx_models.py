@@ -142,7 +142,7 @@ def test_full_chain_from_model_bytes_matches_synthetic():
 
     cfg_o = EXTRACT_CFG.replace(backend="onnx_mini")
     sess = make_session(cfg_o)
-    assert isinstance(sess, MiniOnnxSession) and sess.backend == "onnx"
+    assert isinstance(sess, MiniOnnxSession)
     base = transcripts_pandas(5)
     for r in base.itertuples(index=False):
         a = extract_turn(r.text, EXTRACT_CFG)

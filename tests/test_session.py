@@ -1,5 +1,5 @@
-"""S5/S6 session seam: synthetic ⇔ onnx dispatch, broadcast-bytes loading,
-availability-guarded import (VERDICT r01 item 9)."""
+"""S5 session seam: synthetic ⇔ onnx dispatch, broadcast-bytes loading,
+availability-guarded import, the per-process session cache."""
 
 from __future__ import annotations
 
@@ -10,7 +10,9 @@ import pandas as pd
 import pytest
 
 from rapidocr_spark.config import DEFAULT_CONFIG
-from rapidocr_spark.kernels.session import OnnxSession, SyntheticSession, make_session
+from rapidocr_spark.kernels.session import (
+    OnnxSession, SyntheticSession, _cached_session, make_session, session_for,
+)
 from rapidocr_spark.operators import extract as extract_mod
 
 
@@ -28,19 +30,21 @@ def test_onnx_backend_without_package_raises_clearly():
 
 
 def test_unknown_backend_rejected():
-    with pytest.raises(ValueError, match="backend"):
-        make_session(DEFAULT_CONFIG.replace(backend="tensor-what"))
+    for backend in ("tensor-what", "openvino"):
+        with pytest.raises(ValueError, match="unknown backend"):
+            make_session(DEFAULT_CONFIG.replace(backend=backend), model_bytes=b"model")
 
 
 @pytest.fixture
 def fake_onnxruntime(monkeypatch):
     """A stub onnxruntime module recording what the session loads."""
-    created = {}
+    created = {"sessions": 0}
 
     class FakeInferenceSession:
         def __init__(self, model_bytes, sess_options=None, providers=None):
             created["model_bytes"] = model_bytes
             created["providers"] = providers
+            created["sessions"] += 1
 
         def run(self, outs, inputs):
             return [inputs]
@@ -74,23 +78,41 @@ class _Bc:
         self.value = v
 
 
-def test_heavy_stage_dispatches_onnx_session(fake_onnxruntime, monkeypatch):
-    """The fused stage builds the session from (config, broadcast bytes):
-    run the mapInPandas generator directly — it is a plain function."""
-    monkeypatch.setattr(extract_mod, "_SESSIONS", {})
-    cfg = DEFAULT_CONFIG.replace(backend="onnx")
-    run = extract_mod._heavy_stage(cfg, _Bc(b"weights!"))
-    batch = pd.DataFrame(
+def _plain_batch() -> pd.DataFrame:
+    return pd.DataFrame(
         {
             "conv_id": ["c0"], "turn_idx": [0], "role": ["user"], "tool": [""],
             "kind": ["plain"], "skip_det": [""], "text": ["plain:hi"],
         }
     )
-    out = list(run(iter([batch])))
+
+
+def test_heavy_stage_dispatches_onnx_session(fake_onnxruntime):
+    """The fused stage builds the session from (config, broadcast bytes):
+    run the mapInPandas generator directly — it is a plain function."""
+    _cached_session.cache_clear()
+    cfg = DEFAULT_CONFIG.replace(backend="onnx")
+    bc = _Bc(b"weights!")
+    out = list(extract_mod._heavy_stage(cfg, bc)(iter([_plain_batch()])))
     assert fake_onnxruntime["model_bytes"] == b"weights!"
     assert len(out) == 1 and out[0]["extracted_text"].tolist() == ["hi"]
-    sess = next(iter(extract_mod._SESSIONS.values()))
-    assert isinstance(sess, OnnxSession)
+    assert _cached_session.cache_info().currsize == 1
+    built = fake_onnxruntime["sessions"]
+    assert isinstance(session_for(cfg, bc), OnnxSession)
+    assert fake_onnxruntime["sessions"] == built  # cached, not rebuilt
+
+
+def test_session_cache_keys_on_the_model_broadcast(fake_onnxruntime):
+    """Python workers are reused across jobs: a second job with the same
+    config but other broadcast bytes must build its own session and load
+    ITS bytes, not run the first job's models."""
+    _cached_session.cache_clear()
+    cfg = DEFAULT_CONFIG.replace(backend="onnx")
+    for bc in (_Bc(b"first job"), _Bc(b"second job")):
+        list(extract_mod._heavy_stage(cfg, bc)(iter([_plain_batch()])))
+    assert _cached_session.cache_info().currsize == 2
+    assert fake_onnxruntime["sessions"] == 2 * len(OnnxSession.ROLES)
+    assert fake_onnxruntime["model_bytes"] == b"second job"
 
 
 @pytest.fixture
@@ -177,7 +199,7 @@ def test_onnx_det_inference_matches_synthetic(shaped_onnxruntime):
     rng = _rng("golden18")
     img = render_lines([_rand_line(rng) for _ in range(18)])
     via_onnx = detect(img, cfg, session=sess)
-    via_synth = detect(img, cfg)
+    via_synth = detect(img, cfg.replace(backend="synthetic"))
     assert via_onnx.shape == via_synth.shape == (18, 4, 2)
     assert np.array_equal(via_onnx, via_synth)
 
@@ -266,18 +288,12 @@ def test_rec_charset_from_onnx_metadata(monkeypatch):
     assert rec_kernel.recognize([crop], cfg, session=sess)[0][0] == "XY"
 
 
-def test_heavy_stage_default_synthetic(monkeypatch):
-    monkeypatch.setattr(extract_mod, "_SESSIONS", {})
-    run = extract_mod._heavy_stage(DEFAULT_CONFIG, None)
-    batch = pd.DataFrame(
-        {
-            "conv_id": ["c0"], "turn_idx": [0], "role": ["user"], "tool": [""],
-            "kind": ["plain"], "skip_det": [""], "text": ["plain:hi"],
-        }
-    )
-    list(run(iter([batch])))
-    sess = next(iter(extract_mod._SESSIONS.values()))
-    assert isinstance(sess, SyntheticSession)
+def test_heavy_stage_default_synthetic():
+    _cached_session.cache_clear()
+    list(extract_mod._heavy_stage(DEFAULT_CONFIG, None)(iter([_plain_batch()])))
+    assert _cached_session.cache_info().currsize == 1
+    assert isinstance(session_for(DEFAULT_CONFIG), SyntheticSession)
+    assert _cached_session.cache_info().hits == 1
 
 
 def test_onnx_missing_role_raises_at_build(fake_onnxruntime):
@@ -289,12 +305,3 @@ def test_onnx_missing_role_raises_at_build(fake_onnxruntime):
     with pytest.raises(ValueError, match=r"\['rec'\]"):
         make_session(cfg, model_bytes={"det": b"d", "cls": b"c"})
 
-
-def test_openvino_backend_seam_is_named():
-    """The reference's second engine (rapidocr_openvino, identical
-    semantics) dispatches like onnx: availability-guarded error when the
-    runtime is absent (VERDICT r03 missing #2)."""
-    cfg = DEFAULT_CONFIG.replace(backend="openvino")
-    assert "openvino" not in sys.modules
-    with pytest.raises(RuntimeError, match="openvino"):
-        make_session(cfg, model_bytes=b"model")

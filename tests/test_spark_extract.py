@@ -128,13 +128,20 @@ def test_salting_spreads_large_conversation(spark):
 
     df = transcripts_df(spark, 3, skew_conv=1, skew_turns=200)
     heavy = df.withColumn("kind", F.lit("x"))
-    parts = (
-        salted_repartition(heavy.where(F.col("conv_id") == "conv000001"), CFG, 16)
-        .withColumn("pid", F.spark_partition_id())
-        .groupBy("pid")
-        .count()
-        .collect()
-    )
+    # the shuffle's own partitions: AQE would coalesce 200 tiny rows into one
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        parts = (
+            salted_repartition(heavy.where(F.col("conv_id") == "conv000001"), CFG)
+            .withColumn("pid", F.spark_partition_id())
+            .groupBy("pid")
+            .count()
+            .collect()
+        )
+    finally:
+        spark.conf.set(key, prev)
     assert len(parts) > 4  # spread across many partitions, not one
 
 
