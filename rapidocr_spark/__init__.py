@@ -14,7 +14,7 @@ Layout
                 polygon expansion, orientation gate, CTC greedy decode,
                 reading-order sort). Doubles as the single-node oracle.
 - ``operators`` Spark stages: the fused Arrow-batched ``mapInPandas``
-                extraction stage, gate routing, salted repartition.
+                extraction stage, gate routing, the spread in front of it.
 - ``sources``   deterministic transcript fixture generator + readers.
 - ``functions`` column-level libraries for training-data pipelines:
                 dedup (exact/minhash/simhash/jaccard), similarity search,

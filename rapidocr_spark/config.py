@@ -64,9 +64,6 @@ class PipelineConfig:
     # keep the span payload lean
     rec_char_scores: bool = False
 
-    # ---- Engine-side scale knobs (no reference analog; SURVEY.md §4) ----
-    salt_buckets: int = 16           # salted repartition on conv_id
-
     # ---- Inference backend (S5 session seam, kernels/session.py) ----
     # 'synthetic' = the deterministic in-sandbox kernels; 'onnx' = a real
     # onnxruntime InferenceSession loaded from broadcast model bytes

@@ -1,36 +1,41 @@
-"""Scan-parallelism guard for row-group-starved parquet inputs.
+"""Explicit-count exchanges in front of the work that skew would pin.
 
-The bench/test corpora are written as ONE parquet file with ONE row group
-per table (5000-50000 rows), and parquet scans can only split at row-group
-boundaries — so every map-side computation over such a table (regex
-quality scoring, per-token polynomial hashing, 64-dim cosine folds,
-winnowing k-gram folds) runs in a SINGLE task no matter how many cores
-the session has.  That is the classic "one huge unsplittable file" input
-skew: fix it by repartitioning right after the read.
+``spread(df, *keys)`` is the one exchange: a hash repartition on ``keys``
+to the session's parallelism.  Its partition count is explicit, so AQE
+never coalesces it: AQE coalesces the other shuffles by bytes, and a
+shuffle whose rows are cheap to move but costly to process (OCR turns,
+64-dim cosine folds) would fold back onto one core.  Two callers:
 
-The repartition is SCALE-ADAPTIVE, mirroring operators/extract.py's
-salt="auto" rule: it fires only when the file's ROW-GROUP count (the hard
-ceiling on a parquet scan's parallelism, read once from the footer and
-memoized) is below the session's parallelism — a production-size table
-(many row groups / many files) already scans wide, and a defensive
-exchange there would move terabytes for nothing, so it is skipped.
+- ``operators/extract.extract_transcripts`` spreads the heavy route on
+  ``(conv_id, turn_idx)`` every time, so one long conversation cannot pin
+  the fused kernel stage to one task.
+- ``spread_parquet`` guards row-group-starved parquet inputs.  The
+  bench/test corpora are written as ONE parquet file with ONE row group
+  per table (5000-50000 rows), and parquet scans can only split at
+  row-group boundaries, so every map-side computation over such a table
+  (regex quality scoring, per-token polynomial hashing, 64-dim cosine
+  folds, winnowing k-gram folds) would run in a SINGLE task no matter how
+  many cores the session has.  It spreads only when the file's ROW-GROUP
+  count (the hard ceiling on a parquet scan's parallelism, read once from
+  the footer and memoized) is below the session's parallelism: a
+  production-size table (many row groups / many files) already scans
+  wide, and an exchange there would move terabytes for nothing.
 
-The exchange hash-partitions on the table's key column rather than
-round-robin: round-robin pays a deterministic local sort of every row
+The exchange hash-partitions on keys rather than round-robin: round-robin
+pays a deterministic local sort of every row
 (spark.sql.execution.sortBeforeRepartition, needed for retry safety),
 while hash partitioning is retry-safe by construction and measured
-cheaper here.  Keys are unique ids, so the hash spread is even.
+cheaper here.  Both callers key on unique ids, so the hash spread is even.
 
-Deliberately NOT applied to the events table or the pagerank node scan:
-those consumers are cheap map-side aggregations / join-dominated plans
-where the exchange costs more than the single-task scan it replaces
-(A/B-measured at sf1.0, see OPTIMIZATION_r08.md).
+``spread_parquet`` is deliberately NOT applied to the events table or the
+pagerank node scan: those consumers are cheap map-side aggregations /
+join-dominated plans where the exchange costs more than the single-task
+scan it replaces (A/B-measured at sf1.0, see OPTIMIZATION_r08.md).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 # path -> row-group count; footers are immutable for the session lifetime
 _RG_CACHE: dict[str, int] = {}
@@ -56,6 +61,11 @@ def _row_groups(path: str) -> int:
     return n
 
 
+def spread(df: DataFrame, *keys: str) -> DataFrame:
+    """Hash-repartition ``df`` on ``keys`` to the session's parallelism."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *keys)
+
+
 def spread_parquet(spark: SparkSession, path: str, key: str) -> DataFrame:
     """Read a parquet table; hash-repartition on ``key`` to the session's
     parallelism ONLY when the scan cannot split wide enough by itself."""
@@ -66,5 +76,5 @@ def spread_parquet(spark: SparkSession, path: str, key: str) -> DataFrame:
         return df
     rg = _row_groups(path)
     if 0 < rg < cores:
-        return df.repartition(cores, F.col(key))
+        return spread(df, key)
     return df

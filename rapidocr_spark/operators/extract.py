@@ -12,13 +12,17 @@ Architecture (SURVEY.md §3.1 ⇒ Spark):
   codegen end to end.
 - **``html:``/``bitmap:`` payloads run through ONE fused Arrow-batched
   ``mapInPandas`` stage** covering det→order→crop→cls→rec→filter, so the
-  positional zips J1–J3 never cross a partition boundary and the chain has
-  zero shuffles (the reference's in-process boundary moves to Spark's
-  shuffle edges, SURVEY.md §3.1).
-- **Salted repartition on conv_id** defuses long-conversation skew before
-  the expensive stage: per-turn work is independent, so turns of one
-  conversation may spread across ``salt_buckets`` partitions; conversation-
-  level assembly re-groups afterwards (SURVEY.md §4).
+  positional zips J1–J3 never cross a partition boundary and there are
+  zero shuffles between det, cls and rec (the reference's in-process
+  boundary moves to Spark's shuffle edges, SURVEY.md §3.1).
+- **One explicit-count spread in front of that stage** defuses
+  long-conversation skew: the heavy rows are hash-repartitioned on
+  ``(conv_id, turn_idx)`` to the session's parallelism
+  (``io.spread.spread``) every time.  Per-turn work is independent, so one
+  conversation's turns may land on every core; conversation-level
+  assembly re-groups afterwards (SURVEY.md §4).  The count is explicit
+  because AQE coalesces a keys-only repartition by bytes, and a few KB of
+  bitmap turns are seconds of OCR.
 - **The heavy branch comes first in the union.**  A union numbers its
   partitions branch by branch and the scheduler launches tasks in
   partition order, so the branch listed first gets the cores first.  The
@@ -46,6 +50,7 @@ from pyspark.sql.types import (
 )
 
 from ..config import DEFAULT_CONFIG, PipelineConfig
+from ..io.spread import spread
 
 SPAN_TYPE = ArrayType(
     StructType(
@@ -111,13 +116,6 @@ def skip_det_col(text: Column, cfg: PipelineConfig) -> Column:
     return F.when(h.isNull(), F.lit("")).otherwise(F.when(gate, F.lit("skip")).otherwise(F.lit("det")))
 
 
-def salted_repartition(df: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Spread each conversation over cfg.salt_buckets partitions so one
-    10^5-turn conversation cannot pin a single task (SURVEY.md §4)."""
-    salt = F.pmod(F.hash(F.col("turn_idx")), F.lit(cfg.salt_buckets))
-    return df.repartition(F.col("conv_id"), salt)
-
-
 def _heavy_stage(cfg: PipelineConfig, model_bc=None):
     """Build the fused mapInPandas function for html/bitmap/invalid rows.
     ``model_bc``: optional Spark broadcast of model bytes (onnx backends)."""
@@ -154,23 +152,19 @@ def _heavy_stage(cfg: PipelineConfig, model_bc=None):
 def extract_transcripts(
     df: DataFrame,
     cfg: PipelineConfig = DEFAULT_CONFIG,
-    salt: str = "auto",
     model_bytes: bytes | dict[str, bytes] | None = None,
 ) -> DataFrame:
     """transcripts(conv_id, turn_idx, role, text, tool, ts) → extraction
     results, one row per turn.  See module docstring for the plan shape.
 
-    ``salt``: per-turn work is independent, so the salted repartition is a
-    *defensive* shuffle against input-placement skew (one file/partition
-    holding a giant conversation), not a semantic need.
-      - "auto" (default): shuffle only when the input's parallelism is
-        below the cluster's (a full exchange of payload bytes is not free —
-        at 100 TB it would double network traffic for nothing when the scan
-        is already well-split);
-      - "always": force it (use when the source is known key-clustered,
-        e.g. an Iceberg table partitioned by conv_id);
-      - "never": trust the input partitioning.
-    """
+    ``plain:`` turns stay where the input put them.  Every other turn
+    crosses one exchange on ``(conv_id, turn_idx)`` with an explicit
+    partition count before the fused kernel stage, whatever the input's
+    placement: a source clustered by conversation (one file or partition
+    holding a giant conversation) and a well-split scan take the same
+    plan.  The exchange moves the heavy rows' payload bytes once;
+    CHANGES.md records what that costs on a well-split input and what it
+    saves on a clustered one."""
     tagged = df.withColumn("kind", payload_kind_col(F.col("text"))).withColumn(
         "skip_det", skip_det_col(F.col("text"), cfg)
     )
@@ -195,22 +189,12 @@ def extract_transcripts(
     heavy = tagged.where(F.col("kind") != "plain").select(
         "conv_id", "turn_idx", "role", "tool", "kind", "skip_det", "text"
     )
-    if salt == "always":
-        heavy = salted_repartition(heavy, cfg)
-    elif salt == "auto":
-        try:
-            cores = df.sparkSession.sparkContext.defaultParallelism
-            in_parts = df.rdd.getNumPartitions()
-        except Exception:  # noqa: BLE001 — e.g. Connect; fall back to safe
-            cores, in_parts = 1, 0
-        if in_parts < cores:
-            heavy = salted_repartition(heavy, cfg)
     model_bc = (
         df.sparkSession.sparkContext.broadcast(model_bytes)
         if model_bytes is not None
         else None
     )
-    heavy_out = heavy.mapInPandas(_heavy_stage(cfg, model_bc), schema=RESULT_FIELDS)
+    heavy_out = spread(heavy, "conv_id", "turn_idx").mapInPandas(_heavy_stage(cfg, model_bc), schema=RESULT_FIELDS)
 
     # heavy branch FIRST so the Python tasks launch at job start (module
     # docstring) — do not reorder
@@ -257,7 +241,7 @@ def extract_transcripts_multilang(
 def assemble_conversations(results: DataFrame) -> DataFrame:
     """Conversation-level assembly: turns joined in stable (conv_id,
     turn_idx) window order (W2) — extracted texts concatenated by '\n\n'.
-    Re-groups what salting spread; one shuffle on conv_id."""
+    Re-groups what the spread scattered; one shuffle on conv_id."""
     ordered = F.array_sort(
         F.collect_list(F.struct(F.col("turn_idx"), F.col("extracted_text")))
     )

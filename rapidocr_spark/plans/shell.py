@@ -502,18 +502,19 @@ def x_extract_most_angle(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def x_extract_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The SKEW-DEFUSING salted repartition through the driver gate
-    (VERDICT r04 item 5): extraction reruns with salt="always" — every
-    conversation's turns forcibly spread over cfg.salt_buckets partitions
-    before the heavy stage — and must still value-hash-match the SAME
-    expected-turns fixture as x_extract_turns.  Pins salted ≡ unsalted
-    (per-turn work is partition-independent); the 1.8-2× wall-time win on
-    a deliberately fat conversation is benchmarked in BENCH_SKEW.json."""
+    """The SKEW-DEFUSING spread through the driver gate (VERDICT r04 item
+    5): extraction reruns over the fixture corpus coalesced into ONE input
+    partition, and must still value-hash-match x_extract_turns' fixture.
+    One partition is the worst input placement (every conversation
+    clustered on one task), so the heavy route's (conv_id, turn_idx)
+    exchange is what scatters the turns over the cores.  Pins spread ≡
+    unspread (per-turn work is partition-independent); the wall-time win
+    on a deliberately fat conversation is recorded in CHANGES.md."""
     from ..sources.fixtures import N_FIXTURE_CONVS
     from ..sources.transcripts import transcripts_df
 
-    df = track_persist(transcripts_df(spark, N_FIXTURE_CONVS))
-    return extract_transcripts(df, EXTRACT_CFG, salt="always").select(
+    df = track_persist(transcripts_df(spark, N_FIXTURE_CONVS)).coalesce(1)
+    return extract_transcripts(df, EXTRACT_CFG).select(
         "conv_id", "turn_idx", "kind", "skip_det",
         "extracted_text", "n_boxes", "n_chars", "error",
     )
@@ -2162,7 +2163,8 @@ FROM read_parquet('{os.path.join(_FIXTURES_DIR, CONVS_FIXTURE)}')
     # results — same oracle as x_extract_turns
     sql["x_extract_checkpointed"] = sql["x_extract_turns"]
 
-    # salted extraction must be value-identical to unsalted — same fixture
+    # extraction spread from one clustered input partition must be
+    # value-identical to x_extract_turns — same fixture
     sql["x_extract_salted"] = sql["x_extract_turns"]
     # the streaming twin commits exactly the per-turn expected results
     sql["st_extract_turns"] = sql["x_extract_turns"]

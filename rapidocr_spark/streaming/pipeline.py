@@ -35,9 +35,10 @@ def extract_stream(
     stream_df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
 ) -> DataFrame:
     """The batch operator applied to a streaming frame — the plain route's
-    expressions and the fused kernel stage are both stateless, so the plan
-    is streaming-legal with no watermark needed."""
-    return extract_transcripts(stream_df, cfg, salt="never")
+    expressions, the heavy route's spread and the fused kernel stage are
+    all stateless, so the plan is streaming-legal with no watermark
+    needed."""
+    return extract_transcripts(stream_df, cfg)
 
 
 def start_to_parquet(

@@ -9,7 +9,7 @@ Cluster usage:
     spark-submit --py-files engine.zip scripts/run_extraction.py \
         --input  s3://bucket/transcripts/               \
         --output s3://bucket/extracted/                 \
-        --buckets 512 --text-score 0.5 --salt always
+        --buckets 512 --text-score 0.5
 
 Sandbox usage (synthetic corpus):
     python scripts/run_extraction.py --synthetic-convs 2000 \
@@ -40,7 +40,6 @@ def parse_args() -> argparse.Namespace:
     p.add_argument("--output", required=True, help="checkpointed output table dir")
     p.add_argument("--buckets", type=int, default=32, help="conv_id hash buckets in the sink")
     p.add_argument("--run-id", default=None)
-    p.add_argument("--salt", choices=["auto", "always", "never"], default="auto")
     # reference kwargs-override mirror (rapid_ocr_api.py:58-66)
     p.add_argument("--text-score", type=float, default=0.5)
     p.add_argument("--box-thresh", type=float, default=0.5)

@@ -21,20 +21,20 @@ def _formatted(df) -> str:
     )
 
 
-def _first_union_child(node):
-    """Tree string of the first child of the first physical Union in
-    pre-order (looking through the AQE wrapper), or None."""
+def _union_children(node) -> list[str]:
+    """Tree strings of the children of the first physical Union in
+    pre-order (looking through the AQE wrapper), or []."""
     stack = [node]
     while stack:
         node = stack.pop()
         name = node.getClass().getSimpleName()
+        kids = node.children()
         if name == "UnionExec":
-            return node.children().apply(0).toString()
+            return [kids.apply(i).toString() for i in range(kids.size())]
         if name == "AdaptiveSparkPlanExec":
             stack.append(node.executedPlan())
-        kids = node.children()
         stack.extend(kids.apply(i) for i in reversed(range(kids.size())))
-    return None
+    return []
 
 
 def test_docs_plain_scan_prunes_columns(spark):
@@ -117,8 +117,8 @@ def test_extraction_single_python_stage_per_route(spark):
     assert len(ops) <= 3, plan
     # the heavy (Python) branch is the union's FIRST child, so its tasks
     # take the first partition indices and launch at job start
-    first = _first_union_child(out._jdf.queryExecution().executedPlan())
-    assert first is not None and "MapInPandas run(" in first, plan
+    branches = _union_children(out._jdf.queryExecution().executedPlan())
+    assert branches and "MapInPandas run(" in branches[0], plan
 
 
 def test_dedup_exact_shuffles_on_hash_not_body(spark):
@@ -232,20 +232,25 @@ def test_df_capped_pairs_window_then_equi_join(spark, name, keys):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
-def test_salted_extraction_exchanges_on_conv_and_salt(spark):
-    """x_extract_salted's heavy route must show an Exchange whose
-    partitioning keys include conv_id AND the turn-hash salt — the
-    skew-defusing shuffle the gate certifies value-neutral."""
+def test_spread_extraction_exchanges_on_conv_and_turn(spark):
+    """The heavy (MapInPandas) branch sits behind exactly ONE exchange,
+    hash-partitioned on (conv_id, turn_idx) with an explicit count equal
+    to the session's parallelism, so AQE cannot coalesce it; the plain
+    branch has no exchange at all."""
+    import re
+
     from rapidocr_spark.operators.extract import extract_transcripts
     from rapidocr_spark.plans.shell import EXTRACT_CFG
     from rapidocr_spark.sources.transcripts import transcripts_df
 
-    df = transcripts_df(spark, 4)
-    plan = _formatted(extract_transcripts(df, EXTRACT_CFG, salt="always"))
-    exchanges = [
-        ln for ln in plan.splitlines() if "hashpartitioning" in ln
-    ]
-    assert any("conv_id" in ln and "pmod" in ln for ln in exchanges), plan
+    out = extract_transcripts(transcripts_df(spark, 4), EXTRACT_CFG)
+    heavy, plain = _union_children(out._jdf.queryExecution().executedPlan())
+    n = spark.sparkContext.defaultParallelism
+    assert "MapInPandas run(" in heavy, heavy
+    parts = re.findall(r"hashpartitioning\(([^)]*)\)", heavy)
+    assert [re.sub(r"#\d+", "", p) for p in parts] == [f"conv_id, turn_idx, {n}"], heavy
+    assert heavy.count("Exchange") == 1, heavy
+    assert "Exchange" not in plain, plain
 
 
 def test_binaryfile_ingest_uses_binaryfile_source(spark):

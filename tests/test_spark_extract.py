@@ -121,28 +121,17 @@ def test_assemble_conversations(results, oracle_rows):
     assert row["n_turns"] == len(want_turns)
 
 
-def test_salting_spreads_large_conversation(spark):
-    """One skewed conversation must not land in a single partition of the
-    heavy stage (SURVEY.md §4 salted repartition)."""
-    from rapidocr_spark.operators.extract import salted_repartition
-
-    df = transcripts_df(spark, 3, skew_conv=1, skew_turns=200)
-    heavy = df.withColumn("kind", F.lit("x"))
-    # the shuffle's own partitions: AQE would coalesce 200 tiny rows into one
-    key = "spark.sql.adaptive.coalescePartitions.enabled"
-    prev = spark.conf.get(key)
-    spark.conf.set(key, "false")
-    try:
-        parts = (
-            salted_repartition(heavy.where(F.col("conv_id") == "conv000001"), CFG)
-            .withColumn("pid", F.spark_partition_id())
-            .groupBy("pid")
-            .count()
-            .collect()
-        )
-    finally:
-        spark.conf.set(key, prev)
-    assert len(parts) > 4  # spread across many partitions, not one
+def test_spread_scatters_large_conversation(spark):
+    """One long conversation clustered in ONE input partition must reach
+    the fused kernel stage on every core, under the session's AQE
+    defaults: the heavy route's explicit-count exchange is not coalesced
+    by bytes (SURVEY.md §4)."""
+    df = transcripts_df(spark, 3, skew_conv=1, skew_turns=200).coalesce(1)
+    heavy = extract_transcripts(df, CFG).where(
+        (F.col("conv_id") == "conv000001") & (F.col("kind") != "plain")
+    )
+    parts = heavy.select(F.spark_partition_id().alias("pid")).distinct().collect()
+    assert len(parts) == spark.sparkContext.defaultParallelism
 
 
 def test_multilang_stays_at_two_branches():
