@@ -36,6 +36,9 @@ Architecture (SURVEY.md §3.1 ⇒ Spark):
   broadcast) per Python worker by ``kernels.session.session_for`` — the
   analog of the reference's lru_cache model registry
   (ocrweb_multi/rapidocr/main.py:15-19).
+- **Language bindings are per row, not per plan**: the multilang entry
+  point builds this same plan once, with a ``lang`` tag column; the F1
+  tag and the kernel stage look each row's config up by that tag.
 """
 
 from __future__ import annotations
@@ -116,19 +119,39 @@ def skip_det_col(text: Column, cfg: PipelineConfig) -> Column:
     return F.when(h.isNull(), F.lit("")).otherwise(F.when(gate, F.lit("skip")).otherwise(F.lit("det")))
 
 
-def _heavy_stage(cfg: PipelineConfig, model_bc=None):
+def _skip_det_by_lang(text: Column, configs: dict) -> Column:
+    """The F1 tag under each row's binding: a ``when`` chain of
+    ``skip_det_col`` over the bound languages, the last binding as the
+    fallthrough (every row that reaches it carries a bound ``lang``).  One
+    binding is ``skip_det_col`` itself."""
+    *bound, (_, last) = configs.items()
+    tag = skip_det_col(text, last)
+    for lang, cfg in reversed(bound):
+        tag = F.when(F.col("lang") == lang, skip_det_col(text, cfg)).otherwise(tag)
+    return tag
+
+
+def _heavy_stage(configs: dict, model_bc=None):
     """Build the fused mapInPandas function for html/bitmap/invalid rows.
-    ``model_bc``: optional Spark broadcast of model bytes (onnx backends)."""
+    ``configs`` maps each ``lang`` value to its config (the key ``None``:
+    no ``lang`` column, every row under that one config); ``model_bc``:
+    optional Spark broadcast of model bytes (onnx backends)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         from ..kernels.oracle import extract_turn
         from ..kernels.session import session_for
 
-        sess = session_for(cfg, model_bc)
+        # each binding's session resolved once per task, not per row: the
+        # session_for cache holds only 16 entries
+        bound = {lang: (cfg, session_for(cfg, model_bc)) for lang, cfg in configs.items()}
         for pdf in batches:
             if pdf.empty:
                 continue
-            results = [extract_turn(t, cfg, session=sess) for t in pdf["text"]]
+            langs = pdf["lang"] if "lang" in pdf else [None] * len(pdf)
+            results = []
+            for text, lang in zip(pdf["text"], langs):
+                cfg, sess = bound[lang]
+                results.append(extract_turn(text, cfg, session=sess))
             out = pd.DataFrame(
                 {
                     "conv_id": pdf["conv_id"].values,
@@ -144,9 +167,58 @@ def _heavy_stage(cfg: PipelineConfig, model_bc=None):
                     "error": [r["error"] for r in results],
                 }
             )
+            if "lang" in pdf:
+                out["lang"] = pdf["lang"].values
             yield out
 
     return run
+
+
+def _extract(df: DataFrame, configs: dict, model_bytes) -> DataFrame:
+    """The one extraction plan builder.  ``configs`` maps each ``lang``
+    value to its config; the single key ``None`` means ``df`` has no
+    ``lang`` column and every row runs under that one config."""
+    lang = [] if None in configs else ["lang"]
+    tagged = df.withColumn("kind", payload_kind_col(F.col("text"))).withColumn(
+        "skip_det", _skip_det_by_lang(F.col("text"), configs)
+    )
+    schema = StructType(
+        RESULT_FIELDS.fields + [StructField(c, StringType()) for c in lang]
+    )
+
+    # ---- light route: plain payloads, pure Catalyst expressions ----------
+    plain = tagged.where(F.col("kind") == "plain")
+    body = F.expr("substring(text, 7, length(text))")
+    lines = F.filter(
+        F.transform(F.split(body, "\n"), lambda s: F.trim(s)), lambda s: s != ""
+    )
+    extracted = F.array_join(lines, "\n")
+    plain_out = plain.select(
+        "conv_id", "turn_idx", "role", "tool", "kind", "skip_det",
+        F.lit(None).cast(SPAN_TYPE).alias("spans"),
+        extracted.alias("extracted_text"),
+        F.lit(0).alias("n_boxes"),
+        F.length(extracted).alias("n_chars"),
+        F.lit(None).cast("string").alias("error"),
+        *lang,
+    ).withColumn("spans", F.array().cast(SPAN_TYPE))
+
+    # ---- heavy route: html/bitmap/invalid through the fused kernel stage --
+    heavy = tagged.where(F.col("kind") != "plain").select(
+        "conv_id", "turn_idx", "role", "tool", "kind", "skip_det", "text", *lang
+    )
+    model_bc = (
+        df.sparkSession.sparkContext.broadcast(model_bytes)
+        if model_bytes is not None
+        else None
+    )
+    heavy_out = spread(heavy, "conv_id", "turn_idx").mapInPandas(
+        _heavy_stage(configs, model_bc), schema=schema
+    )
+
+    # heavy branch FIRST so the Python tasks launch at job start (module
+    # docstring) — do not reorder
+    return heavy_out.unionByName(plain_out.select(schema.fieldNames()))
 
 
 def extract_transcripts(
@@ -165,77 +237,38 @@ def extract_transcripts(
     plan.  The exchange moves the heavy rows' payload bytes once;
     CHANGES.md records what that costs on a well-split input and what it
     saves on a clustered one."""
-    tagged = df.withColumn("kind", payload_kind_col(F.col("text"))).withColumn(
-        "skip_det", skip_det_col(F.col("text"), cfg)
-    )
-
-    # ---- light route: plain payloads, pure Catalyst expressions ----------
-    plain = tagged.where(F.col("kind") == "plain")
-    body = F.expr("substring(text, 7, length(text))")
-    lines = F.filter(
-        F.transform(F.split(body, "\n"), lambda s: F.trim(s)), lambda s: s != ""
-    )
-    extracted = F.array_join(lines, "\n")
-    plain_out = plain.select(
-        "conv_id", "turn_idx", "role", "tool", "kind", "skip_det",
-        F.lit(None).cast(SPAN_TYPE).alias("spans"),
-        extracted.alias("extracted_text"),
-        F.lit(0).alias("n_boxes"),
-        F.length(extracted).alias("n_chars"),
-        F.lit(None).cast("string").alias("error"),
-    ).withColumn("spans", F.array().cast(SPAN_TYPE))
-
-    # ---- heavy route: html/bitmap/invalid through the fused kernel stage --
-    heavy = tagged.where(F.col("kind") != "plain").select(
-        "conv_id", "turn_idx", "role", "tool", "kind", "skip_det", "text"
-    )
-    model_bc = (
-        df.sparkSession.sparkContext.broadcast(model_bytes)
-        if model_bytes is not None
-        else None
-    )
-    heavy_out = spread(heavy, "conv_id", "turn_idx").mapInPandas(_heavy_stage(cfg, model_bc), schema=RESULT_FIELDS)
-
-    # heavy branch FIRST so the Python tasks launch at job start (module
-    # docstring) — do not reorder
-    return heavy_out.unionByName(plain_out.select([f.name for f in RESULT_FIELDS.fields]))
+    return _extract(df, {None: cfg}, model_bytes)
 
 
 def extract_transcripts_multilang(
     df: DataFrame,
     configs: dict[str, PipelineConfig],
-    lang_col: str = "lang",
     default: PipelineConfig | None = None,
-    **kw,
+    model_bytes: bytes | dict[str, bytes] | None = None,
 ) -> DataFrame:
-    """J4 per-language model registry binding: each language's turns run
-    through the fused kernel stage under THAT language's config — the
-    engine analog of ocrweb_multi's lang→model map (config.yaml:72-104,
+    """J4 per-language model registry binding: each turn runs through the
+    fused kernel stage under its ``lang`` column's config — the engine
+    analog of ocrweb_multi's lang→model map (config.yaml:72-104,
     rapidocr/main.py:15-19 ``get_engine(lang)`` lru_cache).
 
-    Plan shape: one union of per-language branches over the same scan;
-    Catalyst pushes each branch's equality filter to the source, and the
-    per-executor session cache (kernels.session.session_for) ends up
-    holding one session per distinct config — sessions bind to languages
-    exactly once per executor.
-    Rows whose language has no binding run under ``default`` (tagged
-    'other') or are dropped if no default is given."""
-    branches: list[DataFrame] = []
-    langs = sorted(configs)
-    for lang in langs:
-        sub = df.where(F.col(lang_col) == lang)
-        branches.append(
-            extract_transcripts(sub, configs[lang], **kw).withColumn("lang", F.lit(lang))
-        )
+    Plan shape: the same single plan as ``extract_transcripts`` — one scan,
+    one exchange, one fused Python stage, one model broadcast.  Each row
+    is tagged ``lang`` once in Catalyst: its own language when bound,
+    ``'other'`` when not (or NULL) and ``default`` is given, and otherwise
+    dropped before the plain/heavy split.  The F1 skip-det tag follows the
+    row's binding, and each heavy task resolves every binding's session
+    once (``kernels.session.session_for``) and looks it up per row."""
+    bindings = dict(configs)
     if default is not None:
-        rest = df.where(~F.col(lang_col).isin(langs) | F.col(lang_col).isNull())
-        branches.append(
-            extract_transcripts(rest, default, **kw).withColumn("lang", F.lit("other"))
-        )
-    out = branches[0]
-    for b in branches[1:]:
-        out = out.unionByName(b)
-    return out
+        if "other" in bindings:
+            raise ValueError("'other' tags the default binding's rows; rename that language")
+        bindings["other"] = default
+    tag = F.when(F.col("lang").isin(*configs), F.col("lang"))
+    if default is None:
+        tagged = df.withColumn("lang", tag).where(F.col("lang").isNotNull())
+    else:
+        tagged = df.withColumn("lang", tag.otherwise(F.lit("other")))
+    return _extract(tagged, bindings, model_bytes)
 
 
 def assemble_conversations(results: DataFrame) -> DataFrame:

@@ -28,10 +28,18 @@ from ..functions.similarity import (
     LLOYD_ITERS, LSH_PLANES, MAX_PLANES, MAX_QUERIES, MIN_PLANES, NPROBE_L8,
     QUERY_MOD, TOP_K,
 )
-from ..operators.extract import extract_transcripts
+from ..operators.extract import (
+    assemble_conversations, extract_transcripts, extract_transcripts_multilang,
+)
 from ..plans import events, relational
 
 EXTRACT_CFG = DEFAULT_CONFIG.replace(det_limit_side_len=32)
+
+# the per-turn columns gated against the expected-turns fixture
+_TURN_COLS = (
+    "conv_id", "turn_idx", "kind", "skip_det",
+    "extracted_text", "n_boxes", "n_chars", "error",
+)
 
 # ---------------------------------------------------------------------------
 # shared SQL fragments (DuckDB dialect)
@@ -160,10 +168,7 @@ def x_extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     # parquet source would be two pruned scans, but the synthetic generator
     # would otherwise render every conversation twice
     df = track_persist(transcripts_df(spark, N_FIXTURE_CONVS))
-    return extract_transcripts(df, EXTRACT_CFG).select(
-        "conv_id", "turn_idx", "kind", "skip_det",
-        "extracted_text", "n_boxes", "n_chars", "error",
-    )
+    return extract_transcripts(df, EXTRACT_CFG).select(*_TURN_COLS)
 
 
 def x_extract_onnx(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -178,24 +183,19 @@ def x_extract_onnx(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the SAME expected-turns fixture as x_extract_turns — the
     serialized chain must be bit-identical to the synthetic kernels."""
     from ..kernels.onnx_models import build_default_model_set
-    from ..operators.extract import extract_transcripts
     from ..sources.fixtures import N_FIXTURE_CONVS
     from ..sources.transcripts import transcripts_df
 
     df = track_persist(transcripts_df(spark, N_FIXTURE_CONVS))
     cfg = EXTRACT_CFG.replace(backend="onnx_mini")
     out = extract_transcripts(df, cfg, model_bytes=build_default_model_set())
-    return out.select(
-        "conv_id", "turn_idx", "kind", "skip_det",
-        "extracted_text", "n_boxes", "n_chars", "error",
-    )
+    return out.select(*_TURN_COLS)
 
 
 def x_assemble_conversations(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W2 conversation assembly: per-turn extractions re-grouped in stable
     (conv_id, turn_idx) order and joined by blank lines — one shuffle on
     conv_id, gated against the conversation-level fixture."""
-    from ..operators.extract import assemble_conversations
     from ..sources.fixtures import N_FIXTURE_CONVS
     from ..sources.transcripts import transcripts_df
 
@@ -206,12 +206,10 @@ def x_assemble_conversations(spark: SparkSession, sf_dir: str) -> DataFrame:
 def x_extract_multilang(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J4 per-language model-registry binding through the driver gate:
     even conversations run the default config, odd ones a 'zh' config with
-    use_cls=False (rotated bitmaps stay uncorrected on that branch — a real
-    behavioural difference pinned by the fixture oracle).  Two language
-    branches only: Spark 4.1.2's driver-side Arrow collect segfaults on
-    ≥3-branch Python-runner unions (CLAUDE.md), and two branches exercise
-    the whole J4 routing path."""
-    from ..operators.extract import extract_transcripts_multilang
+    use_cls=False (rotated bitmaps stay uncorrected under that binding — a
+    real behavioural difference pinned by the fixture oracle).  Both
+    bindings resolve per row inside the one fused extraction stage, so the
+    plan is the single-config plan plus a ``lang`` column."""
     from ..sources.fixtures import N_FIXTURE_CONVS, multilang_configs
     from ..sources.transcripts import transcripts_df
 
@@ -226,6 +224,15 @@ def x_extract_multilang(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select(
         "conv_id", "turn_idx", "lang", "kind",
         "extracted_text", "n_boxes", "n_chars", "error",
+    )
+
+
+def _committed_turns(spark: SparkSession, path: str) -> DataFrame:
+    """A committed extraction table read back as _TURN_COLS, its integer
+    columns cast to int like the fixture's."""
+    ints = ("turn_idx", "n_boxes", "n_chars")
+    return spark.read.parquet(path).select(
+        *[F.col(c).cast("int").alias(c) if c in ints else c for c in _TURN_COLS]
     )
 
 
@@ -250,17 +257,7 @@ def x_extract_checkpointed(spark: SparkSession, sf_dir: str) -> DataFrame:
     m2 = run_extraction(spark, df, out, EXTRACT_CFG)  # must be a no-op
     if m2["turns"] != 0 or not m2["resumed"]:
         raise RuntimeError(f"checkpoint resume was not a no-op: {m2}")
-    t = spark.read.parquet(out)
-    return t.select(
-        "conv_id",
-        F.col("turn_idx").cast("int").alias("turn_idx"),
-        "kind",
-        "skip_det",
-        "extracted_text",
-        F.col("n_boxes").cast("int").alias("n_boxes"),
-        F.col("n_chars").cast("int").alias("n_chars"),
-        "error",
-    )
+    return _committed_turns(spark, out)
 
 
 _ST_COUNTER = [0]
@@ -492,9 +489,13 @@ def x_extract_most_angle(spark: SparkSession, sf_dir: str) -> DataFrame:
     upside down and the output provably differs from the per-crop F8
     path (fixture generation asserts the divergence;
     sources/fixtures.py:expected_mostangle_pandas)."""
-    from ..sources.fixtures import N_FIXTURE_MOSTANGLE, mostangle_df
+    from ..sources.fixtures import (
+        N_FIXTURE_MOSTANGLE, mostangle_payload, single_turn_df,
+    )
 
-    df = track_persist(mostangle_df(spark, N_FIXTURE_MOSTANGLE))
+    df = track_persist(
+        single_turn_df(spark, N_FIXTURE_MOSTANGLE, "ma", mostangle_payload)
+    )
     out = extract_transcripts(df, EXTRACT_CFG.replace(cls_most_angle=True))
     return out.select(
         "conv_id", "turn_idx", "extracted_text", "n_boxes", "n_chars", "error"
@@ -514,10 +515,7 @@ def x_extract_salted(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..sources.transcripts import transcripts_df
 
     df = track_persist(transcripts_df(spark, N_FIXTURE_CONVS)).coalesce(1)
-    return extract_transcripts(df, EXTRACT_CFG).select(
-        "conv_id", "turn_idx", "kind", "skip_det",
-        "extracted_text", "n_boxes", "n_chars", "error",
-    )
+    return extract_transcripts(df, EXTRACT_CFG).select(*_TURN_COLS)
 
 
 def x_extract_padded(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -529,9 +527,11 @@ def x_extract_padded(spark: SparkSession, sf_dir: str) -> DataFrame:
     back by −padding WITHOUT clipping, going negative
     (OcrLite.cpp:172-184).  Fixture generation asserts the knob diverges
     from the unpadded run AND that negative corners occur."""
-    from ..sources.fixtures import N_FIXTURE_PADDED, PADDING_GATE, padded_df
+    from ..sources.fixtures import (
+        N_FIXTURE_PADDED, PADDING_GATE, padded_payload, single_turn_df,
+    )
 
-    df = track_persist(padded_df(spark, N_FIXTURE_PADDED))
+    df = track_persist(single_turn_df(spark, N_FIXTURE_PADDED, "pd", padded_payload))
     out = extract_transcripts(df, EXTRACT_CFG.replace(det_padding=PADDING_GATE))
     sp = out.where(F.col("spans").isNotNull() & (F.size("spans") > 0)).select(
         "conv_id", "turn_idx", F.posexplode("spans").alias("span_idx", "span")
@@ -562,9 +562,7 @@ def st_extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ..sources.fixtures import N_FIXTURE_CONVS
     from ..sources.transcripts import transcripts_df
-    from ..streaming.pipeline import (
-        extract_stream, read_transcript_stream, start_to_parquet,
-    )
+    from ..streaming.pipeline import read_transcript_stream, start_to_parquet
 
     base = tempfile.mkdtemp(prefix="rapidocr_stx_")
     _SCRATCH_DIRS.append(base)
@@ -573,7 +571,7 @@ def st_extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     ckpt = os.path.join(base, "ckpt")
     transcripts_df(spark, N_FIXTURE_CONVS).write.mode("overwrite").parquet(src)
     q = start_to_parquet(
-        extract_stream(read_transcript_stream(spark, src), EXTRACT_CFG), out, ckpt
+        extract_transcripts(read_transcript_stream(spark, src), EXTRACT_CFG), out, ckpt
     )
     try:
         # awaitTermination(timeout) returns False WITHOUT raising on
@@ -585,17 +583,7 @@ def st_extract_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
     finally:
         q.stop()
-    t = spark.read.parquet(out)
-    return t.select(
-        "conv_id",
-        F.col("turn_idx").cast("int").alias("turn_idx"),
-        "kind",
-        "skip_det",
-        "extracted_text",
-        F.col("n_boxes").cast("int").alias("n_boxes"),
-        F.col("n_chars").cast("int").alias("n_chars"),
-        "error",
-    )
+    return _committed_turns(spark, out)
 
 
 def x_vis_boxes(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -47,8 +47,8 @@ def lang_for_conv(conv_idx: int) -> str:
 
 def multilang_configs(cfg: PipelineConfig) -> dict[str, PipelineConfig]:
     """The per-language model-registry binding under test: 'zh' runs with
-    use_cls=False, so 180°-rotated bitmaps are NOT orientation-corrected on
-    that branch — a real behavioural difference that the fixture oracle
+    use_cls=False, so 180°-rotated bitmaps are NOT orientation-corrected under
+    that binding — a real behavioural difference that the fixture oracle
     pins down (the analog of ocrweb_multi's lang→model map)."""
     return {"en": cfg, "zh": cfg.replace(use_cls=False)}
 
@@ -160,6 +160,37 @@ def expected_char_scores_pandas(n_convs: int, cfg: PipelineConfig) -> pd.DataFra
 
 
 # ---------------------------------------------------------------------------
+# Single-turn gate corpora: one conversation per id, ``{prefix}{idx:04d}``,
+# turn 0, ``payload(idx)`` as its text (the mostAngle and padded corpora).
+
+
+def single_turn_df(spark, n: int, prefix: str, payload):
+    """Distributed generation of ids 0..n-1 (one task per id range, like
+    sources/media.py)."""
+
+    def gen(batches):
+        for pdf in batches:
+            yield pd.DataFrame(
+                [
+                    {
+                        "conv_id": f"{prefix}{idx:04d}",
+                        "turn_idx": 0,
+                        "role": "user",
+                        "text": payload(idx),
+                        "tool": "",
+                        "ts": pd.Timestamp("2026-01-01"),
+                    }
+                    for idx in map(int, pdf["id"])
+                ]
+            )
+
+    n_parts = max(1, min(n, int(spark.sparkContext.defaultParallelism)))
+    return spark.range(0, n, numPartitions=n_parts).mapInPandas(
+        gen, schema="conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
+    )
+
+
+# ---------------------------------------------------------------------------
 # A4 mostAngle gate corpus (round 5): bitmaps with MIXED per-line
 # orientations, where the batch-majority override (cls_most_angle=True,
 # dotnet OcrLib/AngleNet.cs:74-97) produces a DIFFERENT extraction than
@@ -192,37 +223,6 @@ def mostangle_payload(idx: int) -> str:
         for j, ln in enumerate(lines)
     ]
     return encode_bitmap(np.vstack(parts))
-
-
-def mostangle_rows(idxs: list[int]) -> pd.DataFrame:
-    """Shared row constructor — the single source of the corpus schema."""
-    return pd.DataFrame(
-        [
-            {
-                "conv_id": f"ma{idx:04d}",
-                "turn_idx": 0,
-                "role": "user",
-                "text": mostangle_payload(idx),
-                "tool": "",
-                "ts": pd.Timestamp("2026-01-01"),
-            }
-            for idx in idxs
-        ]
-    )
-
-
-def mostangle_df(spark, n: int):
-    """Distributed generation of the mostAngle corpus (one task per id
-    range, like sources/media.py)."""
-
-    def gen(batches):
-        for pdf in batches:
-            yield mostangle_rows([int(i) for i in pdf["id"].tolist()])
-
-    n_parts = max(1, min(n, int(spark.sparkContext.defaultParallelism)))
-    return spark.range(0, n, numPartitions=n_parts).mapInPandas(
-        gen, schema="conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    )
 
 
 def expected_mostangle_pandas(n: int, cfg: PipelineConfig) -> pd.DataFrame:
@@ -285,33 +285,6 @@ def padded_payload(idx: int) -> str:
     k = int(rng.integers(2, 4))
     lines = [_rand_line(rng, lo=3, hi=10) for _ in range(k)]
     return encode_bitmap(render_lines(lines, margin=2))
-
-
-def padded_df(spark, n: int):
-    def gen(batches):
-        for pdf in batches:
-            yield padded_pandas_rows([int(i) for i in pdf["id"].tolist()])
-
-    n_parts = max(1, min(n, int(spark.sparkContext.defaultParallelism)))
-    return spark.range(0, n, numPartitions=n_parts).mapInPandas(
-        gen, schema="conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
-    )
-
-
-def padded_pandas_rows(idxs: list[int]) -> pd.DataFrame:
-    return pd.DataFrame(
-        [
-            {
-                "conv_id": f"pd{idx:04d}",
-                "turn_idx": 0,
-                "role": "user",
-                "text": padded_payload(idx),
-                "tool": "",
-                "ts": pd.Timestamp("2026-01-01"),
-            }
-            for idx in idxs
-        ]
-    )
 
 
 def _r2(x: float) -> float:

@@ -3,7 +3,10 @@
 The reference is batch-only (SURVEY.md §2.9: its web servers are
 request/response), so streaming is engine-added surface: the fused
 ``mapInPandas`` extraction stage is stateless per turn, which makes it
-directly usable on a streaming DataFrame — identical kernel, identical
+directly usable on a streaming DataFrame — ``extract_transcripts`` applies
+to the frame ``read_transcript_stream`` returns as it is (the plain route's
+expressions, the heavy route's spread and the fused kernel stage are all
+stateless, so the plan needs no watermark): identical kernel, identical
 output schema, exactly-once via checkpointed file sink.
 
 At scale this is the "continuously land new transcript partitions" shape:
@@ -17,8 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
-from ..config import DEFAULT_CONFIG, PipelineConfig
-from ..operators.extract import extract_transcripts
 from ..sources.transcripts import TRANSCRIPT_SCHEMA
 
 
@@ -29,16 +30,6 @@ def read_transcript_stream(spark: SparkSession, input_dir: str, max_files: int =
         .option("maxFilesPerTrigger", max_files)
         .parquet(input_dir)
     )
-
-
-def extract_stream(
-    stream_df: DataFrame, cfg: PipelineConfig = DEFAULT_CONFIG
-) -> DataFrame:
-    """The batch operator applied to a streaming frame — the plain route's
-    expressions, the heavy route's spread and the fused kernel stage are
-    all stateless, so the plan is streaming-legal with no watermark
-    needed."""
-    return extract_transcripts(stream_df, cfg)
 
 
 def start_to_parquet(

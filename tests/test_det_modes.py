@@ -129,40 +129,61 @@ def test_codec_registry_all_real_decoders():
 
 
 def test_multilang_routing(spark):
+    """Three bindings plus a default: every turn matches the eager oracle
+    under its own binding, F1 tag included, and unbound languages run
+    under the default tagged 'other' (so no binding may be named 'other')."""
     from pyspark.sql import functions as F
 
     from rapidocr_spark.kernels.oracle import extract_turn
     from rapidocr_spark.operators.extract import extract_transcripts_multilang
+    from rapidocr_spark.sources.fixtures import skip_det_tag
     from rapidocr_spark.sources.transcripts import transcripts_df
 
-    df = transcripts_df(spark, 6).withColumn(
+    conv = F.substring(F.col("conv_id"), 5, 6).cast("int") % 4
+    df = transcripts_df(spark, 8).withColumn(
         "lang",
-        F.when(F.hash("conv_id") % 2 == 0, F.lit("ch")).otherwise(F.lit("en")),
+        F.when(conv == 0, F.lit("en"))
+        .when(conv == 1, F.lit("zh"))
+        .when(conv == 2, F.lit("ja"))
+        .otherwise(F.lit("xx")),
     )
-    strict = EXTRACT_CFG.replace(text_score=0.995)  # en: drops every span
-    out = extract_transcripts_multilang(
-        df, {"en": strict}, default=EXTRACT_CFG
-    )
-    # NOTE: .collect(), not .toPandas() — Spark 4.1.2's driver-side Arrow
-    # collect can segfault on a ≥3-branch union of Python-runner stages
-    # (distributed paths — count/collect/writes — are unaffected)
+    configs = {
+        "en": EXTRACT_CFG.replace(text_score=0.995),  # drops every span
+        "zh": EXTRACT_CFG.replace(use_cls=False),
+        "ja": EXTRACT_CFG.replace(min_height=60),  # moves the F1 gate
+    }
+    with pytest.raises(ValueError, match="'other'"):
+        extract_transcripts_multilang(df, {"other": EXTRACT_CFG}, default=EXTRACT_CFG)
+    out = extract_transcripts_multilang(df, configs, default=EXTRACT_CFG)
     rows = out.select(
-        "conv_id", "turn_idx", "lang", "kind", "n_boxes", "extracted_text"
+        "conv_id", "turn_idx", "lang", "kind", "skip_det", "n_boxes",
+        "extracted_text",
     ).collect()
-    langs = {r["lang"] for r in rows}
-    assert langs <= {"en", "other"}
+    assert {r["lang"] for r in rows} == {"en", "zh", "ja", "other"}
     en_bitmap = [r for r in rows if r["lang"] == "en" and r["kind"] == "bitmap"]
     other_bitmap = [r for r in rows if r["lang"] == "other" and r["kind"] == "bitmap"]
     assert en_bitmap and all(r["n_boxes"] == 0 for r in en_bitmap)
     assert any(r["n_boxes"] > 0 for r in other_bitmap)
     # per-turn equality against the eager oracle under the bound config
-    src = df.select("conv_id", "turn_idx", "lang", "text").collect()
-    exp = {
-        (r["conv_id"], r["turn_idx"]): extract_turn(
-            r["text"], strict if r["lang"] == "en" else EXTRACT_CFG
-        )["extracted_text"]
-        for r in src[:40]
+    bound = {**configs, "other": EXTRACT_CFG}
+    src = {
+        (r["conv_id"], r["turn_idx"]): r["text"]
+        for r in df.select("conv_id", "turn_idx", "text").collect()
     }
-    got = {(r["conv_id"], r["turn_idx"]): r["extracted_text"] for r in rows}
-    for k, v in exp.items():
-        assert got[k] == v
+    assert len(rows) == len(src)
+    for r in rows:
+        cfg = bound[r["lang"]]
+        text = src[(r["conv_id"], r["turn_idx"])]
+        want = extract_turn(text, cfg)
+        assert (r["extracted_text"], r["n_boxes"]) == (
+            want["extracted_text"], want["n_boxes"]
+        ), (r["conv_id"], r["turn_idx"], r["lang"])
+        assert r["skip_det"] == skip_det_tag(text, cfg)
+    # the ja binding's F1 gate bites: some turn skips det under it that
+    # the default config would detect
+    assert any(
+        r["lang"] == "ja"
+        and r["skip_det"] == "skip"
+        and skip_det_tag(src[(r["conv_id"], r["turn_idx"])], EXTRACT_CFG) == "det"
+        for r in rows
+    )

@@ -253,6 +253,52 @@ def test_spread_extraction_exchanges_on_conv_and_turn(spark):
     assert "Exchange" not in plain, plain
 
 
+def test_multilang_is_one_extraction_plan(spark, tmp_path, monkeypatch):
+    """Three language bindings plus a default plan like one config: ONE
+    fused MapInPandas behind ONE (conv_id, turn_idx) exchange, heavy
+    branch first, and the model bytes broadcast once — the bindings
+    resolve per row, not per union branch."""
+    import re
+
+    from rapidocr_spark.operators.extract import extract_transcripts_multilang
+    from rapidocr_spark.plans.shell import EXTRACT_CFG
+    from rapidocr_spark.sources.transcripts import transcripts_df
+
+    path = str(tmp_path / "transcripts")
+    transcripts_df(spark, 4).write.parquet(path)  # a scan, not a generator
+    conv = F.substring(F.col("conv_id"), 5, 6).cast("int") % 4
+    df = spark.read.parquet(path).withColumn(
+        "lang",
+        F.when(conv == 0, F.lit("en"))
+        .when(conv == 1, F.lit("zh"))
+        .when(conv == 2, F.lit("ja"))
+        .otherwise(F.lit("xx")),
+    )
+    configs = {
+        "en": EXTRACT_CFG,
+        "zh": EXTRACT_CFG.replace(use_cls=False),
+        "ja": EXTRACT_CFG.replace(min_height=60),
+    }
+    sc = spark.sparkContext
+    broadcasts = []
+    real_broadcast = sc.broadcast
+    monkeypatch.setattr(
+        sc, "broadcast", lambda v: broadcasts.append(v) or real_broadcast(v)
+    )
+    out = extract_transcripts_multilang(
+        df, configs, default=EXTRACT_CFG, model_bytes=b"model"
+    )
+    assert len(broadcasts) == 1, broadcasts
+    plan = _formatted(out)
+    assert len(re.findall(r"^\(\d+\) MapInPandas", plan, flags=re.M)) == 1, plan
+    assert len(re.findall(r"^\(\d+\) Exchange", plan, flags=re.M)) == 1, plan
+    parts = re.findall(r"hashpartitioning\(([^)]*)\)", plan)
+    n = sc.defaultParallelism
+    assert {re.sub(r"#\d+", "", p) for p in parts} == {f"conv_id, turn_idx, {n}"}, plan
+    branches = _union_children(out._jdf.queryExecution().executedPlan())
+    assert len(branches) == 2 and "MapInPandas run(" in branches[0], plan
+
+
 def test_binaryfile_ingest_uses_binaryfile_source(spark):
     """mm_ingest_binaryfile must scan through Spark's binaryFile data
     source (a real FileScan over the container files) into ONE

@@ -93,7 +93,7 @@ def test_heavy_stage_dispatches_onnx_session(fake_onnxruntime):
     _cached_session.cache_clear()
     cfg = DEFAULT_CONFIG.replace(backend="onnx")
     bc = _Bc(b"weights!")
-    out = list(extract_mod._heavy_stage(cfg, bc)(iter([_plain_batch()])))
+    out = list(extract_mod._heavy_stage({None: cfg}, bc)(iter([_plain_batch()])))
     assert fake_onnxruntime["model_bytes"] == b"weights!"
     assert len(out) == 1 and out[0]["extracted_text"].tolist() == ["hi"]
     assert _cached_session.cache_info().currsize == 1
@@ -109,7 +109,7 @@ def test_session_cache_keys_on_the_model_broadcast(fake_onnxruntime):
     _cached_session.cache_clear()
     cfg = DEFAULT_CONFIG.replace(backend="onnx")
     for bc in (_Bc(b"first job"), _Bc(b"second job")):
-        list(extract_mod._heavy_stage(cfg, bc)(iter([_plain_batch()])))
+        list(extract_mod._heavy_stage({None: cfg}, bc)(iter([_plain_batch()])))
     assert _cached_session.cache_info().currsize == 2
     assert fake_onnxruntime["sessions"] == 2 * len(OnnxSession.ROLES)
     assert fake_onnxruntime["model_bytes"] == b"second job"
@@ -290,7 +290,7 @@ def test_rec_charset_from_onnx_metadata(monkeypatch):
 
 def test_heavy_stage_default_synthetic():
     _cached_session.cache_clear()
-    list(extract_mod._heavy_stage(DEFAULT_CONFIG, None)(iter([_plain_batch()])))
+    list(extract_mod._heavy_stage({None: DEFAULT_CONFIG}, None)(iter([_plain_batch()])))
     assert _cached_session.cache_info().currsize == 1
     assert isinstance(session_for(DEFAULT_CONFIG), SyntheticSession)
     assert _cached_session.cache_info().hits == 1

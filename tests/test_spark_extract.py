@@ -132,15 +132,3 @@ def test_spread_scatters_large_conversation(spark):
     )
     parts = heavy.select(F.spark_partition_id().alias("pid")).distinct().collect()
     assert len(parts) == spark.sparkContext.defaultParallelism
-
-
-def test_multilang_stays_at_two_branches():
-    """Spark 4.1.2's driver-side Arrow collect SEGFAULTS on a ≥3-branch
-    union of Python-runner stages (CLAUDE.md environment pin) —
-    x_extract_multilang must keep exactly TWO language branches until the
-    engine version moves; a refactor that adds a third trips this guard
-    instead of crashing the JVM mid-gate."""
-    from rapidocr_spark.plans.shell import EXTRACT_CFG
-    from rapidocr_spark.sources.fixtures import multilang_configs
-
-    assert len(multilang_configs(EXTRACT_CFG)) == 2

@@ -8,9 +8,7 @@ from pyspark.sql import functions as F
 from rapidocr_spark.operators.extract import extract_transcripts
 from rapidocr_spark.plans.shell import EXTRACT_CFG
 from rapidocr_spark.sources.transcripts import transcripts_df
-from rapidocr_spark.streaming.pipeline import (
-    extract_stream, read_transcript_stream, start_to_parquet,
-)
+from rapidocr_spark.streaming.pipeline import read_transcript_stream, start_to_parquet
 
 
 def test_stream_matches_batch(spark, tmp_path):
@@ -21,7 +19,7 @@ def test_stream_matches_batch(spark, tmp_path):
     src.write.parquet(in_dir)
 
     q = start_to_parquet(
-        extract_stream(read_transcript_stream(spark, in_dir), EXTRACT_CFG),
+        extract_transcripts(read_transcript_stream(spark, in_dir), EXTRACT_CFG),
         out_dir,
         ckpt,
     )
@@ -41,7 +39,7 @@ def test_stream_matches_batch(spark, tmp_path):
 
     # restart with no new files → no duplicates (exactly-once resume)
     q2 = start_to_parquet(
-        extract_stream(read_transcript_stream(spark, in_dir), EXTRACT_CFG),
+        extract_transcripts(read_transcript_stream(spark, in_dir), EXTRACT_CFG),
         out_dir,
         ckpt,
     )
