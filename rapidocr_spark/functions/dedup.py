@@ -24,7 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .caching import track, track_persist
-from .text import POLY_P, _docs, poly_hash
+from .text import POLY_A, POLY_P, _docs, poly_hash
 
 SHINGLE_N = 4          # tokens per shingle
 MAX_SHINGLE_DF = 100   # stop-shingle cap (skew guard)
@@ -86,7 +86,7 @@ def _shingles_np(batches):
     strip(' ') + re.split(r'\\s+', …, flags=re.ASCII) (leading/trailing
     empty tokens survive in both engines).  Each shingle is a substring
     of the single-space re-join of the tokens, so its polynomial hash
-    comes from mod-P prefix hashes — h(s,e) = (H[e] − H[s]·31^(e−s))
+    comes from mod-P prefix hashes — h(s,e) = (H[e] − H[s]·A^(e−s))
     mod P, the standard rolling identity, exactly equal to the
     per-shingle left fold — with the prefix scan vectorised ACROSS a
     chunk of documents (one padded matrix column step per char).
@@ -101,7 +101,7 @@ def _shingles_np(batches):
     import pyarrow as pa
 
     SPLIT = re.compile(r"\s+", re.ASCII)
-    P, A, N = POLY_P, 31, SHINGLE_N
+    P, A, N = POLY_P, POLY_A, SHINGLE_N
     for batch in batches:
         all_ids = batch.column("doc_id").to_pylist()
         all_texts = batch.column("text").to_pylist()
@@ -128,16 +128,16 @@ def _shingles_np(batches):
             H = np.zeros((len(docs), lmax + 1), dtype=np.int64)
             for j in range(lmax):
                 H[:, j + 1] = (H[:, j] * A + cpm[:, j]) % P
-            pow31 = np.empty(lmax + 1, dtype=np.int64)
-            pow31[0] = 1
+            pow_a = np.empty(lmax + 1, dtype=np.int64)
+            pow_a[0] = 1
             for l in range(1, lmax + 1):
-                pow31[l] = (pow31[l - 1] * A) % P
+                pow_a[l] = (pow_a[l - 1] * A) % P
             out_id: list = []
             out_h: list = []
             for r, (did, joined, starts, lens) in enumerate(docs):
                 s = starts[: len(starts) - N + 1]
                 e = starts[N - 1 :] + lens[N - 1 :]
-                h = (H[r, e] - H[r, s] * pow31[e - s]) % P
+                h = (H[r, e] - H[r, s] * pow_a[e - s]) % P
                 # array_distinct by STRING; fast path by (hash, len)
                 seen: dict = {}
                 keep = np.ones(len(h), dtype=bool)
@@ -555,7 +555,7 @@ def dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
 # but it IS a shared span of winnowing fingerprints on one (doc_a, doc_b)
 # positional diagonal.
 
-SS_K = 16            # k-gram width (chars) — shared with doc_winnow_*
+SS_K = 16            # k-gram width (chars) of every _winnow_postings reader
 SS_W = 8             # winnowing window (hashes); guarantee: any shared
                      # substring of length >= SS_W + SS_K - 1 = 23 chars
                      # yields at least one shared fingerprint
@@ -577,7 +577,7 @@ def _winnow_np(batches):
     """mapInArrow body of _winnow_postings (module-level: captures
     nothing).  Pure-int64 numpy mirror of the Catalyst form, vectorised
     over POSITIONS: the per-position k-gram hash runs the IDENTICAL left
-    fold (acc·31 + cp) % P — for position i the scalar op sequence is
+    fold (acc·POLY_A + cp) % P — for position i the scalar op sequence is
     exactly the slice fold's — as SS_K whole-array ops instead of
     len·SS_K interpreted lambda steps, and the sliding window min is
     SS_W np.minimum passes (min is order-free).  All arithmetic is exact
@@ -587,7 +587,7 @@ def _winnow_np(batches):
     import numpy as np
     import pyarrow as pa
 
-    K, W, P, A, LIFT = SS_K, SS_W, POLY_P, 31, SS_LIFT
+    K, W, P, A, LIFT = SS_K, SS_W, POLY_P, POLY_A, SS_LIFT
     for batch in batches:
         ids = batch.column("doc_id").to_pylist()
         texts = batch.column("text").to_pylist()
@@ -647,9 +647,9 @@ def _winnow_np(batches):
 def _winnow_postings(d: DataFrame) -> DataFrame:
     """Positional winnowing postings (doc_id, fp, pos): the
     Schleimer/Wilkerson/Aiken selection with k=SS_K / w=SS_W over the raw
-    character stream.  Shared by dedup_substring_spans and
-    dedup_boilerplate_catalog so the two report over the identical
-    fingerprint universe.
+    character stream — the one k-gram winnowing front.  Shared by
+    dedup_substring_spans, dedup_boilerplate_catalog and doc_winnow_* so
+    they all report over the identical fingerprint universe.
 
     Round 8: the hash+select front runs as a vectorised numpy mapInArrow
     kernel (_winnow_np) instead of nested Catalyst higher-order folds —
@@ -661,6 +661,48 @@ def _winnow_postings(d: DataFrame) -> DataFrame:
     crosses the Python boundary, projected first."""
     return d.select("doc_id", "text").mapInArrow(
         _winnow_np, "doc_id bigint, fp bigint, pos bigint"
+    )
+
+
+def doc_winnow_min_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Winnowing-style fingerprint: minimum polynomial hash over all
+    16-char windows of the document (robust to local edits).
+
+    Read off the postings: every window that holds the global minimum
+    k-gram hash selects it, so the smallest selected fp IS that minimum
+    (NULL text posts one NULL fp, as the minimum over [NULL] is NULL)."""
+    return (
+        _winnow_postings(_docs(spark, sf_dir))
+        .groupBy("doc_id")
+        .agg(F.min("fp").cast("bigint").alias("winnow_fp"))
+    )
+
+
+def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FULL winnowing (Schleimer/Wilkerson/Aiken, SIGMOD'03 — the local
+    document-fingerprinting algorithm): hash every k-gram, slide a window
+    of w consecutive hashes, select each window's minimum, and keep the
+    DISTINCT selected hashes as the document's fingerprint set.  Guarantees
+    any shared substring of length >= w + k - 1 produces a shared
+    fingerprint.  Reported as order-independent set invariants (size, sum,
+    min) so the oracle needn't agree on set ordering.  k=SS_K=16,
+    w=SS_W=8: matches within ~23 chars are detected.
+
+    Read off the postings: each window keeps its minimum (fp, pos), whose
+    fp is the window's minimum hash, so a document's distinct posted fps
+    are exactly its distinct window minima.  NULL text posts one NULL fp
+    and keeps the set [NULL]: size 1, NULL sum and min."""
+    fp = F.col("fp")
+    return (
+        _winnow_postings(_docs(spark, sf_dir))
+        .groupBy("doc_id")
+        .agg(
+            (F.count_distinct(fp) + F.count_if(fp.isNull()))
+            .cast("bigint")
+            .alias("n_fingerprints"),
+            F.sum_distinct(fp).cast("bigint").alias("fp_sum"),
+            F.min(fp).cast("bigint").alias("fp_min"),
+        )
     )
 
 

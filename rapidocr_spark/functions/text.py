@@ -137,72 +137,6 @@ def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     return d.select("doc_id", poly_hash(F.col("text")).alias("fingerprint"))
 
 
-def kgram_hash_frame(d: DataFrame, k: int) -> DataFrame:
-    """(doc_id, hs) with hs[i] = poly_hash of the k-gram starting at
-    1-based char i — the shared front of every winnowing consumer
-    (doc_winnow_min_hash / doc_winnow_fingerprints / the substring-dedup
-    postings).
-
-    Implementation: the codepoint array is materialised ONCE per doc and
-    each k-gram folds over an int SLICE of it — ~2× faster than hashing
-    substring(text, i, k) per position (measured 4.4 s → 2.2 s over the
-    sf0.1 corpus: no per-position string copy / split / ascii).  The cp
-    projection survives CollapseProject ONLY because the consumer
-    references it twice (size bound + slice lambda) — a single-referenced
-    version gets folded back into the position lambda and re-splits the
-    text per position, the 10× regression recorded in BASELINE.md.
-    Values are identical to poly_hash-over-substring: ascii() reads the
-    first char's codepoint either way."""
-    cp = F.transform(F.split(F.col("text"), ""), lambda ch: F.ascii(ch).cast("bigint"))
-    dc = d.select("doc_id", cp.alias("cp"))
-    hashes = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size("cp") - (k - 1), F.lit(1))),
-        lambda i: F.aggregate(
-            F.slice(F.col("cp"), i, k),
-            F.lit(0).cast("bigint"),
-            lambda acc, x: (acc * POLY_A + x) % POLY_P,
-        ),
-    )
-    return dc.select("doc_id", hashes.alias("hs"))
-
-
-def doc_winnow_min_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Winnowing-style fingerprint: minimum polynomial hash over all
-    16-char windows of the document (robust to local edits)."""
-    hd = kgram_hash_frame(_docs(spark, sf_dir), 16)
-    return hd.select(
-        "doc_id", F.array_min("hs").cast("bigint").alias("winnow_fp")
-    )
-
-
-def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL winnowing (Schleimer/Wilkerson/Aiken, SIGMOD'03 — the local
-    document-fingerprinting algorithm): hash every k-gram, slide a window
-    of w consecutive hashes, select each window's minimum, and keep the
-    DISTINCT selected hashes as the document's fingerprint set.  Guarantees
-    any shared substring of length >= w + k - 1 produces a shared
-    fingerprint.  Reported as order-independent set invariants (size, sum,
-    min) so the oracle needn't agree on set ordering.  k=16, w=8: matches
-    within ~23 chars are detected.  All JVM expressions — no Python."""
-    k, w = 16, 8
-    # the hash array is its own materialised projection BEFORE the window
-    # pass: a nested expression would be re-evaluated per window by
-    # Catalyst (no CSE across lambda iterations) — O(len²·k) instead of
-    # O(len·k).  Same trap in DuckDB: the oracle's CTEs are MATERIALIZED.
-    hd = kgram_hash_frame(_docs(spark, sf_dir), k)
-    sel = F.transform(
-        F.sequence(F.lit(1), F.greatest(F.size("hs") - (w - 1), F.lit(1))),
-        lambda j: F.array_min(F.slice(F.col("hs"), j, w)),
-    )
-    out = hd.select("doc_id", F.array_distinct(sel).alias("fps"))
-    return out.select(
-        "doc_id",
-        F.size("fps").cast("bigint").alias("n_fingerprints"),
-        F.aggregate("fps", F.lit(0).cast("bigint"), lambda acc, x: acc + x).alias("fp_sum"),
-        F.array_min("fps").cast("bigint").alias("fp_min"),
-    )
-
-
 REP_NGRAM = 3  # Gopher-style repetition window (word 3-grams)
 
 
@@ -441,11 +375,12 @@ def doc_chunk_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     text (the chunk identity key downstream packing/dedup would join on).
 
     Spark-first: the token array is materialised ONCE per doc (referenced
-    twice — size bound + slice lambda — so CollapseProject keeps it: the
-    kgram_hash_frame discipline), chunks are built INSIDE one transform()
-    so the array is never duplicated per chunk row, and the result
-    explodes structs.  Work is O(n_tokens · C/S) per doc, map-side only —
-    zero shuffles at any corpus size."""
+    twice — size bound + slice lambda — so CollapseProject keeps the
+    projection instead of inlining a re-split into every chunk lambda),
+    chunks are built INSIDE one transform() so the array is never
+    duplicated per chunk row, and the result explodes structs.  Work is
+    O(n_tokens · C/S) per doc, map-side only — zero shuffles at any
+    corpus size."""
     d = _docs(spark, sf_dir)
     base = d.select(
         "doc_id", F.split(F.trim(F.col("text")), r"\s+").alias("toks")

@@ -766,7 +766,7 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # BPE merge LEARNING, the learned NB quality filter + its measured
         # confusion gauge, and domain-mixture sampling
         "doc_pack_shards": text.doc_pack_shards,
-        "doc_winnow_min_hash": text.doc_winnow_min_hash,
+        "doc_winnow_min_hash": dedup.doc_winnow_min_hash,
         "doc_bpe_token_stats": text.doc_bpe_token_stats,
         "doc_lm_bigram_score": text.doc_lm_bigram_score,
         "doc_tfidf_top_terms": text.doc_tfidf_top_terms,
@@ -847,7 +847,7 @@ def _registry() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "doc_token_stats": text.doc_token_stats,
         "doc_quality_score": text.doc_quality_score,
         "doc_lang_guess": text.doc_lang_guess,
-        "doc_winnow_fingerprints": text.doc_winnow_fingerprints,
+        "doc_winnow_fingerprints": dedup.doc_winnow_fingerprints,
         "ev_user_sessions": events.ev_user_sessions,
         "ev_hourly_top_type": events.ev_hourly_top_type,
         "ev_props_sum": events.ev_props_sum,

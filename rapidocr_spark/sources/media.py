@@ -62,11 +62,6 @@ def media_row(media_id: int) -> tuple[int, str, bytes]:
     return media_id, "junk", bytes(rng.integers(0, 256, size=int(rng.integers(4, 64)), dtype=np.uint8))
 
 
-def media_pandas(n: int) -> pd.DataFrame:
-    rows = [media_row(i) for i in range(n)]
-    return pd.DataFrame(rows, columns=["media_id", "kind", "blob"])
-
-
 def expected_media_pandas(n: int) -> pd.DataFrame:
     """Eager mirror of decode_media/media_features/resize_images over the
     fixture corpus — the committed driver-oracle columns."""

@@ -250,10 +250,6 @@ def _make_html(main_lines: list[str], rng: np.random.Generator) -> str:
     return f"<html><body>{nav}{ad}<article>{body}</article>{foot}</body></html>"
 
 
-def expected_html_text(markup_main_lines: list[str]) -> str:
-    return "\n".join(markup_main_lines)
-
-
 def conv_pandas(conv_idx: int, n_turns: int | None = None, skew_conv: int = -1) -> pd.DataFrame:
     """All turns of one conversation as a pandas frame."""
     n = n_turns if n_turns is not None else turns_per_conv(conv_idx)

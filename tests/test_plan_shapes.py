@@ -97,6 +97,20 @@ def test_sign_lsh_buckets_are_one_arrow_kernel(spark, name):
         assert "zip_with" not in plan and "aggregate(" not in plan, plan
 
 
+@pytest.mark.parametrize("name", ["doc_winnow_min_hash", "doc_winnow_fingerprints"])
+def test_doc_winnow_reads_the_one_arrow_kernel(spark, name):
+    """Both doc_winnow_* leaves read the winnowing postings of the one
+    numpy kernel (dedup._winnow_np): exactly one MapInArrow node, and no
+    Catalyst k-gram slice fold left in the plan."""
+    import re
+
+    from rapidocr_spark.plans.shell import queries
+
+    plan = _formatted(queries()[name](spark, SF_DIR))
+    assert len(re.findall(r"^\(\d+\) MapInArrow", plan, flags=re.M)) == 1, plan
+    assert "slice(" not in plan, plan
+
+
 def test_extraction_single_python_stage_per_route(spark):
     """The fused det→cls→rec chain is exactly ONE MapInPandas operator (no
     shuffle between stages, J1-J3 zips never cross partitions); the plain:
