@@ -7,6 +7,11 @@
 - ``ann_lsh_buckets``: random-hyperplane (sign) LSH with arithmetically
   derived hyperplanes (integer weights, so the DuckDB oracle is
   bit-identical); the scale path — candidates only compare within buckets.
+- IVF: ``_ivf_search(e, cents, nprobe)`` is the one IVF top-k builder —
+  nprobe 1 and 2 over the stride-seeded centroids, NPROBE_L8 over the
+  Lloyd-refined ones.  PQ: the three PQ searches scan one persisted
+  ``_pq_index``, and both IVF-PQ compositions share one ADC sum,
+  ``_ivfpq_adc``.
 - Every dot product is the same per-dimension left fold
   ``((0 + x1·y1) + x2·y2)…`` in all three places it runs: Catalyst's
   ``aggregate`` over zipped arrays (pair cosines over joined rows), the
@@ -71,15 +76,13 @@ def _cos6(a: str, b: str, na: str, nb: str) -> "F.Column":
     return F.round(_dot(F.col(a), F.col(b)) / (F.col(na) * F.col(nb)), 6)
 
 
-def _query_set(df: DataFrame, qn, *extra, qid: str = "query_id") -> DataFrame:
+def _query_set(df: DataFrame, qn, qid: str = "query_id") -> DataFrame:
     """The bounded query set (vec_id % QUERY_MOD == 0, at most MAX_QUERIES
-    rows) as (qid, qe, _qn, *extra), ``qn`` the query-norm column."""
+    rows) as (qid, qe, _qn), ``qn`` the query-norm column."""
     return df.where(
         (F.col("vec_id") % QUERY_MOD == 0)
         & (F.col("vec_id") < QUERY_MOD * MAX_QUERIES)
-    ).select(
-        F.col("vec_id").alias(qid), F.col("embedding").alias("qe"), qn.alias("_qn"), *extra
-    )
+    ).select(F.col("vec_id").alias(qid), F.col("embedding").alias("qe"), qn.alias("_qn"))
 
 
 def _top_k(pairs: DataFrame, k: int) -> DataFrame:
@@ -257,42 +260,18 @@ def ann_ivf_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-3 neighbours per query, searched ONLY within the query's IVF
-    cell (nprobe=1) — compare with knn_brute_cosine for recall/cost.
-    The cell-assigned corpus is persisted: it feeds both the query set and
-    the candidate side of the self-join (one materialisation, not two
-    recomputes of the centroid assignment)."""
+    """Top-3 neighbours per query, searched ONLY within the query's nearest
+    stride-seeded cell (nprobe=1) — compare with knn_brute_cosine for
+    recall/cost."""
     e = _emb(spark, sf_dir)
-    v = _celled(e, ann_ivf_cells(spark, sf_dir).select("vec_id", "cell"))
-    q = _query_set(v, F.col("_en"), F.col("cell").alias("qcell"))
-    return _top_k(_cell_pairs(v, q), 3)
-
-
-def _celled(e: DataFrame, cells: DataFrame) -> DataFrame:
-    """The cell-assigned corpus carrying its norm, persisted: it feeds
-    both the query set and the candidate side of an IVF search, and
-    every candidate scoring folds the norm once per vector, not once per
-    (query, candidate) pair."""
-    return track_persist(
-        e.join(cells, "vec_id").withColumn("_en", _norm(F.col("embedding")))
-    )
-
-
-def _cell_pairs(v: DataFrame, qcells: DataFrame) -> DataFrame:
-    """(query_id, cand_id, cosine) for every member of a (query, qcell)
-    row's cell — the candidate join against the broadcast query side."""
-    cand = v.select(F.col("vec_id").alias("cand_id"), "embedding", "_en", "cell")
-    return cand.join(
-        F.broadcast(qcells),
-        (F.col("cell") == F.col("qcell")) & (F.col("cand_id") != F.col("query_id")),
-    ).select("query_id", "cand_id", _cos6("qe", "embedding", "_qn", "_en").alias("cosine"))
+    return _ivf_search(e, track_persist(_centroids(e)), 1)
 
 
 def _probe_cells(q: DataFrame, cents: DataFrame, nprobe: int, keep=("qe", "_qn")) -> DataFrame:
     """(query_id, *keep, qcell): each query's nprobe nearest centroids by
     rounded cosine (cent_id tie-break) — the coarse-probe stage shared by
-    every multi-probe IVF search, plain and IVF-PQ, so they can never
-    de-synchronize on probe semantics."""
+    every IVF search, plain and IVF-PQ, so they can never de-synchronize
+    on probe semantics."""
     cn = cents.select("cent_id", "ce", _norm(F.col("ce")).alias("_cn"))
     wq = Window.partitionBy("query_id").orderBy(F.col("cos_c").desc(), F.col("cent_id"))
     return (
@@ -304,13 +283,28 @@ def _probe_cells(q: DataFrame, cents: DataFrame, nprobe: int, keep=("qe", "_qn")
     )
 
 
-def _ivf_search(e: DataFrame, cells: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
-    """Top-3 per query over the members of its nprobe nearest cells
-    (candidates stay in their single home cell; a pair reached through
-    two probed cells counts once)."""
-    v = _celled(e, cells)
+def _ivf_search(e: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """Top-3 per query over the members of its nprobe nearest cells of
+    ``cents`` (candidates stay in their single home cell; a pair reached
+    through two probed cells counts once) — the one IVF search builder:
+    every IVF top-k differs only by its centroid source and nprobe.
+
+    ``cents`` comes persisted: _cand_scored collects it at build time for
+    the assignment, and the lazy probe reads it again.  The cell-assigned
+    corpus is persisted with its norm: it feeds both the query set and
+    the candidate side, and each norm is folded once per vector, not once
+    per (query, candidate) pair."""
+    v = track_persist(
+        e.join(_assign_cells(e, cents).select("vec_id", "cell"), "vec_id")
+        .withColumn("_en", _norm(F.col("embedding")))
+    )
     qcells = _probe_cells(_query_set(v, F.col("_en")), cents, nprobe)
-    return _top_k(_cell_pairs(v, qcells).distinct(), 3)
+    cand = v.select(F.col("vec_id").alias("cand_id"), "embedding", "_en", "cell")
+    pairs = cand.join(
+        F.broadcast(qcells),
+        (F.col("cell") == F.col("qcell")) & (F.col("cand_id") != F.col("query_id")),
+    ).select("query_id", "cand_id", _cos6("qe", "embedding", "_qn", "_en").alias("cosine"))
+    return _top_k(pairs.distinct(), 3)
 
 
 LLOYD_ITERS = 2     # fixed Lloyd refinement rounds (fixed count keeps the
@@ -515,8 +509,7 @@ def ann_ivf_topk_l8(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe/K ≈ 1/4 of the corpus per query vs brute force; measured recall
     is the ann_recall_l8 row."""
     e = _emb(spark, sf_dir)
-    cents = _centroids_lloyd(e)
-    return _ivf_search(e, _assign_cells(e, cents).select("vec_id", "cell"), cents, NPROBE_L8)
+    return _ivf_search(e, _centroids_lloyd(e), NPROBE_L8)
 
 
 def ann_recall_l8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -593,11 +586,7 @@ def ann_ivf_topk_probe2(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall (measured: at sf0.1 mean recall@3 doubles, 0.111 → 0.222 —
     compare ann_recall_at_k vs ann_recall_probe2)."""
     e = _emb(spark, sf_dir)
-    # one centroid frame, persisted: _cand_scored collects it at build
-    # time for the assignment, and the lazy probe reads it again
-    cents = track_persist(_centroids(e))
-    cells = _assign_cells(e, cents).select("vec_id", "cell")
-    return _ivf_search(e, cells, cents, 2)
+    return _ivf_search(e, track_persist(_centroids(e)), 2)
 
 
 def _recall_vs_brute(spark: SparkSession, sf_dir: str, ivf: DataFrame) -> DataFrame:
@@ -937,6 +926,13 @@ def _pq_encode(e: DataFrame, cb: DataFrame) -> DataFrame:
     )
 
 
+def _pq_index(e: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(cb, codes): the persisted PQ index every PQ search scans — the
+    refined codebook and each vector's (vec_id, m, code) rows."""
+    cb = track_persist(_pq_codebook_refined(e))
+    return cb, track_persist(_pq_encode(e, cb).select("vec_id", "m", "code"))
+
+
 def ann_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PQ encoding itself (vec_id, subspace, code, residual distance)
     — the 8-byte-per-vector representation the search scans."""
@@ -954,8 +950,7 @@ def _pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     norms^2 travel as floor(x * 1e6) bigints so the 8-term sums are
     order-independent and the DuckDB oracle matches bit-for-bit."""
     e = _emb(spark, sf_dir)
-    cb = track_persist(_pq_codebook_refined(e))
-    codes = track_persist(_pq_encode(e, cb).select("vec_id", "m", "code"))
+    cb, codes = _pq_index(e)
     recon = _pq_recon_norm(cb, codes)
     q = _query_set(e, _norm(F.col("embedding")))
     dt = _pq_dist_table(q, cb, "query_id", "_qn", F.col("cent_id").alias("qc"))
@@ -1056,17 +1051,30 @@ IVFPQ_RERANK = 64   # smaller refine budget than pure PQ: the ADC pass
                     # already runs over only the probed cells' codes
 
 
-def _probe_pairs(
-    q: DataFrame, cents: DataFrame, cells: DataFrame, nprobe: int = NPROBE_L8
+def _ivfpq_adc(
+    q: DataFrame, cents: DataFrame, cells: DataFrame, cb: DataFrame, codes: DataFrame
 ) -> DataFrame:
-    """(query_id, vec_id) candidate pairs of BOTH IVF-PQ compositions
-    (plain and residual): the members of each query's nprobe nearest
-    cells (_probe_cells), self excluded."""
-    qcells = _probe_cells(q, cents, nprobe, keep=())
-    return (
+    """(query_id, vec_id, dint): the ADC sum of BOTH IVF-PQ compositions
+    (plain and residual) — the members of each query's NPROBE_L8 nearest
+    cells (_probe_cells), self excluded, scored by summing their codes'
+    entries of the query's broadcast distance table."""
+    qcells = _probe_cells(q, cents, NPROBE_L8, keep=())
+    pairs = (
         cells.join(F.broadcast(qcells), F.col("cell") == F.col("qcell"))
         .where(F.col("vec_id") != F.col("query_id"))
         .select("query_id", "vec_id")
+    )
+    dt = _pq_dist_table(q, cb, F.col("query_id").alias("dq"), F.col("cent_id").alias("qc"))
+    return (
+        codes.join(pairs, "vec_id")
+        .join(
+            F.broadcast(dt),
+            (F.col("query_id") == F.col("dq"))
+            & (F.col("m") == F.col("qm"))
+            & (F.col("code") == F.col("qc")),
+        )
+        .groupBy("query_id", "vec_id")
+        .agg(F.sum("pdint").alias("dint"))
     )
 
 
@@ -1083,29 +1091,12 @@ def ann_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = _emb(spark, sf_dir)
     cents = _centroids_lloyd(e)
     cells = _assign_cells(e, cents).select("vec_id", "cell")
-    cb = track_persist(_pq_codebook_refined(e))
-    codes = track_persist(_pq_encode(e, cb).select("vec_id", "m", "code"))
+    cb, codes = _pq_index(e)
     recon = _pq_recon_norm(cb, codes)
     q = track_persist(_query_set(e, _norm(F.col("embedding"))))
-    # probe the NPROBE_L8 nearest refined cells (shared _probe_cells —
-    # identical expressions to ann_ivf_topk_l8's probe stage)
-    pairs = _probe_pairs(q, cents, cells)
-    dt = _pq_dist_table(
-        q, cb, F.col("query_id").alias("dq"), F.col("cent_id").alias("qc")
-    )
-    adc = (
-        codes.join(pairs, "vec_id")
-        .join(
-            F.broadcast(dt),
-            (F.col("query_id") == F.col("dq"))
-            & (F.col("m") == F.col("qm"))
-            & (F.col("code") == F.col("qc")),
-        )
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("pdint").alias("dint"))
-    )
     approx = (
-        adc.join(recon, "vec_id")
+        _ivfpq_adc(q, cents, cells, cb, codes)
+        .join(recon, "vec_id")
         .join(F.broadcast(q.select("query_id", "_qn")), "query_id")
         .select(
             "query_id",
@@ -1161,8 +1152,7 @@ def ann_ivfpq_res_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("embedding"),
         )
     )
-    cb = track_persist(_pq_codebook_refined(res))
-    codes = track_persist(_pq_encode(res, cb).select("vec_id", "m", "code"))
+    cb, codes = _pq_index(res)
 
     SC = F.lit(PQ_SCALE)
     n2arr = _pq_ints(lambda m: _sub_n2(F.col("ce"), m))
@@ -1219,26 +1209,10 @@ def ann_ivfpq_res_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum("v").alias("qcint"))
         .select(F.col("query_id").alias("qq"), "qccell", "qcint")
     )
-    # probe the NPROBE_L8 nearest refined cells (shared _probe_pairs —
-    # guaranteed identical to the non-residual composition)
-    pairs = _probe_pairs(q, cents, cells)
-    # residual distance tables: q · r̂ per (query, m, code)
-    dt = _pq_dist_table(
-        q, cb, F.col("query_id").alias("dq"), F.col("cent_id").alias("dqc")
-    )
-    adc = (
-        codes.join(pairs, "vec_id")
-        .join(
-            F.broadcast(dt),
-            (F.col("query_id") == F.col("dq"))
-            & (F.col("m") == F.col("qm"))
-            & (F.col("code") == F.col("dqc")),
-        )
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("pdint").alias("dres"))
-    )
+    # the shared probe + ADC sum over the residual codes: q · r̂
     approx = (
-        adc.join(rn, "vec_id")
+        _ivfpq_adc(q, cents, cells, cb, codes)
+        .join(rn, "vec_id")
         .join(
             F.broadcast(qc),
             (F.col("query_id") == F.col("qq")) & (F.col("vcell") == F.col("qccell")),
@@ -1248,7 +1222,7 @@ def ann_ivfpq_res_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "query_id",
             F.col("vec_id").alias("cand_id"),
             F.round(
-                ((F.col("qcint") + F.col("dres")).cast("double") / SC)
+                ((F.col("qcint") + F.col("dint")).cast("double") / SC)
                 / (F.col("_qn") * F.col("_rn")),
                 6,
             ).alias("approx_cosine"),

@@ -4,7 +4,9 @@ Everything here is pure ``pyspark.sql.functions`` expressions — JVM-side,
 whole-stage-codegen, zero Python — applied to the ``documents`` table.
 Each query has an exactly-matching DuckDB oracle (plans/shell.py): token
 splitting, regexp counts, and the polynomial rolling hash were verified to
-produce bit-identical values in both engines.
+produce bit-identical values in both engines.  ``word_tokens`` is the one
+lowercased word tokenizer (BPE, tf-idf, NB), and ``_quota_prefix`` the one
+quota-prefix sampler (mixture and quality sampling).
 """
 
 from __future__ import annotations
@@ -38,6 +40,12 @@ def poly_hash(text: Column) -> Column:
         F.lit(0).cast("bigint"),
         lambda acc, x: (acc * POLY_A + F.ascii(x)) % POLY_P,
     )
+
+
+def word_tokens(text: Column) -> Column:
+    """The lowercased [a-z0-9]+ runs of text (a regex class Java regex and
+    RE2 agree on) — the word tokens of the BPE, tf-idf and NB leaves."""
+    return F.regexp_extract_all(F.lower(text), F.lit("[a-z0-9]+"), 0)
 
 
 def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,8 +99,12 @@ def _quality_parts() -> tuple[Column, Column, Column, Column]:
         (F.regexp_count(F.col("text"), F.lit(rf"\b{w}\b")) for w in STOPWORDS),
         F.lit(0),
     ).cast("double")
-    digit_ratio = F.regexp_count(F.col("text"), F.lit(r"[0-9]")).cast("double") / length
-    punct_ratio = F.regexp_count(F.col("text"), F.lit(r"[^\w\s]")).cast("double") / length
+    # try_divide: an empty text's ratios are NULL (DuckDB's x / 0.0), not
+    # an ANSI DIVIDE_BY_ZERO; least() skips the NULL in both engines
+    n_digit = F.regexp_count(F.col("text"), F.lit(r"[0-9]")).cast("double")
+    n_punct = F.regexp_count(F.col("text"), F.lit(r"[^\w\s]")).cast("double")
+    digit_ratio = F.try_divide(n_digit, length)
+    punct_ratio = F.try_divide(n_punct, length)
     stop_ratio = stop_hits / toks
     score = (
         F.least(length / F.lit(500.0), F.lit(1.0)) * 0.4
@@ -475,7 +487,6 @@ def doc_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     CEIL(SQRT(CAST AS DOUBLE)) cross-engine formula (_adaptive_k
     precedent); everything else is exact bigints."""
     from .caching import track_persist
-    from .ranking import with_global_cumsum
 
     d = _docs(spark, sf_dir)
     base = track_persist(
@@ -486,37 +497,28 @@ def doc_sample_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
             poly_hash(F.col("text")).alias("h"),
         )
     )
-    quotas = _domain_quotas(base)
-    g = with_global_cumsum(
-        base, [F.col("domain"), F.col("h"), F.col("doc_id")], "n_tok", "cum_all"
-    )
-    return (
-        g.join(F.broadcast(quotas), "domain")
-        .select(
-            "doc_id",
-            "domain",
-            F.col("n_tok").cast("bigint").alias("n_tok"),
-            (F.col("cum_all") - F.col("dom_off")).cast("bigint").alias("cum_dom_tok"),
-            F.col("quota_tok").cast("bigint").alias("quota_tok"),
-            ((F.col("cum_all") - F.col("dom_off")) <= F.col("quota_tok")).alias("keep"),
-        )
-    )
+    return _quota_prefix(base, F.col("h"))
 
 
-def _domain_quotas(base: DataFrame) -> DataFrame:
-    """(domain, quota_tok, dom_off) — the shared √-temperature quota
-    arithmetic of doc_sample_mixture / doc_sample_quality: w_d = ⌈√T_d⌉,
-    quota_d = ((ΣT div MIX_BUDGET_DEN)·w_d) div Σw, plus the cumulative
-    per-domain token offsets from a window over the ≤|domains| totals
-    frame (the _two_pass offsets pattern)."""
+def _quota_prefix(base: DataFrame, order: Column, *carry: Column) -> DataFrame:
+    """The quota-prefix sampler of doc_sample_mixture / doc_sample_quality
+    over base (doc_id, domain, n_tok, …): each domain keeps the prefix of
+    its (order, doc_id) sequence whose running token count stays within
+    its √-temperature quota — w_d = ⌈√T_d⌉, quota_d = ((ΣT div
+    MIX_BUDGET_DEN)·w_d) div Σw.  The running count is the distributed
+    global cumsum over (domain, order, doc_id) minus the domain's token
+    offset, a window over the ≤|domains| totals frame (the _two_pass
+    offsets pattern).  The ``carry`` columns follow n_tok in the output."""
     from pyspark.sql import Window
+
+    from .ranking import with_global_cumsum
 
     tot = base.groupBy("domain").agg(F.sum("n_tok").alias("t_dom"))
     tot = tot.withColumn(
         "w_dom", F.expr("CAST(CEIL(SQRT(CAST(t_dom AS DOUBLE))) AS BIGINT)")
     )
     w_off = Window.orderBy("domain").rowsBetween(Window.unboundedPreceding, -1)
-    return (
+    quotas = (
         tot.crossJoin(
             F.broadcast(
                 tot.agg(
@@ -531,6 +533,22 @@ def _domain_quotas(base: DataFrame) -> DataFrame:
                 f"((t_all div {MIX_BUDGET_DEN}) * w_dom) div w_all"
             ).alias("quota_tok"),
             "dom_off",
+        )
+    )
+    g = with_global_cumsum(
+        base, [F.col("domain"), order, F.col("doc_id")], "n_tok", "cum_all"
+    )
+    cum = F.col("cum_all") - F.col("dom_off")
+    return (
+        g.join(F.broadcast(quotas), "domain")
+        .select(
+            "doc_id",
+            "domain",
+            F.col("n_tok").cast("bigint").alias("n_tok"),
+            *carry,
+            cum.cast("bigint").alias("cum_dom_tok"),
+            F.col("quota_tok").cast("bigint").alias("quota_tok"),
+            (cum <= F.col("quota_tok")).alias("keep"),
         )
     )
 
@@ -552,7 +570,6 @@ def doc_sample_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     NB rate is an exact bigint, so ordering by its negation is the same
     total order as the oracle's rate DESC."""
     from .caching import track_persist
-    from .ranking import with_global_cumsum
 
     d = _docs(spark, sf_dir)
     nb = doc_nb_quality_score(spark, sf_dir).select("doc_id", "rate_scaled")
@@ -563,24 +580,8 @@ def doc_sample_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
             n_tokens(F.col("text")).cast("bigint").alias("n_tok"),
         ).join(nb, "doc_id")
     )
-    quotas = _domain_quotas(base)
-    g = with_global_cumsum(
-        base,
-        [F.col("domain"), -F.col("rate_scaled"), F.col("doc_id")],
-        "n_tok",
-        "cum_all",
-    )
-    return (
-        g.join(F.broadcast(quotas), "domain")
-        .select(
-            "doc_id",
-            "domain",
-            F.col("n_tok").cast("bigint").alias("n_tok"),
-            F.col("rate_scaled").cast("bigint").alias("rate_scaled"),
-            (F.col("cum_all") - F.col("dom_off")).cast("bigint").alias("cum_dom_tok"),
-            F.col("quota_tok").cast("bigint").alias("quota_tok"),
-            ((F.col("cum_all") - F.col("dom_off")) <= F.col("quota_tok")).alias("keep"),
-        )
+    return _quota_prefix(
+        base, -F.col("rate_scaled"), F.col("rate_scaled").cast("bigint").alias("rate_scaled")
     )
 
 
@@ -711,11 +712,7 @@ def doc_bpe_learn_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     list_reduce fold (the DuckDB nested-lambda-bug workaround, see
     plans/shell.py)."""
     d = _docs(spark, sf_dir)
-    words = d.select(
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
-        ).alias("word")
-    )
+    words = d.select(F.explode(word_tokens(F.col("text"))).alias("word"))
     vocab = words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
     return vocab.coalesce(1).mapInPandas(
         _bpe_learn_from_vocab,
@@ -758,12 +755,7 @@ def doc_bpe_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
         .collect()
     ]
     d = _docs(spark, sf_dir)
-    toks = d.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
-        ).alias("word"),
-    )
+    toks = d.select("doc_id", F.explode(word_tokens(F.col("text"))).alias("word"))
     dw = toks.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("n_occ"))
     mapping = (
         dw.select("word")
@@ -824,12 +816,7 @@ def doc_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     d = _docs(spark, sf_dir)
-    toks = d.select(
-        "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
-        ).alias("term"),
-    )
+    toks = d.select("doc_id", F.explode(word_tokens(F.col("text"))).alias("term"))
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     df_ = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     scored = tf.join(df_, "term").withColumn(
@@ -899,7 +886,10 @@ def doc_nb_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persist ONLY (doc_id, label_hi): caching the corpus text alongside
     # would double the query-lifetime cache for nothing (round-7 review).
     # The explode branch recomputes the deterministic label expression
-    # inline during its own scan — bit-identical by construction.
+    # inline during its own scan — bit-identical by construction — in
+    # the SAME projection as the token array, exploded after: a label
+    # selected next to the explode lands in a Project above the Generate
+    # and runs once per token (~54× per doc at sf0.1), not once per doc.
     label = (score >= 0.5).alias("label_hi")
     lab = track_persist(d.select("doc_id", label))
     # hash the VOCABULARY, not every token occurrence (the doc_bpe_apply
@@ -912,11 +902,8 @@ def doc_nb_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (O(vocab), bounded by the language, not the corpus); every
     # aggregate is the same exact integer sum as the per-occurrence
     # form, so weights and scores are bit-identical.
-    tok_lab = d.select(
-        label,
-        F.explode(
-            F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
-        ).alias("tok"),
+    tok_lab = d.select(label, word_tokens(F.col("text")).alias("toks")).select(
+        "label_hi", F.explode("toks").alias("tok")
     )
     tcounts = tok_lab.groupBy("tok").agg(
         F.sum(F.when(F.col("label_hi"), 1).otherwise(0)).alias("t_hi"),
@@ -935,12 +922,7 @@ def doc_nb_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so no forced broadcast: AQE picks broadcast at bench scale, and at
     # a 100 TB vocabulary this degrades gracefully to a shuffle join
     scored = (
-        d.select(
-            "doc_id",
-            F.explode(
-                F.regexp_extract_all(F.lower(F.col("text")), F.lit("[a-z0-9]+"), 0)
-            ).alias("tok"),
-        )
+        d.select("doc_id", F.explode(word_tokens(F.col("text"))).alias("tok"))
         .join(tokw, "tok")
         .groupBy("doc_id")
         .agg(

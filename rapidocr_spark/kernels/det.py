@@ -283,19 +283,6 @@ def box_score_slow(prob: np.ndarray, runs: list[tuple[int, int, int]]) -> float:
     return total / n if n else 0.0
 
 
-# --------------------------------------------------------- K5 unclip expand
-
-
-def unclip_rect(x0: float, y0: float, x1: float, y1: float, ratio: float) -> tuple[float, float, float, float]:
-    """Polygon offset distance d = area*ratio/perimeter (the pyclipper
-    round-join offset of the reference, utils.py:317-324), specialised to
-    axis-aligned rects: uniform outward expansion by d."""
-    w = x1 - x0 + 1.0
-    h = y1 - y0 + 1.0
-    d = (w * h * ratio) / (2.0 * (w + h))
-    return x0 - d, y0 - d, x1 + d, y1 + d
-
-
 # ------------------------------------------------------------- L2 ordering
 
 

@@ -3,6 +3,12 @@
 W2's stable-ordering discipline, exercised on the driver-provided events
 table: sessionization via lag(), per-bucket top-k via row_number(), and
 rollups.  All built-in window functions — one shuffle per partitionBy key.
+
+The sketches (KMV, CMS, quantile buckets, HLL, bloom) hash ids through one
+affine hash, _affine_hash; the CMS rows and the bloom planes explode their
+positions through one _hash_positions, every CMS estimate is _cms_estimate's
+min over cells, and both HLL leaves build and fold registers through
+_hll_registers / _hll_estimate.
 """
 
 from __future__ import annotations
@@ -152,13 +158,19 @@ KMV_P = 1_000_000_007
 KMV_SALT = 64
 
 
+def _affine_hash(key: "F.Column", a: int, b: int) -> "F.Column":
+    """The engine's affine id hash ((key % P)·a + b) % P, P = KMV_P, for
+    every sketch: (a, b) = (KMV_A, KMV_B) for KMV, HLL and the quantile
+    buckets, CMS_AB[d] for the CMS rows and bloom planes.  The key is
+    reduced mod P BEFORE the multiply: (P-1)·a ≈ 2.65e18 < 2^63-1, so the
+    hash never overflows int64 under ANSI mode no matter how large ids
+    grow (ids < P hash identically to the unreduced form)."""
+    return ((key % KMV_P) * a + b) % KMV_P
+
+
 def _kmv_hashes(ev: DataFrame) -> DataFrame:
-    # key reduced mod P BEFORE the multiply: (P-1)·A ≈ 2.65e18 < 2^63-1, so
-    # the affine hash never overflows int64 under ANSI mode no matter how
-    # large ids grow (ids < P hash identically to the unreduced form)
     return ev.select(
-        "event_type",
-        (((F.col("user_id") % KMV_P) * KMV_A + KMV_B) % KMV_P).alias("h"),
+        "event_type", _affine_hash(F.col("user_id"), KMV_A, KMV_B).alias("h")
     ).distinct()
 
 
@@ -251,15 +263,27 @@ CMS_W = 64    # buckets per row — deliberately tight for the test corpus
               # (ε=1e-6 → W=2.7M cells ≈ 21 MB/row — still O(1) in N)
 CMS_AB = ((2654435761, 40503), (2246822519, 3266489917),
           (668265263, 374761393), (2654435769, 2246822507))
-CMS_P = 1_000_000_007
+CMS_P = KMV_P
 
 
-def _cms_bucket(d: int) -> "F.Column":
-    # (user_id % P) first — keeps the product ≤ (P-1)·max(a) ≈ 2.65e18
-    # inside int64 for ANY id (ANSI overflow-safe at 10⁹⁺ users); ids < P
-    # produce the same bucket as the unreduced form
-    a, b = CMS_AB[d]
-    return (((F.col("user_id") % CMS_P) * F.lit(a) + F.lit(b)) % CMS_P) % CMS_W
+def _hash_positions(key: "F.Column", n: int, width: int) -> "F.Column":
+    """posexplode of key's n positions (d, pos): pos = the CMS_AB[d]
+    affine hash of key, mod width — the CMS rows (n = CMS_D, width =
+    CMS_W) and the bloom planes (BLOOM_K, BLOOM_M)."""
+    return F.posexplode(
+        F.array(*[_affine_hash(key, *CMS_AB[d]) % width for d in range(n)])
+    )
+
+
+def _cms_estimate(probes: DataFrame, cells: DataFrame, name: str) -> DataFrame:
+    """(user_id, exact_count, name): each user's Count-Min estimate, the
+    min count c over the cells its (d, bucket) probe rows hit in the
+    broadcast (d, bucket, c) cell table."""
+    return (
+        probes.join(F.broadcast(cells), ["d", "bucket"])
+        .groupBy("user_id", "exact_count")
+        .agg(F.min("c").alias(name))
+    )
 
 
 def sketch_cms_error(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -273,28 +297,10 @@ def sketch_cms_error(spark: SparkSession, sf_dir: str) -> DataFrame:
     user's estimate is the min over its D cell counts."""
     ev = _t(spark, sf_dir, "events")
     keyed = ev.select("user_id")
-    cells = (
-        keyed.select(
-            F.posexplode(F.array(*[_cms_bucket(d) for d in range(CMS_D)])).alias(
-                "d", "bucket"
-            )
-        )
-        .groupBy("d", "bucket")
-        .agg(F.count(F.lit(1)).alias("c"))
-    )
+    cms = _hash_positions(F.col("user_id"), CMS_D, CMS_W).alias("d", "bucket")
+    cells = keyed.select(cms).groupBy("d", "bucket").agg(F.count(F.lit(1)).alias("c"))
     exact = keyed.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_count"))
-    probes = exact.select(
-        "user_id",
-        "exact_count",
-        F.posexplode(F.array(*[_cms_bucket(d) for d in range(CMS_D)])).alias(
-            "d", "bucket"
-        ),
-    )
-    est = (
-        probes.join(F.broadcast(cells), ["d", "bucket"])
-        .groupBy("user_id", "exact_count")
-        .agg(F.min("c").alias("est_count"))
-    )
+    est = _cms_estimate(exact.select("user_id", "exact_count", cms), cells, "est_count")
     return est.select(
         "user_id",
         F.col("exact_count").cast("bigint").alias("exact_count"),
@@ -319,42 +325,19 @@ def sketch_cms_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     sum-merge (≤ D·W cells), both tiny tables broadcast back to the
     bounded per-user probe frame."""
     ev = _t(spark, sf_dir, "events")
-    keyed = track_persist(
-        ev.select(
-            "user_id",
-            F.to_date("ts").alias("day"),
-            F.posexplode(F.array(*[_cms_bucket(d) for d in range(CMS_D)])).alias(
-                "d", "bucket"
-            ),
-        )
-    )
+    cms = _hash_positions(F.col("user_id"), CMS_D, CMS_W).alias("d", "bucket")
+    keyed = track_persist(ev.select("user_id", F.to_date("ts").alias("day"), cms))
     daily = keyed.groupBy("day", "d", "bucket").agg(F.count(F.lit(1)).alias("c"))
     merged = daily.groupBy("d", "bucket").agg(F.sum("c").alias("c"))
     direct = keyed.groupBy("d", "bucket").agg(F.count(F.lit(1)).alias("c"))
     exact = keyed.where(F.col("d") == 0).groupBy("user_id").agg(
         F.count(F.lit(1)).alias("exact_count")
     )
-    probes = track_persist(
-        exact.select(
-            "user_id",
-            "exact_count",
-            F.posexplode(F.array(*[_cms_bucket(d) for d in range(CMS_D)])).alias(
-                "d", "bucket"
-            ),
-        )
-    )
-
-    def _est(cells: DataFrame, name: str) -> DataFrame:
-        return (
-            probes.join(F.broadcast(cells), ["d", "bucket"])
-            .groupBy("user_id", "exact_count")
-            .agg(F.min("c").alias(name))
-        )
-
+    probes = track_persist(exact.select("user_id", "exact_count", cms))
     nd = keyed.agg(F.countDistinct("day").alias("n_days"))
     return (
-        _est(direct, "est_direct")
-        .join(_est(merged, "est_merged"), ["user_id", "exact_count"])
+        _cms_estimate(probes, direct, "est_direct")
+        .join(_cms_estimate(probes, merged, "est_merged"), ["user_id", "exact_count"])
         .crossJoin(F.broadcast(nd))
         .select(
             "user_id",
@@ -437,9 +420,7 @@ def sketch_value_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     sketch_distinct_error / sketch_cms_error, upgraded with a guarantee."""
     ev = _t(spark, sf_dir, "events").select("event_type", "event_id", "value")
     exact = _disc_quantiles(ev, "exact_value")
-    bkt = (
-        (((F.col("event_id") % KMV_P) * KMV_A + KMV_B) % KMV_P) % QK_BUCKETS
-    ).alias("bkt")
+    bkt = (_affine_hash(F.col("event_id"), KMV_A, KMV_B) % QK_BUCKETS).alias("bkt")
     evb = ev.select("event_type", "event_id", "value", bkt)
     wb = Window.partitionBy("event_type", "bkt").orderBy("value", "event_id")
     wbn = Window.partitionBy("event_type", "bkt")
@@ -533,6 +514,35 @@ def _hll_pow2neg(col: "F.Column") -> "F.Column":
     return out
 
 
+def _hll_registers(ev: DataFrame, *keys: str) -> DataFrame:
+    """(*keys, reg, rho) per event: the event_id's affine hash h lands in
+    register h % HLL_M with rho = the leading-zero run of h div HLL_M."""
+    hashed = ev.select(*keys, _affine_hash(F.col("event_id"), KMV_A, KMV_B).alias("h"))
+    return hashed.select(
+        *keys,
+        (F.col("h") % HLL_M).alias("reg"),
+        _hll_rho_col(F.expr(f"h div {HLL_M}")).alias("rho"),
+    )
+
+
+def _hll_estimate(regs: DataFrame, name: str) -> DataFrame:
+    """(event_type, name): the estimate alpha·m² / Σ_j 2^-M_j folded from
+    the present (event_type, reg, mj) registers — each absent register
+    adds 2^0."""
+    folded = regs.groupBy("event_type").agg(
+        F.count(F.lit(1)).alias("n_present"),
+        F.sum(_hll_pow2neg(F.col("mj"))).alias("z_present"),
+    )
+    return folded.select(
+        "event_type",
+        F.round(
+            F.lit(float(HLL_ALPHA_M2))
+            / ((F.lit(HLL_M) - F.col("n_present")).cast("double") + F.col("z_present")),
+            4,
+        ).alias(name),
+    )
+
+
 def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     """HyperLogLog distinct event_ids per event_type NEXT TO the exact
     count — the measured-error discipline of sketch_distinct_error /
@@ -541,28 +551,9 @@ def sketch_hll_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-group estimate folds the m registers — O(m) state per group at
     any N, merge = max() per register (mergeable by construction)."""
     ev = _t(spark, sf_dir, "events")
-    h = ((F.col("event_id") % KMV_P) * KMV_A + KMV_B) % KMV_P
-    hashed = track_persist(
-        ev.select("event_type", "event_id", h.alias("h")).select(
-            "event_type",
-            "event_id",
-            (F.col("h") % HLL_M).alias("reg"),
-            _hll_rho_col(F.expr(f"h div {HLL_M}")).alias("rho"),
-        )
-    )
+    hashed = track_persist(_hll_registers(ev, "event_type", "event_id"))
     regs = hashed.groupBy("event_type", "reg").agg(F.max("rho").alias("mj"))
-    folded = regs.groupBy("event_type").agg(
-        F.count(F.lit(1)).alias("n_present"),
-        F.sum(_hll_pow2neg(F.col("mj"))).alias("z_present"),
-    )
-    est = folded.select(
-        "event_type",
-        F.round(
-            F.lit(float(HLL_ALPHA_M2))
-            / ((F.lit(HLL_M) - F.col("n_present")).cast("double") + F.col("z_present")),
-            4,
-        ).alias("hll_estimate"),
-    )
+    est = _hll_estimate(regs, "hll_estimate")
     exact = hashed.groupBy("event_type").agg(
         F.countDistinct("event_id").alias("exact_distinct")
     )
@@ -747,36 +738,8 @@ def sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≤ m·|days|·|types| cells), one groupBy(type, reg) max-merge, and
     the same bounded folds as sketch_hll_distinct — partials combine in
     O(m) per group without re-reading data."""
-    ev = _t(spark, sf_dir, "events")
-    h = ((F.col("event_id") % KMV_P) * KMV_A + KMV_B) % KMV_P
-    hashed = track_persist(
-        ev.select(
-            "event_type", F.to_date("ts").alias("day"), h.alias("h")
-        ).select(
-            "event_type",
-            "day",
-            (F.col("h") % HLL_M).alias("reg"),
-            _hll_rho_col(F.expr(f"h div {HLL_M}")).alias("rho"),
-        )
-    )
-
-    def _est(regs: DataFrame, name: str) -> DataFrame:
-        folded = regs.groupBy("event_type").agg(
-            F.count(F.lit(1)).alias("n_present"),
-            F.sum(_hll_pow2neg(F.col("mj"))).alias("z_present"),
-        )
-        return folded.select(
-            "event_type",
-            F.round(
-                F.lit(float(HLL_ALPHA_M2))
-                / (
-                    (F.lit(HLL_M) - F.col("n_present")).cast("double")
-                    + F.col("z_present")
-                ),
-                4,
-            ).alias(name),
-        )
-
+    ev = _t(spark, sf_dir, "events").withColumn("day", F.to_date("ts"))
+    hashed = track_persist(_hll_registers(ev, "event_type", "day"))
     daily = hashed.groupBy("event_type", "day", "reg").agg(
         F.max("rho").alias("mj")
     )
@@ -786,8 +749,8 @@ def sketch_hll_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("day").alias("n_days")
     )
     return (
-        nd.join(_est(direct, "hll_direct"), "event_type")
-        .join(_est(merged, "hll_merged"), "event_type")
+        nd.join(_hll_estimate(direct, "hll_direct"), "event_type")
+        .join(_hll_estimate(merged, "hll_merged"), "event_type")
         .select(
             "event_type",
             F.col("n_days").cast("bigint").alias("n_days"),
@@ -817,11 +780,6 @@ BLOOM_M = 8192   # bits PER HASH PLANE (the partitioned-bloom variant:
 BLOOM_K = 3      # hash planes (reuses the CMS affine family)
 
 
-def _bloom_pos(key: "F.Column", d: int) -> "F.Column":
-    a, b = CMS_AB[d]
-    return (((key % CMS_P) * F.lit(a) + F.lit(b)) % CMS_P) % BLOOM_M
-
-
 def sketch_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bloom semi-join gauge: lineitem rows probed against the bloom
     image of the 1-URGENT orderkey set, reported as the exact 2×2
@@ -845,25 +803,16 @@ def sketch_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderkey").alias("okey")
         )
     )
+    pos = _hash_positions(F.col("okey"), BLOOM_K, BLOOM_M).alias("d", "pos")
     bits = (
-        members.select(
-            F.posexplode(
-                F.array(*[_bloom_pos(F.col("okey"), d) for d in range(BLOOM_K)])
-            ).alias("d", "pos")
-        )
+        members.select(pos)
         .distinct()
         .withColumn("hit", F.lit(1))
     )
     probe = li.groupBy(F.col("l_orderkey").alias("okey")).agg(
         F.count(F.lit(1)).alias("n_rows")
     )
-    probed = probe.select(
-        "okey",
-        "n_rows",
-        F.posexplode(
-            F.array(*[_bloom_pos(F.col("okey"), d) for d in range(BLOOM_K)])
-        ).alias("d", "pos"),
-    )
+    probed = probe.select("okey", "n_rows", pos)
     passed = (
         probed.join(F.broadcast(bits), ["d", "pos"], "left")
         .groupBy("okey", "n_rows")

@@ -44,9 +44,12 @@ _TURN_COLS = (
 # ---------------------------------------------------------------------------
 # shared SQL fragments (DuckDB dialect)
 
+# text.poly_hash's fold from 0: its first step (0·31 + c) % P is the
+# first codepoint c itself (c < P), so the reduce starts there.  Unseeded,
+# NULL text hashes to NULL as in Spark (a seed would make it 0), and
+# string_split never returns an empty list ('' splits to [''], hash 0).
 _POLY = (
-    "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-    "[CAST(ascii(x) AS BIGINT) for x in string_split({col}, '')]), "
+    "list_reduce([CAST(ascii(x) AS BIGINT) for x in string_split({col}, '')], "
     "(acc, x) -> (acc * 31 + x) % 1000000007)"
 )
 
@@ -2479,7 +2482,7 @@ approx3 AS (SELECT query_id, cand_id FROM {_pq_top3}),
 
     # ---- IVF-PQ: the composed index (Lloyd cells gate the candidates,
     # PQ codes score them, exact cosine re-ranks the shortlist) ----
-    # the coarse probe (similarity._probe_pairs): each query's NPROBE_L8
+    # the coarse probe (similarity._ivfpq_adc): each query's NPROBE_L8
     # nearest Lloyd cells, paired with their members
     _ivfpq_probe = f"""qs AS (
   SELECT query_id, cent_id,
@@ -3111,8 +3114,8 @@ SELECT doc_a, doc_b, lev FROM p WHERE lev <= {FUZZY_MAX_LEV}
     # levenshtein() counts UTF-8 bytes, so the oracle re-implements
     # CODEPOINT Wagner-Fischer edit distance in pure SQL: an outer
     # list_reduce over the first key's codepoints whose accumulator is
-    # the DP ROW (a BIGINT[] seeded by list_prepend — the _POLY fold
-    # discipline with a LIST accumulator), and an inner list_reduce over
+    # the DP ROW (a BIGINT[] seeded by list_prepend — a left fold like
+    # _POLY's with a LIST accumulator), and an inner list_reduce over
     # the second key's positions building the next row sequentially.
     # Verified equal to Spark's levenshtein on CJK/accented/empty keys.
     def _cp_arr(col: str) -> str:
@@ -3339,7 +3342,7 @@ FROM c
     # √T_d is the gate-proven CEIL(SQRT(CAST AS DOUBLE)) formula.
     from ..functions.text import MIX_BUDGET_DEN
 
-    # shared √-temperature quota CTEs (mirrors functions/text._domain_quotas)
+    # shared √-temperature quota CTEs (mirrors functions/text._quota_prefix)
     _quota_ctes = f"""tot AS MATERIALIZED (
   SELECT domain, SUM(n_tok) AS t_dom,
          CAST(CEIL(SQRT(CAST(SUM(n_tok) AS DOUBLE))) AS BIGINT) AS w_dom

@@ -7,7 +7,7 @@ import numpy as np
 import pytest
 
 from rapidocr_spark.config import DEFAULT_CONFIG
-from rapidocr_spark.kernels import codec, det, font, render
+from rapidocr_spark.kernels import codec, det, font, geometry, render
 from rapidocr_spark.kernels.cls import classify_crop, rotate180
 from rapidocr_spark.kernels.ctc import ctc_greedy_decode
 from rapidocr_spark.kernels.rec import recognize_crop
@@ -108,10 +108,12 @@ def test_max_candidates_cap():
 
 
 def test_unclip_distance_formula():
-    x0, y0, x1, y1 = det.unclip_rect(0, 0, 99, 9, 1.6)
+    # axis-aligned 100×10 quad: every side moves out by d = area·ratio/perimeter
+    box = np.array([[0, 0], [100, 0], [100, 10], [0, 10]], np.float32)
     w, h = 100.0, 10.0
     d = w * h * 1.6 / (2 * (w + h))
-    assert x0 == -d and y0 == -d and x1 == 99 + d and y1 == 9 + d
+    want = np.array([[-d, -d], [100 + d, -d], [100 + d, 10 + d], [-d, 10 + d]], np.float32)
+    assert np.array_equal(geometry.unclip_quad(box, 1.6), want)
 
 
 def test_order_points_clockwise():

@@ -73,3 +73,33 @@ def test_parity(name, spark, duck):
 def test_rows_only_queries_run(name, spark):
     df = QUERIES[name](spark, SF_DIR)
     assert df.count() >= 0 and len(df.schema.fields) > 0
+
+
+@pytest.mark.parametrize("name", ["doc_quality_score", "doc_fingerprint"])
+def test_empty_and_null_text_parity(name, spark, tmp_path):
+    """The sf0.001 documents plus one empty-text and one NULL-text row:
+    Spark and the DuckDB oracle agree on both (an empty text's ratios are
+    NULL in both engines, and a NULL text hashes to NULL)."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    docs = pq.read_table("/root/testdata/sf0.001/documents.parquet")
+    top = max(docs.column("doc_id").to_pylist())
+    extra = pa.table(
+        {
+            "doc_id": [top + 1, top + 2],
+            "text": ["", None],
+            "lang": ["en", "en"],
+            "source": ["web", "web"],
+            "n_chars": [0, None],
+        },
+        schema=docs.schema,
+    )
+    pq.write_table(pa.concat_tables([docs, extra]), tmp_path / "documents.parquet")
+    con = duckdb.connect()
+    con.execute(
+        f"CREATE VIEW documents AS SELECT * FROM read_parquet('{tmp_path}/documents.parquet')"
+    )
+    spark_rows = _rows(QUERIES[name](spark, str(tmp_path)).toPandas())
+    duck_rows = _rows(con.execute(ORACLES[name]).fetch_df())
+    assert spark_rows == duck_rows

@@ -111,6 +111,98 @@ def test_doc_winnow_reads_the_one_arrow_kernel(spark, name):
     assert "slice(" not in plan, plan
 
 
+def test_ivf_topk_is_the_probe2_builder_at_nprobe_1(spark):
+    """ann_ivf_topk is similarity._ivf_search at nprobe=1 over the same
+    stride-seeded index as ann_ivf_topk_probe2: the two optimized plans
+    are equal once expression, lambda and plan ids are normalised and
+    the probe bound 2 reads 1 — one IVF builder, not a home-cell copy."""
+    import re
+
+    from rapidocr_spark.plans.shell import queries
+
+    def plan(name):
+        df = queries()[name](spark, SF_DIR)
+        s = df._jdf.queryExecution().optimizedPlan().toString()
+        s = re.sub(r"#\d+", "#", s)
+        s = re.sub(r"\b([xy])_\d+#", r"\1#", s)
+        return re.sub(r"plan_id=\d+", "plan_id=", s)
+
+    probe2 = plan("ann_ivf_topk_probe2")
+    for bound in ("(rk# <= {})", "row_number(), {}"):
+        assert probe2.count(bound.format(2)) == 1, probe2
+        probe2 = probe2.replace(bound.format(2), bound.format(1))
+    assert plan("ann_ivf_topk") == probe2
+
+
+def _regexps_above_generate(node) -> list[str]:
+    """Regexp expressions in the Project/Filter chain directly above any
+    Generate of the plan tree (logical or physical, looking through
+    cached relations and the AQE wrapper) that read only the Generate's
+    pass-through columns: each runs once per generated row, where one
+    projection below the Generate would run it once per input row."""
+    found = []
+
+    def exprs(n):
+        name = n.getClass().getSimpleName()
+        if name.startswith("Project"):
+            lst = n.projectList()
+            return [lst.apply(i) for i in range(lst.size())]
+        if name.startswith("Filter"):
+            return [n.condition()]
+        return None
+
+    def regexps(e):
+        out = [e] if e.getClass().getSimpleName().startswith(("RegExp", "RLike")) else []
+        kids = e.children()
+        for i in range(kids.size()):
+            out += regexps(kids.apply(i))
+        return out
+
+    def walk(n, above):
+        name = n.getClass().getSimpleName()
+        if name in ("Generate", "GenerateExec"):
+            gen_out = n.generatorOutput()
+            made = {gen_out.apply(i).exprId().id() for i in range(gen_out.size())}
+            for parent in above:
+                for e in exprs(parent):
+                    for r in regexps(e):
+                        refs = r.references().toSeq()
+                        ids = {refs.apply(i).exprId().id() for i in range(refs.size())}
+                        if ids and not ids & made:
+                            found.append(r.toString())
+        if name == "InMemoryRelation":
+            walk(n.cachedPlan(), [])
+        elif name == "InMemoryTableScanExec":
+            walk(n.relation().cachedPlan(), [])
+        elif name == "AdaptiveSparkPlanExec":
+            walk(n.inputPlan(), [])
+        kids = n.children()
+        # the chain above a child: this node and its own chain while it
+        # is a Project/Filter (a codegen wrapper passes the chain through)
+        chain = [n] + above if exprs(n) is not None else (
+            above if name in ("WholeStageCodegenExec", "InputAdapter") else []
+        )
+        for i in range(kids.size()):
+            walk(kids.apply(i), chain)
+
+    walk(node, [])
+    return found
+
+
+@pytest.mark.parametrize(
+    "name", ["doc_nb_quality_score", "doc_nb_quality_confusion", "doc_sample_quality"]
+)
+def test_nb_label_runs_below_the_token_explode(spark, name):
+    """The NB training label (six stopword regex counts and the digit and
+    punctuation counts of the quality score) is computed once per
+    document: no regexp that reads only the pass-through columns of a
+    token Generate sits in the Project/Filter chain above it."""
+    from rapidocr_spark.plans.shell import queries
+
+    df = queries()[name](spark, SF_DIR)
+    assert _regexps_above_generate(df._jdf.queryExecution().optimizedPlan()) == []
+
+
 def test_extraction_single_python_stage_per_route(spark):
     """The fused det→cls→rec chain is exactly ONE MapInPandas operator (no
     shuffle between stages, J1-J3 zips never cross partitions); the plain:
